@@ -12,7 +12,8 @@ Block layout (one row in the ``postings`` table per block):
   tfs     : LEB128 varint
   dls     : LEB128 varint (per-doc length, denormalized so scoring never
             needs a doc_id join at query time)
-  weights : raw little-endian float32 (doc boost, fafnir's ``weight`` field,
+  weights : raw little-endian float64, empty when every weight is 1.0
+            (doc boost, fafnir's ``weight`` field,
             /root/reference src/sources/tripadvisor/pois/convert.rs:161-168)
 """
 
@@ -40,10 +41,13 @@ def _varint_byte_offsets(v: np.ndarray) -> np.ndarray:
 def varint_encode(values: np.ndarray) -> bytes:
     """LEB128-encode a uint64 array. Vectorized: O(10) numpy passes."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
+    if len(v) == 0:
         return b""
-    offs = _varint_byte_offsets(v)
+    return _varint_pack(v, _varint_byte_offsets(v))
+
+
+def _varint_pack(v: np.ndarray, offs: np.ndarray) -> bytes:
+    """LEB128 bytes of a non-empty uint64 array given its byte offsets."""
     nb = np.diff(offs)
     out = np.zeros(offs[-1], dtype=np.uint8)
     for j in range(10):  # 64 bits / 7 -> at most 10 bytes
@@ -67,8 +71,8 @@ def varint_encode_segments(values: np.ndarray, seg_lo: np.ndarray,
     v = np.ascontiguousarray(values, dtype=np.uint64)
     if len(v) == 0:
         return [b""] * len(seg_lo)
-    buf = varint_encode(v)
     offs = _varint_byte_offsets(v)
+    buf = _varint_pack(v, offs)
     return [buf[offs[lo]:offs[hi]] for lo, hi in zip(seg_lo, seg_hi)]
 
 
@@ -104,14 +108,6 @@ def delta_decode(buf: bytes) -> np.ndarray:
     if len(d) == 0:
         return d
     return np.cumsum(d, dtype=np.uint64)
-
-
-def f32_encode(values: np.ndarray) -> bytes:
-    return np.ascontiguousarray(values, dtype="<f4").tobytes()
-
-
-def f32_decode(buf: bytes) -> np.ndarray:
-    return np.frombuffer(buf, dtype="<f4").astype(np.float64)
 
 
 def positions_encode(pos_lists: list[np.ndarray]) -> bytes:

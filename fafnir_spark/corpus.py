@@ -19,7 +19,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 CORPUS_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
@@ -81,9 +80,3 @@ def synth_corpus(
 
     return base.mapInPandas(gen, schema=CORPUS_SCHEMA)
 
-
-def with_sha256(df: DataFrame) -> DataFrame:
-    """Content sha256 — the per-row invariant enforced vs the source table
-    (BASELINE.json input_hint; fafnir's analog is exact-field golden checks,
-    /root/reference tests/openmaptiles2mimir/mod.rs:186-190)."""
-    return df.withColumn("content_sha256", F.sha2(F.col("content"), 256))

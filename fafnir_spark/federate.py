@@ -28,18 +28,21 @@ bulk mass-delete tables are unioned with the idx tag and cogrouped on
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .catalog import Catalog
 from .wand import (
     RESULT_SCHEMA,
-    _load_bulk_df,
+    _bm25_idf,
+    _bulk_side,
+    _dict_rows,
     _load_tombstones,
     _part_scorer,
+    _per_shard,
+    _postings,
+    _rank_merge,
+    _snapshot_stats,
     _Tombstones,
 )
 
@@ -79,79 +82,31 @@ def search_federated(
     corpora."""
     cats = [Catalog(r) for r in index_roots]
     manifests = [c.read_manifest() for c in cats]
-    stats_list = [
-        (m.get("meta") or {}).get("stats") or c.read_json("stats")
-        for c, m in zip(cats, manifests)
-    ]
-    gstats = _merged_stats(stats_list)
+    gstats = _merged_stats([_snapshot_stats(c, m) for c, m in zip(cats, manifests)])
 
     all_terms = sorted({t for ts in queries.values() for t in ts})
     gdf: dict[str, int] = {}
     for c, m in zip(cats, manifests):
-        drows = (
-            c.read_dictionary(spark, snapshot=m)
-            .filter(F.col("term").isin(all_terms))
-            .collect()
-        )
-        for r in drows:
+        for r in _dict_rows(spark, c, m, all_terms):
             gdf[r["term"]] = gdf.get(r["term"], 0) + int(r["df"])
-    n = gstats["n_docs"]
-    idfs = {
-        t: math.log(1.0 + (n - df + 0.5) / (df + 0.5)) for t, df in gdf.items()
-    }
+    idfs = {t: _bm25_idf(gstats["n_docs"], df) for t, df in gdf.items()}
     present = [t for t in all_terms if t in idfs]
 
-    posting_parts, bulk_parts = [], []
+    postings, bulk = None, None
     merged_ids: list[int] = []
     merged_keeps: list[str | None] = []
     for i, (c, m) in enumerate(zip(cats, manifests)):
-        p = (
-            c.read_table(spark, "postings", snapshot=m)
-            .filter(F.col("term").isin(present))
-            .withColumn("idx", F.lit(i))
-        )
-        posting_parts.append(p)
-        ts = _load_tombstones(spark, c, m, include_bulk=False)
-        if ts is not None:
-            merged_ids.extend(int(x) for x in ts.ids)
-            merged_keeps.extend(ts.keeps)
-        b = _load_bulk_df(spark, c, m)
+        p = _postings(spark, c, m, present).withColumn("idx", F.lit(i))
+        postings = p if postings is None else postings.unionByName(p)
+        ts = _load_tombstones(spark, c, m)
+        merged_ids.extend(int(x) for x in ts.ids)
+        merged_keeps.extend(ts.keeps)
+        b = _bulk_side(spark, c, m)
         if b is not None:
-            np_i = stats_list[i]["n_parts"]
-            bulk_parts.append(
-                b.withColumn("idx", F.lit(i)).withColumn(
-                    "doc_part", F.pmod(F.col("doc_id"), F.lit(np_i)).cast("int")
-                )
-            )
+            b = b.withColumn("idx", F.lit(i))
+            bulk = b if bulk is None else bulk.unionByName(b)
 
-    postings = posting_parts[0]
-    for p in posting_parts[1:]:
-        postings = postings.unionByName(p)
-    excluded = _Tombstones(merged_ids, merged_keeps) if merged_ids else None
-
-    if bulk_parts:
-        bulk = bulk_parts[0]
-        for b in bulk_parts[1:]:
-            bulk = bulk.unionByName(b)
-        per_part = (
-            postings.groupBy("idx", "doc_part")
-            .cogroup(bulk.groupBy("idx", "doc_part"))
-            .applyInPandas(
-                _part_scorer(queries, idfs, gstats, k, algo, excluded,
-                             with_bulk=True),
-                schema=RESULT_SCHEMA,
-            )
-        )
-    else:
-        per_part = postings.groupBy("idx", "doc_part").applyInPandas(
-            _part_scorer(queries, idfs, gstats, k, algo, excluded),
-            schema=RESULT_SCHEMA,
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), score_decimals))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    excluded = _Tombstones(merged_ids, merged_keeps)
+    per_part = _per_shard(postings, _part_scorer(queries, idfs, gstats, k, algo, excluded),
+                          RESULT_SCHEMA, side=bulk, keys=("idx", "doc_part"))
+    return _rank_merge(per_part, k, decimals=score_decimals)

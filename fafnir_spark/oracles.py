@@ -181,15 +181,6 @@ ORDER BY term
 """
 
 
-def doc_stats_sql() -> str:
-    return f"""
-WITH {_TF_CTES}
-SELECT dl.doc_id, CAST(dl.dl AS BIGINT) AS dl, stats.n_docs, stats.avgdl
-FROM dl CROSS JOIN stats
-ORDER BY dl.doc_id
-"""
-
-
 def prefix_bm25_sql(prefix: str, k: int = 10) -> str:
     """`prefix*` → expanded-term BM25 (scoring_boolean rewrite)."""
     p = prefix.replace("'", "''")

@@ -539,23 +539,6 @@ def match_bool_prefix(
     return _topk_ranked(out, k)
 
 
-def shingle_text_col(text_col: str = "text") -> F.Column:
-    """The 2-gram shingle subfield of an analyzed text field (ES
-    search_as_you_type `._2gram`): adjacent token pairs joined with '_'
-    (a joiner the whitespace tokenizer never splits), re-joined with ' '
-    so the standard tokenizer/tf machinery works over it untouched.
-    Row-local expression; the DuckDB twin is toks[i] || '_' || toks[i+1]
-    over unnest(range(1, len(toks)))."""
-    toks = tokens_expr(text_col)
-    n = F.size(toks)
-
-    def pair(a: F.Column, b: F.Column) -> F.Column:
-        return F.concat(a, F.lit("_"), b)
-
-    grams = F.zip_with(F.slice(toks, 1, n - 1), F.slice(toks, 2, n - 1), pair)
-    return F.array_join(grams, " ")
-
-
 def search_as_you_type(
     docs: DataFrame,
     terms: list[str],

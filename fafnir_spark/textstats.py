@@ -45,10 +45,6 @@ LANG_MARKERS = {
 }
 
 
-def token_count_col(text: Column | str = "text") -> Column:
-    return F.size(tokens_expr(text))
-
-
 def shingles_expr(text: Column | str, n: int = 3) -> Column:
     """Array of n-token shingles joined by '\\x1f' (empty if < n tokens).
 

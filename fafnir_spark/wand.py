@@ -26,6 +26,19 @@ when the next bound is strictly below the current kth score — Block-Max WAND
 there is no per-document Python loop. Pruning never changes results; tests
 assert bmw == exhaustive on every fixture (the analog of fafnir's bbox test
 proving filters don't corrupt results, tests/openmaptiles2mimir/mod.rs:371-405).
+
+Per-shard kernel: every indexed entry point (and federate.py) runs the same
+steps through one helper each. ``_open`` reads a snapshot's manifest and
+stats, ``_idfs``/``_bm25_idf`` turn dictionary dfs into idfs, and
+``_per_shard`` is the scan itself: it groups the term-pruned postings by
+doc_part and calls ``evaluate(pdf, side_pdf)`` once per shard, cogrouping a
+side relation (``_bulk_side``'s bulk tombstones, phrase matches, doc values)
+when there is one. Inside a shard, ``_shard_blocks`` turns posting rows into
+lazily decoded ``_Block``s, ``_Tombstones`` (with ``union`` for a shard's
+bulk slice or must_not ids) scopes exclusion per segment via
+``_live_mask``, and ``_exhaustive`` (or ``score_bmw``) scores them. Results
+merge through ``_rank_merge`` (per-qid window) or ``_take_top`` (global
+orderBy().limit(k)).
 """
 
 from __future__ import annotations
@@ -83,7 +96,7 @@ class _Tombstones:
 
     def __init__(self, ids, keeps):
         self.ids = np.asarray(ids, dtype=np.int64)
-        self.keeps = list(keeps)
+        self.keeps = np.asarray(list(keeps), dtype=object)
         self._cache: dict[str, np.ndarray] = {}
 
     def __len__(self) -> int:
@@ -92,28 +105,91 @@ class _Tombstones:
     def excluded_for(self, seg: str) -> np.ndarray:
         seg = seg or ""
         if seg not in self._cache:
-            mask = np.array([k != seg for k in self.keeps], dtype=bool)
-            self._cache[seg] = np.sort(self.ids[mask])
+            self._cache[seg] = np.sort(self.ids[self.keeps != seg])
         return self._cache[seg]
+
+    def union(self, dead) -> _Tombstones:
+        """These tombstones plus ``dead`` ids, dead in every segment (a
+        shard's slice of the bulk table, must_not or negated-phrase
+        matches)."""
+        dead = np.asarray(dead, dtype=np.int64)
+        return _Tombstones(np.concatenate([self.ids, dead]),
+                           [*self.keeps, *[None] * len(dead)])
 
 
 def _exc_for(excluded, seg: str):
-    """Per-segment exclusion array from any form: a flat ndarray, or any
-    seg-scoped provider exposing excluded_for (_Tombstones, _UnionExc)."""
-    if excluded is None:
-        return None
-    if hasattr(excluded, "excluded_for"):
+    """Per-segment exclusion array from either form: a flat sorted ndarray
+    or a seg-scoped _Tombstones."""
+    if isinstance(excluded, _Tombstones):
         return excluded.excluded_for(seg)
     return excluded
+
+
+def _live_mask(ids: np.ndarray, excluded, seg: str) -> np.ndarray | None:
+    """Mask of the ``ids`` (one block of segment ``seg``) that survive
+    ``excluded``; None when nothing in the segment is excluded."""
+    exc = _exc_for(excluded, seg)
+    if exc is None or not len(exc):
+        return None
+    return ~np.isin(ids, exc)
+
+
+def _with_side(excluded: _Tombstones, side: pd.DataFrame | None) -> _Tombstones:
+    """``excluded`` plus a shard's cogrouped bulk-tombstone slice."""
+    if side is None or not len(side):
+        return excluded
+    return excluded.union(side["doc_id"])
 
 
 BULK_TOMBSTONE_TABLE = "bulk_tombstones"
 _BULK_CLOSURE_LIMIT = 1_000_000
 
 
+def _snapshot_stats(cat: Catalog, manifest: dict) -> dict:
+    """Corpus stats of a snapshot (the manifest copy, or the stats file of
+    indexes published before stats moved into the manifest)."""
+    return (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+
+
+def _open(index_root: str, snapshot_id: str | None):
+    """(catalog, manifest, stats) of one published snapshot."""
+    cat = Catalog(index_root)
+    manifest = cat.manifest_at(snapshot_id)
+    return cat, manifest, _snapshot_stats(cat, manifest)
+
+
+def _bm25_idf(n_docs, df) -> float:
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def _dict_rows(spark: SparkSession, cat: Catalog, manifest: dict, terms: list[str]):
+    """Dictionary rows (term, df, cf, ...) of ``terms`` — one point lookup
+    on the term-sorted dictionary."""
+    return cat.read_dictionary(spark, snapshot=manifest).filter(
+        F.col("term").isin(terms)).collect()
+
+
+def _idfs(spark: SparkSession, cat: Catalog, manifest: dict, terms: list[str],
+          n_docs) -> dict[str, float]:
+    return {r["term"]: _bm25_idf(n_docs, r["df"])
+            for r in _dict_rows(spark, cat, manifest, terms)}
+
+
+def _postings(spark: SparkSession, cat: Catalog, manifest: dict, terms: list[str]) -> DataFrame:
+    """The snapshot's posting blocks of ``terms`` (the term predicate
+    reaches the term-sorted parquet as a pushed filter)."""
+    return cat.read_table(spark, "postings", snapshot=manifest).filter(
+        F.col("term").isin(terms))
+
+
+def _with_doc_part(df: DataFrame, n_parts: int) -> DataFrame:
+    """Tags doc-keyed rows with the postings' shard key."""
+    return df.withColumn("doc_part", F.pmod(F.col("doc_id"), F.lit(n_parts)).cast("int"))
+
+
 def _load_bulk_df(spark: SparkSession, cat: Catalog, manifest: dict):
     """DataFrame(doc_id) of mass-delete tombstones, or None. Never
-    materialized on the driver — the scale paths (run_queries cogroup,
+    materialized on the driver — the scale paths (the per-shard cogroup,
     live_doc_map anti-join, compaction anti-join) consume it as a
     relation."""
     if BULK_TOMBSTONE_TABLE not in manifest["tables"]:
@@ -121,28 +197,28 @@ def _load_bulk_df(spark: SparkSession, cat: Catalog, manifest: dict):
     return cat.read_table(spark, BULK_TOMBSTONE_TABLE, snapshot=manifest).select("doc_id")
 
 
-def _load_tombstones(spark: SparkSession, cat: Catalog, manifest: dict,
-                     include_bulk: bool = True):
-    """_Tombstones | None from the snapshot's tombstone table.
+def _bulk_side(spark: SparkSession, cat: Catalog, manifest: dict):
+    """The bulk-tombstone table keyed by doc_part (the cogroup side of a
+    per-shard scan), or None."""
+    bulk = _load_bulk_df(spark, cat, manifest)
+    if bulk is None:
+        return None
+    return _with_doc_part(bulk, _snapshot_stats(cat, manifest)["n_parts"])
 
-    ``include_bulk``: also fold in the bulk-delete table (delete_docs_bulk)
-    — correct up to _BULK_CLOSURE_LIMIT ids, beyond which the fold raises
-    loudly. NO production query path uses this any more: every indexed path
-    (run_queries, phrase_search, phrase_bm25, bool_search,
-    search_text_indexed, facet_counts_indexed, Searcher) consumes the bulk
-    table relationally — cogrouped on doc_part or anti-joined via
-    live_doc_map — so mass deletes never materialize on the driver. The
-    True path remains for ad-hoc callers and as the documented crossover
-    guard."""
+
+def _load_tombstones(spark: SparkSession, cat: Catalog, manifest: dict) -> _Tombstones:
+    """The snapshot's point tombstones (delete_docs / upsert churn) as a
+    _Tombstones, empty when there are none. Bulk mass-deletes never come
+    through here: every path consumes that table as a relation (cogrouped
+    on doc_part, or anti-joined via live_doc_map). Point tombstones get a
+    closure envelope instead — limit+raise, never an unbounded driver
+    collect. Compaction drains the table, so the envelope also acts as a
+    "you forgot maybe_compact" tripwire."""
     rows = []
     keeps = []
     if "tombstones" in manifest["tables"]:
         df = cat.read_table(spark, "tombstones", snapshot=manifest)
         has_keep = "keep_seg" in df.columns
-        # point tombstones (upsert/delete churn between compactions) get
-        # the same closure envelope as bulk: limit+raise, never an
-        # unbounded driver collect. Compaction drains the table, so the
-        # envelope also acts as a "you forgot maybe_compact" tripwire.
         trows = df.limit(_BULK_CLOSURE_LIMIT + 1).collect()
         if len(trows) > _BULK_CLOSURE_LIMIT:
             raise ValueError(
@@ -152,21 +228,87 @@ def _load_tombstones(spark: SparkSession, cat: Catalog, manifest: dict,
             )
         rows.extend(int(r["doc_id"]) for r in trows)
         keeps.extend((r["keep_seg"] if has_keep else None) for r in trows)
-    if include_bulk:
-        bulk = _load_bulk_df(spark, cat, manifest)
-        if bulk is not None:
-            brows = bulk.limit(_BULK_CLOSURE_LIMIT + 1).collect()
-            if len(brows) > _BULK_CLOSURE_LIMIT:
-                raise ValueError(
-                    f"bulk tombstone set exceeds the closure envelope "
-                    f"({_BULK_CLOSURE_LIMIT}); run compact_with_tombstones "
-                    "first, or query via run_queries (cogrouped exclusion)"
-                )
-            rows.extend(int(r["doc_id"]) for r in brows)
-            keeps.extend(None for _ in brows)
-    if not rows:
-        return None
     return _Tombstones(rows, keeps)
+
+
+def _shard_blocks(pdf: pd.DataFrame) -> dict[str, list[_Block]]:
+    """One shard's posting rows as lazily decoded blocks, by term."""
+    by_term: dict[str, list[_Block]] = {}
+    for r in pdf.itertuples(index=False):
+        by_term.setdefault(r.term, []).append(
+            _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
+                   r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
+        )
+    return by_term
+
+
+def _term_ids(blocks: list[_Block], excluded) -> np.ndarray:
+    """Sorted unique live doc_ids of one term's blocks."""
+    arrs = []
+    for blk in blocks:
+        ids = blk.decode()[0]
+        keep = _live_mask(ids, excluded, blk.seg)
+        arrs.append(ids if keep is None else ids[keep])
+    if not arrs:
+        return np.empty(0, dtype=np.int64)
+    return np.unique(np.concatenate(arrs))
+
+
+def _per_shard(postings: DataFrame, evaluate, schema: str,
+               side: DataFrame | None = None, keys=("doc_part",)) -> DataFrame:
+    """The per-shard scan every indexed query runs: group the term-pruned
+    postings by shard and call ``evaluate(pdf, side_pdf)`` once per shard.
+    With a ``side`` relation (bulk tombstones, phrase matches, doc values,
+    the live doc set) the shard also receives its own slice of it through
+    a cogroup, so that relation never reaches the driver; without one,
+    ``side_pdf`` is None. ``evaluate`` must close over plain data only."""
+    grouped = postings.groupBy(*keys)
+    if side is None:
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            return evaluate(pdf, None)
+
+        return grouped.applyInPandas(fn, schema=schema)
+
+    def cofn(pdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
+        return evaluate(pdf, sdf)
+
+    return grouped.cogroup(side.groupBy(*keys)).applyInPandas(cofn, schema=schema)
+
+
+def _result_frame(parts: list[tuple[str, np.ndarray, np.ndarray]]) -> pd.DataFrame:
+    """RESULT_SCHEMA frame of per-query (qid, doc_ids, raw_scores) parts."""
+    if not parts:
+        return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
+            {"doc_id": np.int64, "raw_score": np.float64}
+        )
+    return pd.DataFrame({
+        "qid": [q for q, ids, _sc in parts for _ in range(len(ids))],
+        "doc_id": np.concatenate([ids for _, ids, _ in parts]),
+        "raw_score": np.concatenate([sc for _, _, sc in parts]),
+    })
+
+
+def _rank_merge(per_part: DataFrame, k: int, by=("qid",), decimals: int = 6) -> DataFrame:
+    """Coordinator merge of per-shard top-k rows: rank each ``by`` group on
+    (rounded score desc, doc_id asc) and keep k. (*by, rank, doc_id, score)."""
+    w = Window.partitionBy(*by).orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    return (
+        per_part.withColumn("score", F.round(F.col("raw_score"), decimals))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*by, "rank", "doc_id", "score")
+        .orderBy(*by, "rank")
+    )
+
+
+def _take_top(scored: DataFrame, k: int) -> DataFrame:
+    """Global top-k of (doc_id, score) rows: orderBy().limit(k)
+    (TakeOrderedAndProject), then the rank window over those k rows.
+    (rank, doc_id, score)."""
+    key = (F.col("score").desc(), F.col("doc_id").asc())
+    top = scored.orderBy(*key).limit(k)
+    return (top.withColumn("rank", F.row_number().over(Window.orderBy(*key)))
+            .select("rank", "doc_id", "score").orderBy("rank"))
 
 
 def _tfn(tf, dl, k1: float, b: float, avgdl: float):
@@ -193,6 +335,34 @@ def _topk_rows(doc_ids: np.ndarray, scores: np.ndarray, k: int):
     return doc_ids[order], scores[order]
 
 
+def _exhaustive(term_blocks, term_score, k: int, excluded=None,
+                included: np.ndarray | None = None):
+    """Decode → exclude → accumulate → per-shard top-k over every block of
+    ``term_blocks`` ((term, blocks) pairs; a repeated term counts twice).
+    A posting contributes ``term_score(term, tfs, dls) * weight``."""
+    ids_all, sc_all = [], []
+    for term, blocks in term_blocks:
+        for blk in blocks:
+            ids, tfs, dls, ws = blk.decode()
+            if included is not None:
+                keep = np.isin(ids, included)
+                if not keep.any():
+                    continue
+                ids, tfs, dls, ws = ids[keep], tfs[keep], dls[keep], ws[keep]
+            keep = _live_mask(ids, excluded, blk.seg)
+            if keep is not None:
+                ids, tfs, dls, ws = ids[keep], tfs[keep], dls[keep], ws[keep]
+            ids_all.append(ids)
+            sc_all.append(term_score(term, tfs, dls) * ws)
+    if not ids_all:
+        return np.empty(0, dtype=np.int64), np.empty(0)
+    ids = np.concatenate(ids_all)
+    sc = np.concatenate(sc_all)
+    uids, inv = np.unique(ids, return_inverse=True)
+    tot = np.bincount(inv, weights=sc)
+    return _topk_rows(uids, tot, k)
+
+
 def score_exhaustive(
     term_blocks: dict[str, list[_Block]],
     idfs: dict[str, float],
@@ -203,35 +373,18 @@ def score_exhaustive(
     excluded: np.ndarray | None = None,
     included: np.ndarray | None = None,
 ):
-    """Decode-everything vectorized scorer (the correctness baseline).
+    """Decode-everything vectorized BM25 scorer (the correctness baseline).
 
-    ``excluded``: sorted tombstoned doc_ids dropped before accumulation
-    (incremental.delete_docs semantics). ``included``: when given, ONLY
-    these doc_ids are scored (phrase-candidate restriction) — the filter
-    runs before accumulation so non-candidates cost one isin, not a score."""
-    ids_all, sc_all = [], []
-    for term, blocks in term_blocks.items():
-        idf = idfs[term]
-        for blk in blocks:
-            ids, tfs, dls, ws = blk.decode()
-            if included is not None:
-                keep = np.isin(ids, included)
-                if not keep.any():
-                    continue
-                ids, tfs, dls, ws = ids[keep], tfs[keep], dls[keep], ws[keep]
-            exc = _exc_for(excluded, blk.seg)
-            if exc is not None and len(exc):
-                keep = ~np.isin(ids, exc)
-                ids, tfs, dls, ws = ids[keep], tfs[keep], dls[keep], ws[keep]
-            ids_all.append(ids)
-            sc_all.append(idf * _tfn(tfs, dls, k1, b, avgdl) * ws)
-    if not ids_all:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-    ids = np.concatenate(ids_all)
-    sc = np.concatenate(sc_all)
-    uids, inv = np.unique(ids, return_inverse=True)
-    tot = np.bincount(inv, weights=sc)
-    return _topk_rows(uids, tot, k)
+    ``excluded``: sorted tombstoned doc_ids (or a _Tombstones) dropped
+    before accumulation (incremental.delete_docs semantics). ``included``:
+    when given, ONLY these doc_ids are scored (phrase-candidate
+    restriction) — the filter runs before accumulation so non-candidates
+    cost one isin, not a score."""
+
+    def bm25(term, tfs, dls):
+        return idfs[term] * _tfn(tfs, dls, k1, b, avgdl)
+
+    return _exhaustive(term_blocks.items(), bm25, k, excluded, included)
 
 
 def score_bmw(
@@ -453,63 +606,30 @@ def _part_scorer(
     stats: dict,
     k: int,
     algo: str,
-    excluded: np.ndarray | None = None,
-    with_bulk: bool = False,
+    excluded: _Tombstones,
 ):
-    """``with_bulk``: returns a COGROUP fn (postings, bulk-tombstone rows of
-    the same doc_part) — each shard receives only ITS deleted ids through
-    the shuffle, so a mass delete never touches the driver."""
+    """Per-shard BM25 top-k of every query (BMW or exhaustive). The side
+    slice, when cogrouped, is the shard's bulk-tombstone ids."""
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
     scorer = score_bmw if algo == "bmw" else score_exhaustive
 
-    def evaluate(pdf: pd.DataFrame, tdf: pd.DataFrame | None) -> pd.DataFrame:
-        exc = excluded
-        if tdf is not None and len(tdf):
-            exc = _UnionExc(excluded, tdf["doc_id"].to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
-        out_qid, out_doc, out_sc = [], [], []
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        exc = _with_side(excluded, side)
+        by_term = _shard_blocks(pdf)
+        parts = []
         for qid, terms in queries.items():
             tb = {t: by_term[t] for t in terms if t in by_term}
-            if not tb:
-                continue
-            ids, sc = scorer(tb, idfs, k, k1, b, avgdl, excluded=exc)
-            out_qid.extend([qid] * len(ids))
-            out_doc.append(ids)
-            out_sc.append(sc)
-        if not out_qid:
-            return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-                {"doc_id": np.int64, "raw_score": np.float64}
-            )
-        return pd.DataFrame(
-            {
-                "qid": out_qid,
-                "doc_id": np.concatenate(out_doc),
-                "raw_score": np.concatenate(out_sc),
-            }
-        )
+            if tb:
+                parts.append((qid, *scorer(tb, idfs, k, k1, b, avgdl, excluded=exc)))
+        return _result_frame(parts)
 
-    if not with_bulk:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return evaluate(pdf, None)
-
-        return fn
-
-    def cofn(pdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, tdf)
-
-    return cofn
+    return evaluate
 
 
 PHRASE_SCHEMA = "qid string, doc_id long"
 
 
-def _phrase_part_fn(phrases: dict[str, list[str]], excluded=None,
-                    with_bulk: bool = False, slop: int = 0):
+def _phrase_part_fn(phrases: dict[str, list[str]], excluded: _Tombstones, slop: int = 0):
     """Per-doc_part exact phrase matching over positional postings.
     With ``slop`` > 0 (2-term phrases only, enforced by the caller) the
     adjacency test relaxes to the ordered within-window contract of
@@ -521,29 +641,23 @@ def _phrase_part_fn(phrases: dict[str, list[str]], excluded=None,
 
     Tombstone exclusion is applied per BLOCK (seg-scoped): an upserted doc's
     old-segment positions are dropped while its keep_seg version survives,
-    so the merged per-term arrays never contain duplicate doc_ids.
-
-    ``with_bulk``: returns a COGROUP fn (postings, bulk-tombstone rows of
-    the same doc_part) — each shard receives only ITS mass-deleted ids
-    through the shuffle (the run_queries pattern, no driver envelope)."""
+    so the merged per-term arrays never contain duplicate doc_ids. The side
+    slice, when cogrouped, is the shard's bulk-tombstone ids."""
     from .codec import positions_decode
 
-    def run(pdf: pd.DataFrame, bulk_ids: np.ndarray | None) -> pd.DataFrame:
-        exc_all = excluded if bulk_ids is None else _UnionExc(excluded, bulk_ids)
+    def run(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        exc_all = _with_side(excluded, side)
         # decode per-term posting arrays (ids, tfs, positions) for the part
         per_term: dict[str, tuple] = {}
         for term, grp in pdf.groupby("term"):
             ids_l, pos_l = [], []
             for r in grp.sort_values(["block_id"]).itertuples(index=False):
                 ids = delta_decode(r.doc_ids).astype(np.int64)
-                tfs = varint_decode(r.tfs)
-                plists = positions_decode(r.positions, tfs)
-                exc = _exc_for(exc_all, getattr(r, "seg", "") or "")
-                if exc is not None and len(exc):
-                    keep = ~np.isin(ids, exc)
-                    if not keep.all():
-                        ids = ids[keep]
-                        plists = [p for p, k in zip(plists, keep) if k]
+                plists = positions_decode(r.positions, varint_decode(r.tfs))
+                keep = _live_mask(ids, exc_all, getattr(r, "seg", "") or "")
+                if keep is not None and not keep.all():
+                    ids = ids[keep]
+                    plists = [p for p, k in zip(plists, keep) if k]
                 ids_l.append(ids)
                 pos_l.extend(plists)
             ids = np.concatenate(ids_l)
@@ -605,17 +719,7 @@ def _phrase_part_fn(phrases: dict[str, list[str]], excluded=None,
                 out_doc.extend(int(d) for d in hits)
         return pd.DataFrame({"qid": out_qid, "doc_id": np.array(out_doc, dtype=np.int64)})
 
-    if with_bulk:
-        def cofn(pdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
-            ids = tdf["doc_id"].to_numpy(dtype=np.int64) if len(tdf) else None
-            return run(pdf, ids)
-
-        return cofn
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return run(pdf, None)
-
-    return fn
+    return run
 
 
 def _phrase_score_fn(
@@ -623,7 +727,7 @@ def _phrase_score_fn(
     idfs: dict[str, float],
     stats: dict,
     k: int,
-    excluded=None,
+    excluded: _Tombstones,
 ):
     """Cogrouped scorer: (postings of one doc_part) × (phrase matches of the
     same part) → BM25 scores of ONLY the matched docs, per-shard top-k.
@@ -634,37 +738,20 @@ def _phrase_score_fn(
     summed into the phrase score."""
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
 
-    def fn(pdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-            {"doc_id": np.int64, "raw_score": np.float64}
-        )
+    def evaluate(pdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf) or not len(mdf):
-            return empty
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
-        out_qid, out_doc, out_sc = [], [], []
+            return _result_frame([])
+        by_term = _shard_blocks(pdf)
+        parts = []
         for qid, terms in queries.items():
             inc = np.sort(mdf.loc[mdf["qid"] == qid, "doc_id"].to_numpy(dtype=np.int64))
             tb = {t: by_term[t] for t in terms if t in by_term}
-            if not len(inc) or not tb:
-                continue
-            ids, sc = score_exhaustive(
-                tb, idfs, k, k1, b, avgdl, included=inc, excluded=excluded
-            )
-            out_qid.extend([qid] * len(ids))
-            out_doc.append(ids)
-            out_sc.append(sc)
-        if not out_qid:
-            return empty
-        return pd.DataFrame(
-            {"qid": out_qid, "doc_id": np.concatenate(out_doc), "raw_score": np.concatenate(out_sc)}
-        )
+            if len(inc) and tb:
+                parts.append((qid, *score_exhaustive(
+                    tb, idfs, k, k1, b, avgdl, included=inc, excluded=excluded)))
+        return _result_frame(parts)
 
-    return fn
+    return evaluate
 
 
 def phrase_bm25(
@@ -682,37 +769,20 @@ def phrase_bm25(
     doc_part, so ONLY matched docs are ever scored (no score-everything
     pass) and per-shard top-k keeps the global merge at k rows per shard —
     a doc's whole score lives in one shard, so the merge is exact."""
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
-    matches = phrase_search(spark, index_root, phrases, snapshot_id).withColumn(
-        "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-    )
+    cat, manifest, stats = _open(index_root, snapshot_id)
+    matches = _with_doc_part(phrase_search(spark, index_root, phrases, snapshot_id),
+                             stats["n_parts"])
     all_terms = sorted({t for ts in phrases.values() for t in ts})
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    ).collect()
-    n_docs = stats["n_docs"]
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5)) for r in drows}
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin([t for t in all_terms if t in idfs])
-    )
+    idfs = _idfs(spark, cat, manifest, all_terms, stats["n_docs"])
+    postings = _postings(spark, cat, manifest, [t for t in all_terms if t in idfs])
     # only point tombstones here (seg-scoped upsert staleness): bulk-dead
     # docs are already excluded relationally in phrase_search's match stage,
     # and the scorer's `included` restriction means a doc absent from the
     # matches is never scored — so bulk never needs to enter this closure.
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    per_part = postings.groupBy("doc_part").cogroup(matches.groupBy("doc_part")).applyInPandas(
-        _phrase_score_fn(phrases, idfs, stats, k, excluded), schema=RESULT_SCHEMA
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    excluded = _load_tombstones(spark, cat, manifest)
+    per_part = _per_shard(postings, _phrase_score_fn(phrases, idfs, stats, k, excluded),
+                          RESULT_SCHEMA, side=matches)
+    return _rank_merge(per_part, k)
 
 
 def phrase_search(
@@ -734,60 +804,49 @@ def phrase_search(
     cat = Catalog(index_root)
     manifest = cat.manifest_at(snapshot_id)
     all_terms = sorted({t for ts in phrases.values() for t in ts})
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    )
+    postings = _postings(spark, cat, manifest, all_terms)
     if "positions" not in postings.columns:
         raise ValueError("index lacks positions; build with with_positions=True")
     # point tombstones stay in the (driver-small) closure; bulk mass-delete
     # tombstones are a RELATION, cogrouped on doc_part so each shard receives
     # only its own dead ids — no closure envelope on the phrase path.
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
-    if bulk is not None:
-        stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
-        bp = bulk.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        return (
-            postings.groupBy("doc_part")
-            .cogroup(bp.groupBy("doc_part"))
-            .applyInPandas(
-                _phrase_part_fn(phrases, excluded, with_bulk=True, slop=slop),
-                schema=PHRASE_SCHEMA)
-            .orderBy("qid", "doc_id")
-        )
-    return (
-        postings.groupBy("doc_part")
-        .applyInPandas(_phrase_part_fn(phrases, excluded, slop=slop),
-                       schema=PHRASE_SCHEMA)
-        .orderBy("qid", "doc_id")
-    )
+    excluded = _load_tombstones(spark, cat, manifest)
+    return _per_shard(postings, _phrase_part_fn(phrases, excluded, slop=slop),
+                      PHRASE_SCHEMA, side=_bulk_side(spark, cat, manifest)
+                      ).orderBy("qid", "doc_id")
 
 
 MATCH_SCHEMA = "doc_id long"
 
 
-def _match_ids_fn(terms: list[str], tombs):
+def _match_ids_fn(terms: list[str], tombs: _Tombstones):
     """Per-doc_part disjunctive match: unique live doc_ids containing >=1
     of ``terms`` (per-block seg-scoped tombstone exclusion)."""
+    want = set(terms)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def evaluate(pdf: pd.DataFrame, _side) -> pd.DataFrame:
         arrs = []
-        want = set(terms)
         for r in pdf.itertuples(index=False):
             if r.term not in want:
                 continue
             ids = delta_decode(r.doc_ids).astype(np.int64)
-            exc = _exc_for(tombs, getattr(r, "seg", "") or "")
-            if exc is not None and len(exc):
-                ids = ids[~np.isin(ids, exc)]
-            arrs.append(ids)
+            keep = _live_mask(ids, tombs, getattr(r, "seg", "") or "")
+            arrs.append(ids if keep is None else ids[keep])
         if not arrs:
             return pd.DataFrame({"doc_id": np.empty(0, dtype=np.int64)})
         return pd.DataFrame({"doc_id": np.unique(np.concatenate(arrs))})
 
-    return fn
+    return evaluate
+
+
+def _matched_ids(spark: SparkSession, cat: Catalog, manifest: dict,
+                 terms: list[str]) -> DataFrame:
+    """(doc_id) of docs holding any of ``terms``, point tombstones applied
+    at decode. Bulk-dead ids are left for the caller's live_doc_map join."""
+    terms = sorted(set(terms))
+    postings = _postings(spark, cat, manifest, terms)
+    return _per_shard(postings, _match_ids_fn(terms, _load_tombstones(spark, cat, manifest)),
+                      MATCH_SCHEMA)
 
 
 def facet_counts_indexed(
@@ -803,16 +862,10 @@ def facet_counts_indexed(
     value, n), identical to query_ext.facet_counts."""
     cat = Catalog(index_root)
     manifest = cat.manifest_at(snapshot_id)
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(sorted(set(terms)))
-    )
     # bulk mass-deletes need no closure here: live_doc_map anti-joins the
     # bulk table, so the semi-join below drops bulk-dead match ids
     # relationally. Only point tombstones enter the decode closure.
-    tombs = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    matched = postings.groupBy("doc_part").applyInPandas(
-        _match_ids_fn(sorted(set(terms)), tombs), schema=MATCH_SCHEMA
-    )
+    matched = _matched_ids(spark, cat, manifest, terms)
     dm = cat.live_doc_map(spark, manifest)
     joined = dm.join(matched, "doc_id", "left_semi")
     out = None
@@ -824,76 +877,34 @@ def facet_counts_indexed(
     return out.orderBy("facet", "value")
 
 
-class _UnionExc:
-    """Per-segment exclusion = tombstones ∪ a static doc-id set (indexed
-    must_not clauses)."""
-
-    def __init__(self, tombs, extra_ids: np.ndarray):
-        self.tombs = tombs
-        self.extra = np.sort(np.asarray(extra_ids, dtype=np.int64))
-        self._cache: dict[str, np.ndarray] = {}
-
-    def excluded_for(self, seg: str) -> np.ndarray:
-        seg = seg or ""
-        if seg not in self._cache:
-            base = _exc_for(self.tombs, seg)
-            self._cache[seg] = (
-                np.union1d(base, self.extra) if base is not None and len(base) else self.extra
-            )
-        return self._cache[seg]
-
-
-def _bool_part_fn(queries: dict[str, dict], idfs: dict[str, float], stats: dict, k: int, tombs,
-                  n_pos: dict[str, int] | None = None):
+def _bool_part_fn(queries: dict[str, dict], idfs: dict[str, float], stats: dict, k: int,
+                  tombs: _Tombstones, n_pos: dict[str, int] | None = None):
     """Per-shard ES bool evaluation from posting blocks: must terms
     intersect (vectorized), must_not terms exclude, must+should terms
     score; per-shard exact top-k (a doc's postings live in ONE shard, so
     the intersection and the merge are both exact).
 
-    With ``n_pos`` (qid → number of required positive phrases) the
-    returned fn is a COGROUP fn (postings, phrase-matches of the same
-    doc_part): matches rows (qid, doc_id, kind) gate eligibility — kind
-    'p' rows must cover all n_pos[qid] phrases for a doc to qualify, kind
-    'n' rows (negated phrases) exclude. Matched ids never ship to the
-    driver; a doc's phrase matches live in the SAME shard as its postings,
-    so the intersection is exact."""
+    The cogrouped side slice holds rows (qid, doc_id, kind): kind 'b' rows
+    are the shard's bulk-tombstone ids, excluded for every query; with
+    ``n_pos`` (qid → number of required positive phrases) kind 'p' rows
+    must cover all n_pos[qid] phrases for a doc to qualify, and kind 'n'
+    rows (negated phrases) exclude. Matched ids never ship to the driver;
+    a doc's phrase matches live in the SAME shard as its postings, so the
+    intersection is exact."""
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
+    n_pos = n_pos or {}
 
     def evaluate(pdf: pd.DataFrame, mdf: pd.DataFrame | None) -> pd.DataFrame:
-        # kind 'b' rows are this doc_part's slice of the bulk mass-delete
-        # table (cogrouped, never driver-resident) — a global exclusion
-        # folded into the tombstone provider for every query.
-        eff_tombs = tombs
-        if mdf is not None and len(mdf):
-            bids = mdf.loc[mdf["kind"] == "b", "doc_id"]
-            if len(bids):
-                eff_tombs = _UnionExc(tombs, bids.to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
-
-        def term_ids(t: str) -> np.ndarray:
-            arrs = []
-            for blk in by_term.get(t, []):
-                ids = blk.decode()[0]
-                exc = _exc_for(eff_tombs, blk.seg)
-                if exc is not None and len(exc):
-                    ids = ids[~np.isin(ids, exc)]
-                arrs.append(ids)
-            if not arrs:
-                return np.empty(0, dtype=np.int64)
-            return np.unique(np.concatenate(arrs))
+        if mdf is None or not len(mdf):
+            mdf = pd.DataFrame({"qid": [], "doc_id": [], "kind": []})
+        eff_tombs = _with_side(tombs, mdf[mdf["kind"] == "b"])
+        by_term = _shard_blocks(pdf)
 
         def match_ids(qid: str, kind: str) -> np.ndarray:
-            if mdf is None or not len(mdf):
-                return np.empty(0, dtype=np.int64)
             sub = mdf[(mdf["qid"] == qid) & (mdf["kind"] == kind)]
             return sub["doc_id"].to_numpy(dtype=np.int64)
 
-        out_qid, out_doc, out_sc = [], [], []
+        parts = []
         for qid, spec in queries.items():
             must = sorted(set(spec.get("must") or []))
             should = sorted(set(spec.get("should") or []))
@@ -904,33 +915,25 @@ def _bool_part_fn(queries: dict[str, dict], idfs: dict[str, float], stats: dict,
             if not tb:
                 continue
             inc = None
-            if n_pos is not None and n_pos.get(qid):
+            if n_pos.get(qid):
                 # positive phrase gate: a doc qualifies iff it matched ALL
                 # n_pos[qid] phrases (one unique match row per phrase)
-                pos = match_ids(qid, "p")
-                if len(pos):
-                    uniq, counts = np.unique(pos, return_counts=True)
-                    inc = uniq[counts >= n_pos[qid]]
-                else:
-                    inc = np.empty(0, dtype=np.int64)
+                uniq, counts = np.unique(match_ids(qid, "p"), return_counts=True)
+                inc = uniq[counts >= n_pos[qid]]
                 if not len(inc):
                     continue
             satisfiable = True
             for t in must + filt:
-                ids_t = term_ids(t)
+                ids_t = _term_ids(by_term.get(t, []), eff_tombs)
                 if not len(ids_t):
                     satisfiable = False
                     break
                 inc = ids_t if inc is None else inc[np.isin(inc, ids_t)]
             if not satisfiable or (inc is not None and not len(inc)):
                 continue
-            extra_exc: list[np.ndarray] = []
-            if n_pos is not None:
-                neg = match_ids(qid, "n")
-                if len(neg):
-                    extra_exc.append(np.unique(neg))
-            if must_not:
-                extra_exc.extend(a for a in (term_ids(t) for t in must_not) if len(a))
+            extra_exc = [np.unique(match_ids(qid, "n"))]
+            extra_exc.extend(_term_ids(by_term.get(t, []), eff_tombs) for t in must_not)
+            extra_exc = [a for a in extra_exc if len(a)]
             excluded = eff_tombs
             if extra_exc:
                 extra = np.unique(np.concatenate(extra_exc))
@@ -939,30 +942,21 @@ def _bool_part_fn(queries: dict[str, dict], idfs: dict[str, float], stats: dict,
                     if not len(inc):
                         continue
                 else:
-                    excluded = _UnionExc(eff_tombs, extra)
-            ids, sc = score_exhaustive(tb, idfs, k, k1, b, avgdl,
-                                       excluded=excluded, included=inc)
-            out_qid.extend([qid] * len(ids))
-            out_doc.append(ids)
-            out_sc.append(sc)
-        if not out_qid:
-            return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-                {"doc_id": np.int64, "raw_score": np.float64}
-            )
-        return pd.DataFrame(
-            {"qid": out_qid, "doc_id": np.concatenate(out_doc), "raw_score": np.concatenate(out_sc)}
-        )
+                    excluded = eff_tombs.union(extra)
+            parts.append((qid, *score_exhaustive(tb, idfs, k, k1, b, avgdl,
+                                                 excluded=excluded, included=inc)))
+        return _result_frame(parts)
 
-    if n_pos is None:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return evaluate(pdf, None)
+    return evaluate
 
-        return fn
 
-    def cofn(pdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, mdf)
+def _bool_terms(queries: dict[str, dict]) -> tuple[list[str], list[str]]:
+    """(every term a bool query set reads, the scored must+should terms)."""
+    def terms(keys):
+        return sorted({t for spec in queries.values() for key in keys
+                       for t in (spec.get(key) or [])})
 
-    return cofn
+    return terms(("must", "should", "must_not", "filter")), terms(("must", "should"))
 
 
 def bool_search(
@@ -985,104 +979,49 @@ def bool_search(
     gate eligibility by phrase matches, cogrouped with the postings on
     doc_part — match ids never ship to the driver (the phrase_bm25
     cogroup pattern, no size ceiling)."""
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
-    all_terms = sorted({
-        t for spec in queries.values()
-        for key in ("must", "should", "must_not", "filter")
-        for t in (spec.get(key) or [])
-    })
-    scored_terms = sorted({
-        t for spec in queries.values()
-        for key in ("must", "should")
-        for t in (spec.get(key) or [])
-    })
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(scored_terms)
-    ).collect()
-    n_docs = stats["n_docs"]
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5)) for r in drows}
+    cat, manifest, stats = _open(index_root, snapshot_id)
+    all_terms, scored_terms = _bool_terms(queries)
+    idfs = _idfs(spark, cat, manifest, scored_terms, stats["n_docs"])
     if boosts:
         # term^boost multiplies the term's score contribution — and since
         # score = Σ idf·tfn·w, pre-multiplying the idf IS the boost (no
         # change to the scorer, bounds stay conservative for BMW)
         idfs = {t: v * float(boosts.get(t, 1.0)) for t, v in idfs.items()}
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    )
+    postings = _postings(spark, cat, manifest, all_terms)
     # point tombstones in the closure (driver-small by design); the bulk
     # mass-delete table joins the phrase-match cogroup side as kind 'b'
     # rows, so each shard receives only its own dead ids — no envelope.
-    tombs = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
+    tombs = _load_tombstones(spark, cat, manifest)
     side = matches
+    bulk = _load_bulk_df(spark, cat, manifest)
     if bulk is not None:
-        bdf = bulk.select(
-            F.lit("*").alias("qid"), "doc_id", F.lit("b").alias("kind")
-        )
+        bdf = bulk.select(F.lit("*").alias("qid"), "doc_id", F.lit("b").alias("kind"))
         side = bdf if side is None else side.unionByName(bdf)
     if side is not None:
-        mp = side.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        per_part = postings.groupBy("doc_part").cogroup(mp.groupBy("doc_part")).applyInPandas(
-            _bool_part_fn(queries, idfs, stats, k, tombs, n_pos or {}),
-            schema=RESULT_SCHEMA,
-        )
-    else:
-        per_part = postings.groupBy("doc_part").applyInPandas(
-            _bool_part_fn(queries, idfs, stats, k, tombs), schema=RESULT_SCHEMA
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+        side = _with_doc_part(side, stats["n_parts"])
+    per_part = _per_shard(postings, _bool_part_fn(queries, idfs, stats, k, tombs, n_pos),
+                          RESULT_SCHEMA, side=side)
+    return _rank_merge(per_part, k)
 
 
 def _sqs_part_fn(groups: list[dict], idfs: dict[str, float], stats: dict,
-                 k: int, tombs):
+                 k: int, tombs: _Tombstones):
     """Per-shard simple_query_string evaluation: each OR-group's eligible
     set is a posting intersection minus its negations; a doc's score sums
     the POS-term partials of every group it matches (the Lucene
     bool-of-bools sum, exact per shard because a doc's postings live in
-    one shard). Per-shard exact top-k on rounded scores."""
+    one shard). Per-shard exact top-k on rounded scores. The side slice,
+    when cogrouped, is the shard's bulk-tombstone ids."""
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
 
-    def evaluate(pdf: pd.DataFrame, mdf: pd.DataFrame | None) -> pd.DataFrame:
-        eff_tombs = tombs
-        if mdf is not None and len(mdf):
-            bids = mdf.loc[mdf["kind"] == "b", "doc_id"]
-            if len(bids):
-                eff_tombs = _UnionExc(tombs, bids.to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
-
-        def term_ids(t: str) -> np.ndarray:
-            arrs = []
-            for blk in by_term.get(t, []):
-                ids = blk.decode()[0]
-                exc = _exc_for(eff_tombs, blk.seg)
-                if exc is not None and len(exc):
-                    ids = ids[~np.isin(ids, exc)]
-                arrs.append(ids)
-            if not arrs:
-                return np.empty(0, dtype=np.int64)
-            return np.unique(np.concatenate(arrs))
-
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        eff_tombs = _with_side(tombs, side)
+        by_term = _shard_blocks(pdf)
         parts_ids, parts_sc = [], []
         for g in groups:
             inc, ok = None, True
             for t in g["pos"]:
-                ids_t = term_ids(t)
+                ids_t = _term_ids(by_term.get(t, []), eff_tombs)
                 if not len(ids_t):
                     ok = False
                     break
@@ -1090,7 +1029,7 @@ def _sqs_part_fn(groups: list[dict], idfs: dict[str, float], stats: dict,
             if not ok or inc is None or not len(inc):
                 continue
             for t in g["neg"]:
-                ids_t = term_ids(t)
+                ids_t = _term_ids(by_term.get(t, []), eff_tombs)
                 if len(ids_t):
                     inc = inc[~np.isin(inc, ids_t)]
             if not len(inc):
@@ -1101,23 +1040,12 @@ def _sqs_part_fn(groups: list[dict], idfs: dict[str, float], stats: dict,
             parts_ids.append(ids)
             parts_sc.append(sc)
         if not parts_ids:
-            return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-                {"doc_id": np.int64, "raw_score": np.float64})
-        ids = np.concatenate(parts_ids)
-        sc = np.concatenate(parts_sc)
-        uids, inv = np.unique(ids, return_inverse=True)
-        tot = np.bincount(inv, weights=sc)
-        top_ids, top_sc = _topk_rows(uids, tot, k)
-        return pd.DataFrame({"qid": ["q"] * len(top_ids), "doc_id": top_ids,
-                             "raw_score": top_sc})
+            return _result_frame([])
+        uids, inv = np.unique(np.concatenate(parts_ids), return_inverse=True)
+        tot = np.bincount(inv, weights=np.concatenate(parts_sc))
+        return _result_frame([("q", *_topk_rows(uids, tot, k))])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, None)
-
-    def cofn(pdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, mdf)
-
-    return fn, cofn
+    return evaluate
 
 
 def sqs_search(
@@ -1130,44 +1058,20 @@ def sqs_search(
     """ES simple_query_string served FROM the index — the scale-path twin
     of query_ext.simple_query_string_bm25 (same grammar, same oracle):
     per-shard OR-of-AND group evaluation over posting blocks, bulk
-    deletes cogrouped as kind 'b' rows (the bool_search pattern), global
-    merge over <= k x n_parts candidates. (rank, doc_id, score)."""
+    deletes cogrouped per shard (the run_queries pattern), global merge
+    over <= k x n_parts candidates. (rank, doc_id, score)."""
     from .query_ext import parse_simple_query_string
 
     groups = parse_simple_query_string(q)
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    cat, manifest, stats = _open(index_root, snapshot_id)
     all_terms = sorted({t for g in groups for t in g["pos"] + g["neg"]})
     scored = sorted({t for g in groups for t in g["pos"]})
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(scored)).collect()
-    n_docs = stats["n_docs"]
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-            for r in drows}
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(all_terms))
-    tombs = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
-    fn, cofn = _sqs_part_fn(groups, idfs, stats, k, tombs)
-    if bulk is not None:
-        mp = bulk.select(
-            F.lit("q").alias("qid"), "doc_id", F.lit("b").alias("kind")
-        ).withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int"))
-        per_part = postings.groupBy("doc_part").cogroup(
-            mp.groupBy("doc_part")).applyInPandas(cofn, schema=RESULT_SCHEMA)
-    else:
-        per_part = postings.groupBy("doc_part").applyInPandas(
-            fn, schema=RESULT_SCHEMA)
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("rank", "doc_id", "score")
-        .orderBy("rank")
-    )
+    idfs = _idfs(spark, cat, manifest, scored, stats["n_docs"])
+    postings = _postings(spark, cat, manifest, all_terms)
+    tombs = _load_tombstones(spark, cat, manifest)
+    per_part = _per_shard(postings, _sqs_part_fn(groups, idfs, stats, k, tombs),
+                          RESULT_SCHEMA, side=_bulk_side(spark, cat, manifest))
+    return _rank_merge(per_part, k, by=())
 
 
 def search_text_indexed(
@@ -1257,9 +1161,7 @@ class Searcher:
     ):
         self.spark = spark
         self.index_root = index_root
-        self.cat = Catalog(index_root)
-        self.manifest = self.cat.manifest_at(snapshot_id)
-        self.stats = (self.manifest.get("meta") or {}).get("stats") or self.cat.read_json("stats")
+        self.cat, self.manifest, self.stats = _open(index_root, snapshot_id)
         self._dfs: dict[str, int] = {}
         self._missing: set[str] = set()
         self._postings = self.cat.read_table(spark, "postings", snapshot=self.manifest)
@@ -1268,104 +1170,45 @@ class Searcher:
             self._postings = self._postings.persist()
         # point tombstones in the closure; bulk mass-deletes stay a relation
         # (cogrouped per search call) — same split as run_queries.
-        self._excluded = _load_tombstones(spark, self.cat, self.manifest,
-                                          include_bulk=False)
-        self._bulk = _load_bulk_df(spark, self.cat, self.manifest)
-        if self._bulk is not None:
-            self._bulk = self._bulk.withColumn(
-                "doc_part",
-                F.pmod(F.col("doc_id"), F.lit(self.stats["n_parts"])).cast("int"),
-            )
+        self._excluded = _load_tombstones(spark, self.cat, self.manifest)
+        self._bulk = _bulk_side(spark, self.cat, self.manifest)
 
     def _idfs(self, terms: list[str]) -> dict[str, float]:
         unknown = [t for t in terms if t not in self._dfs and t not in self._missing]
         if unknown:
-            rows = (
-                self.cat.read_dictionary(self.spark, snapshot=self.manifest)
-                .filter(F.col("term").isin(unknown))
-                .collect()
-            )
+            rows = _dict_rows(self.spark, self.cat, self.manifest, unknown)
             for r in rows:
                 self._dfs[r["term"]] = r["df"]
             self._missing.update(set(unknown) - {r["term"] for r in rows})
         n = self.stats["n_docs"]
-        return {
-            t: math.log(1.0 + (n - self._dfs[t] + 0.5) / (self._dfs[t] + 0.5))
-            for t in terms
-            if t in self._dfs
-        }
+        return {t: _bm25_idf(n, self._dfs[t]) for t in terms if t in self._dfs}
 
     def search(self, queries: dict[str, list[str]], k: int = 10, algo: str = "bmw") -> DataFrame:
         all_terms = sorted({t for ts in queries.values() for t in ts})
         idfs = self._idfs(all_terms)
         present = [t for t in all_terms if t in idfs]
         postings = self._postings.filter(F.col("term").isin(present))
-        if self._bulk is not None:
-            per_part = (
-                postings.groupBy("doc_part")
-                .cogroup(self._bulk.groupBy("doc_part"))
-                .applyInPandas(
-                    _part_scorer(queries, idfs, self.stats, k, algo,
-                                 self._excluded, with_bulk=True),
-                    schema=RESULT_SCHEMA,
-                )
-            )
-        else:
-            per_part = postings.groupBy("doc_part").applyInPandas(
-                _part_scorer(queries, idfs, self.stats, k, algo, self._excluded),
-                schema=RESULT_SCHEMA,
-            )
-        w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return (
-            per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "doc_id", "score")
-            .orderBy("qid", "rank")
-        )
+        per_part = _per_shard(
+            postings, _part_scorer(queries, idfs, self.stats, k, algo, self._excluded),
+            RESULT_SCHEMA, side=self._bulk)
+        return _rank_merge(per_part, k)
 
     def search_bool(self, queries: dict[str, dict], k: int = 10) -> DataFrame:
         """Bool-DSL search over the cached snapshot (see bool_search);
         ``queries``: qid → {must, should, must_not, filter}."""
-        scored_terms = sorted({
-            t for spec in queries.values()
-            for key in ("must", "should")
-            for t in (spec.get(key) or [])
-        })
-        all_terms = sorted({
-            t for spec in queries.values()
-            for key in ("must", "should", "must_not", "filter")
-            for t in (spec.get(key) or [])
-        })
+        all_terms, scored_terms = _bool_terms(queries)
         idfs = self._idfs(scored_terms)
         postings = self._postings.filter(F.col("term").isin(all_terms))
+        side = None
         if self._bulk is not None:
             side = self._bulk.select(
                 F.lit("*").alias("qid"), "doc_id",
                 F.lit("b").alias("kind"), "doc_part",
             )
-            per_part = (
-                postings.groupBy("doc_part")
-                .cogroup(side.groupBy("doc_part"))
-                .applyInPandas(
-                    _bool_part_fn(queries, idfs, self.stats, k,
-                                  self._excluded, {}),
-                    schema=RESULT_SCHEMA,
-                )
-            )
-        else:
-            per_part = postings.groupBy("doc_part").applyInPandas(
-                _bool_part_fn(queries, idfs, self.stats, k, self._excluded),
-                schema=RESULT_SCHEMA,
-            )
-        w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return (
-            per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "doc_id", "score")
-            .orderBy("qid", "rank")
-        )
+        per_part = _per_shard(
+            postings, _bool_part_fn(queries, idfs, self.stats, k, self._excluded),
+            RESULT_SCHEMA, side=side)
+        return _rank_merge(per_part, k)
 
     def close(self) -> None:
         if self._persisted:
@@ -1469,51 +1312,20 @@ def run_queries(
     (/root/reference tests/tests.rs:214-221). ``snapshot_id`` queries a
     past published snapshot (Iceberg time travel; segments are immutable).
     """
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    cat, manifest, stats = _open(index_root, snapshot_id)
     all_terms = sorted({t for ts in queries.values() for t in ts})
-
-    dictionary = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    )
-    n_docs = stats["n_docs"]
-    drows = dictionary.collect()
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5)) for r in drows}
-
+    idfs = _idfs(spark, cat, manifest, all_terms, stats["n_docs"])
     present = [t for t in all_terms if t in idfs]
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(present)
-    )
-
+    postings = _postings(spark, cat, manifest, present)
     # tombstones (incremental deletes/upserts): filtered at decode time,
     # ES-style, scoped per segment (stable-id upsert keeps one live version).
     # Bulk (mass-delete) tombstones stay a RELATION: cogrouped with the
     # postings on doc_part so each shard receives only its own dead ids —
     # a GDPR-scale purge never materializes on the driver.
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
-
-    if bulk is not None:
-        bp = bulk.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        per_part = postings.groupBy("doc_part").cogroup(bp.groupBy("doc_part")).applyInPandas(
-            _part_scorer(queries, idfs, stats, k, algo, excluded, with_bulk=True),
-            schema=RESULT_SCHEMA,
-        )
-    else:
-        per_part = postings.groupBy("doc_part").applyInPandas(
-            _part_scorer(queries, idfs, stats, k, algo, excluded), schema=RESULT_SCHEMA
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), score_decimals))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    excluded = _load_tombstones(spark, cat, manifest)
+    per_part = _per_shard(postings, _part_scorer(queries, idfs, stats, k, algo, excluded),
+                          RESULT_SCHEMA, side=_bulk_side(spark, cat, manifest))
+    return _rank_merge(per_part, k, decimals=score_decimals)
 
 
 def index_stats(spark: SparkSession, index_root: str,
@@ -1522,9 +1334,7 @@ def index_stats(spark: SparkSession, index_root: str,
     (n_docs, n_terms, n_postings, n_tokens) — one dictionary aggregation,
     no postings decode, no corpus access. n_postings = Σdf (one posting
     per (term, doc)), n_tokens = Σcf."""
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    cat, manifest, stats = _open(index_root, snapshot_id)
     d = cat.read_dictionary(spark, snapshot=manifest)
     return (
         d.agg(
@@ -1555,72 +1365,29 @@ def search_after_indexed(
     threshold is keyed to the kth-best score, which the cursor shifts —
     seeding θ from the cursor is the documented optimization path; the
     exhaustive form is exact at any depth. (rank, doc_id, score)."""
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    cat, manifest, stats = _open(index_root, snapshot_id)
     qterms = sorted(set(terms))
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(qterms)
-    ).collect()
-    n_docs = stats["n_docs"]
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-            for r in drows}
+    idfs = _idfs(spark, cat, manifest, qterms, stats["n_docs"])
     present = [t for t in qterms if t in idfs]
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(present)
-    )
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
+    postings = _postings(spark, cat, manifest, present)
+    excluded = _load_tombstones(spark, cat, manifest)
     cs, cd = float(cursor[0]), int(cursor[1])
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
 
-    def evaluate(pdf: pd.DataFrame, tdf: pd.DataFrame | None) -> pd.DataFrame:
-        empty = pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-            {"doc_id": np.int64, "raw_score": np.float64}
-        )
-        if not len(pdf):
-            return empty
-        exc = excluded
-        if tdf is not None and len(tdf):
-            exc = _UnionExc(excluded, tdf["doc_id"].to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        by_term = _shard_blocks(pdf)
         tb = {t: by_term[t] for t in present if t in by_term}
         if not tb:
-            return empty
-        ids, sc = score_exhaustive(tb, idfs, 1 << 31, k1, b, avgdl, excluded=exc)
+            return _result_frame([])
+        ids, sc = score_exhaustive(tb, idfs, 1 << 31, k1, b, avgdl,
+                                   excluded=_with_side(excluded, side))
         rs = np.round(sc, _ROUND_DECIMALS)
         keep = (rs < cs) | ((rs == cs) & (ids > cd))
-        ids, sc = _topk_rows(ids[keep], sc[keep], k)
-        return pd.DataFrame({"qid": ["q"] * len(ids), "doc_id": ids, "raw_score": sc})
+        return _result_frame([("q", *_topk_rows(ids[keep], sc[keep], k))])
 
-    if bulk is not None:
-        bp = bulk.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        per_part = postings.groupBy("doc_part").cogroup(bp.groupBy("doc_part")).applyInPandas(
-            evaluate, schema=RESULT_SCHEMA
-        )
-    else:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return evaluate(pdf, None)
-
-        per_part = postings.groupBy("doc_part").applyInPandas(fn, schema=RESULT_SCHEMA)
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    top = (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select("rank", "doc_id", "score")
-        .orderBy("rank")
-    )
+    per_part = _per_shard(postings, evaluate, RESULT_SCHEMA,
+                          side=_bulk_side(spark, cat, manifest))
+    return _take_top(per_part.withColumn("score", F.round(F.col("raw_score"), 6)), k)
 
 
 def search_alias(
@@ -1662,19 +1429,10 @@ def sort_by_field_indexed(
     Scale shape: posting scan pruned to the query terms; doc_map semi-join;
     orderBy().limit(k) → TakeOrderedAndProject (the facet_counts_indexed
     match machinery + the direct-path top-k contract)."""
-    from pyspark.sql.window import Window
-
     cat = Catalog(index_root)
     manifest = cat.manifest_at(snapshot_id)
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(sorted(set(terms)))
-    )
-    tombs = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    matched = postings.groupBy("doc_part").applyInPandas(
-        _match_ids_fn(sorted(set(terms)), tombs), schema=MATCH_SCHEMA
-    )
     dm = cat.live_doc_map(spark, manifest).select("doc_id", sort_col)
-    joined = dm.join(matched, "doc_id", "left_semi")
+    joined = dm.join(_matched_ids(spark, cat, manifest, terms), "doc_id", "left_semi")
     key = F.col(sort_col).asc() if ascending else F.col(sort_col).desc()
     top = joined.orderBy(key, F.col("doc_id").asc()).limit(k)
     w = F.row_number().over(Window.orderBy(key, F.col("doc_id").asc()))
@@ -1709,7 +1467,7 @@ def span_first_indexed(
     keep docs where it falls within the leading ``end`` tokens. Identical
     results to the direct query_ext.span_first (stored positions are
     0-based; +1 matches array_position). (doc_id, first_pos)."""
-    from .codec import delta_decode, positions_decode, varint_decode
+    from .codec import positions_decode
 
     cat = Catalog(index_root)
     manifest = cat.manifest_at(snapshot_id)
@@ -1719,9 +1477,9 @@ def span_first_indexed(
     if "positions" not in postings.columns:
         raise ValueError("span_first_indexed needs a positional index "
                          "(build_index with_positions=True)")
-    tombs = _load_tombstones(spark, cat, manifest, include_bulk=False)
+    tombs = _load_tombstones(spark, cat, manifest)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def evaluate(pdf: pd.DataFrame, _side) -> pd.DataFrame:
         out_ids, out_pos = [], []
         for r in pdf.itertuples(index=False):
             ids = delta_decode(r.doc_ids).astype(np.int64)
@@ -1729,9 +1487,9 @@ def span_first_indexed(
             pls = positions_decode(r.positions, tfs)
             first = np.array([int(p[0]) for p in pls], dtype=np.int64) + 1
             keep = first <= end
-            exc = _exc_for(tombs, getattr(r, "seg", "") or "")
-            if exc is not None and len(exc):
-                keep &= ~np.isin(ids, exc)
+            live = _live_mask(ids, tombs, getattr(r, "seg", "") or "")
+            if live is not None:
+                keep &= live
             out_ids.append(ids[keep])
             out_pos.append(first[keep])
         if not out_ids:
@@ -1740,9 +1498,7 @@ def span_first_indexed(
         return pd.DataFrame({"doc_id": np.concatenate(out_ids),
                              "first_pos": np.concatenate(out_pos)})
 
-    matched = postings.groupBy("doc_part").applyInPandas(
-        fn, schema="doc_id long, first_pos long"
-    )
+    matched = _per_shard(postings, evaluate, "doc_id long, first_pos long")
     dm = cat.live_doc_map(spark, manifest).select("doc_id")
     return matched.join(dm, "doc_id", "left_semi").orderBy("doc_id")
 
@@ -1771,25 +1527,12 @@ def _feature_score_indexed(
     point/upsert tombstones via the decode-time exclusion, bulk-deleted
     docs by having no live doc-values row (never a driver
     materialization). (rank, doc_id, score)."""
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    cat, manifest, stats = _open(index_root, snapshot_id)
     qterms = sorted(set(terms))
-    drows = (
-        cat.read_dictionary(spark, snapshot=manifest)
-        .filter(F.col("term").isin(qterms))
-        .collect()
-    )
-    n_docs = stats["n_docs"]
-    idfs = {
-        r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in drows
-    }
+    idfs = _idfs(spark, cat, manifest, qterms, stats["n_docs"])
     present = [t for t in qterms if t in idfs]
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(present)
-    )
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
+    postings = _postings(spark, cat, manifest, present)
+    excluded = _load_tombstones(spark, cat, manifest)
     ldm = cat.live_doc_map(spark, manifest)
     if feature_df is not None:
         # external per-doc feature (e.g. a vector-similarity multiplier):
@@ -1803,21 +1546,13 @@ def _feature_score_indexed(
         )
     else:
         dv = ldm.select("doc_id", F.col(field).cast("double").alias("__v"))
-    dv = dv.withColumn(
-        "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-    )
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
 
-    def fn(pdf: pd.DataFrame, ddf: pd.DataFrame) -> pd.DataFrame:
+    def evaluate(pdf: pd.DataFrame, ddf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {"doc_id": np.empty(0, dtype=np.int64), "score": np.empty(0)}
         )
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
+        by_term = _shard_blocks(pdf)
         tb = {t: by_term[t] for t in present if t in by_term}
         if not tb or not len(ddf):
             return empty
@@ -1839,14 +1574,9 @@ def _feature_score_indexed(
         order = np.lexsort((ids, -final))[:k]
         return pd.DataFrame({"doc_id": ids[order], "score": final[order]})
 
-    per_part = (
-        postings.groupBy("doc_part")
-        .cogroup(dv.groupBy("doc_part"))
-        .applyInPandas(fn, schema="doc_id long, score double")
-    )
-    top = per_part.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
-    return top.withColumn("rank", w).select("rank", "doc_id", "score").orderBy("rank")
+    per_part = _per_shard(postings, evaluate, "doc_id long, score double",
+                          side=_with_doc_part(dv, stats["n_parts"]))
+    return _take_top(per_part, k)
 
 
 def rank_feature_indexed(
@@ -1914,42 +1644,30 @@ def sparse_vector_indexed(
     having no live doc_map row (cogrouped on doc_part — never collected).
     Rank-identical to scoring.sparse_vector_topk (same oracle).
     (rank, doc_id, score)."""
-    from pyspark.sql.window import Window
-
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    cat, manifest, stats = _open(index_root, snapshot_id)
     qterms = sorted(query_weights)
     weights = {t: float(query_weights[t]) for t in qterms}
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(qterms)
-    )
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    live = (
-        cat.live_doc_map(spark, manifest)
-        .select("doc_id")
-        .withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-    )
+    postings = _postings(spark, cat, manifest, qterms)
+    excluded = _load_tombstones(spark, cat, manifest)
+    live = _with_doc_part(cat.live_doc_map(spark, manifest).select("doc_id"),
+                          stats["n_parts"])
 
-    def fn(pdf: pd.DataFrame, ldf: pd.DataFrame) -> pd.DataFrame:
+    def evaluate(pdf: pd.DataFrame, ldf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {"doc_id": np.empty(0, dtype=np.int64), "raw_score": np.empty(0)}
         )
         if not len(pdf) or not len(ldf):
             return empty
         all_ids, all_ps = [], []
+        # row order, not term order: the per-doc sums below accumulate in it
         for r in pdf.itertuples(index=False):
             w = weights.get(r.term)
             if w is None:
                 continue
-            blk = _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                         r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            ids, tfs, _dls, _ws = blk.decode()
-            exc = _exc_for(excluded, blk.seg)
-            if exc is not None and len(exc):
-                keep = ~np.isin(ids, exc)
+            ids = delta_decode(r.doc_ids).astype(np.int64)
+            tfs = varint_decode(r.tfs).astype(np.float64)
+            keep = _live_mask(ids, excluded, getattr(r, "seg", "") or "")
+            if keep is not None:
                 ids, tfs = ids[keep], tfs[keep]
             all_ids.append(ids)
             all_ps.append(w * tfs)
@@ -1967,21 +1685,13 @@ def sparse_vector_indexed(
         uids, sums = _topk_rows(uids, sums, k)
         return pd.DataFrame({"doc_id": uids, "raw_score": sums})
 
-    per_part = (
-        postings.groupBy("doc_part")
-        .cogroup(live.groupBy("doc_part"))
-        .applyInPandas(fn, schema="doc_id long, raw_score double")
-    )
-    scored = per_part.withColumn("score", F.round(F.col("raw_score"), 6)).drop("raw_score")
-    top = scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
-    return top.withColumn("rank", w).select("rank", "doc_id", "score").orderBy("rank")
+    per_part = _per_shard(postings, evaluate, "doc_id long, raw_score double", side=live)
+    return _take_top(per_part.withColumn("score", F.round(F.col("raw_score"), 6)), k)
 
 
 def _lm_part_fn(queries: dict[str, list[str]], denoms: dict[str, float],
                 k: int, smoothing: str, mu: float, lam: float,
-                excluded=None, with_bulk: bool = False,
-                k1b: tuple = (None, None)):
+                excluded: _Tombstones, k1b: tuple = (None, None)):
     """Per-doc_part LM-similarity scorer (the _part_scorer shape with the
     Zhai & Lafferty formulas instead of BM25):
 
@@ -1995,77 +1705,33 @@ def _lm_part_fn(queries: dict[str, list[str]], denoms: dict[str, float],
     the DuckDB oracle both evaluate ln(1+x), and log1p differs in the low
     bits. No BMW here — the BM25 block upper bound does not envelope LM
     scores — so the scorer is the exhaustive decode (still per-shard
-    top-k + k-row merge, the scale shape is unchanged)."""
+    top-k + k-row merge, the scale shape is unchanged). The side slice,
+    when cogrouped, is the shard's bulk-tombstone ids."""
     one_minus = 1.0 - float(lam)
 
-    def evaluate(pdf: pd.DataFrame, tdf: pd.DataFrame | None) -> pd.DataFrame:
-        exc = excluded
-        if tdf is not None and len(tdf):
-            exc = _UnionExc(excluded, tdf["doc_id"].to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
-        out_qid, out_doc, out_sc = [], [], []
+    def term_score(term, tfs, dls):
+        c_t = denoms[term]
+        if smoothing == "dirichlet":
+            v = np.log(1.0 + tfs / (mu * c_t)) + np.log(mu / (dls + mu))
+            return np.maximum(v, 0.0)
+        if smoothing == "bm25plus":
+            # BM25+ (Lv & Zhai'11): c_t carries idf = ln((N+1)/df), mu
+            # carries avgdl, lam carries the +delta lower bound — same
+            # operand order as scoring.bm25_plus_topk
+            return c_t * (_tfn(tfs, dls, k1b[0], k1b[1], mu) + lam)
+        return np.log(1.0 + ((one_minus * tfs) / dls) / (lam * c_t))
+
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        exc = _with_side(excluded, side)
+        by_term = _shard_blocks(pdf)
+        parts = []
         for qid, terms in queries.items():
-            ids_all, sc_all = [], []
-            for term in terms:
-                if term not in by_term or term not in denoms:
-                    continue
-                c_t = denoms[term]
-                for blk in by_term[term]:
-                    ids, tfs, dls, ws = blk.decode()
-                    e = _exc_for(exc, blk.seg)
-                    if e is not None and len(e):
-                        keep = ~np.isin(ids, e)
-                        ids, tfs, dls, ws = ids[keep], tfs[keep], dls[keep], ws[keep]
-                    if not len(ids):
-                        continue
-                    if smoothing == "dirichlet":
-                        v = np.log(1.0 + tfs / (mu * c_t)) + np.log(mu / (dls + mu))
-                        v = np.maximum(v, 0.0)
-                    elif smoothing == "bm25plus":
-                        # BM25+ (Lv & Zhai'11): c_t carries idf =
-                        # ln((N+1)/df), mu carries avgdl, lam carries the
-                        # +delta lower bound — same operand order as
-                        # scoring.bm25_plus_topk
-                        v = c_t * (_tfn(tfs, dls, k1b[0], k1b[1], mu) + lam)
-                    else:
-                        v = np.log(1.0 + ((one_minus * tfs) / dls) / (lam * c_t))
-                    ids_all.append(ids)
-                    sc_all.append(v * ws)
-            if not ids_all:
-                continue
-            cids = np.concatenate(ids_all)
-            csc = np.concatenate(sc_all)
-            uids, inv = np.unique(cids, return_inverse=True)
-            tot = np.bincount(inv, weights=csc)
-            tids, tsc = _topk_rows(uids, tot, k)
-            out_qid.extend([qid] * len(tids))
-            out_doc.append(tids)
-            out_sc.append(tsc)
-        if not out_qid:
-            return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-                {"doc_id": np.int64, "raw_score": np.float64}
-            )
-        return pd.DataFrame({
-            "qid": out_qid,
-            "doc_id": np.concatenate(out_doc),
-            "raw_score": np.concatenate(out_sc),
-        })
+            tb = [(t, by_term[t]) for t in terms if t in by_term and t in denoms]
+            if tb:
+                parts.append((qid, *_exhaustive(tb, term_score, k, exc)))
+        return _result_frame(parts)
 
-    if not with_bulk:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return evaluate(pdf, None)
-
-        return fn
-
-    def cofn(pdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, tdf)
-
-    return cofn
+    return evaluate
 
 
 def search_lm(
@@ -2086,13 +1752,9 @@ def search_lm(
     behave exactly as in run_queries. (qid, rank, doc_id, score)."""
     if smoothing not in ("dirichlet", "jm", "bm25plus"):
         raise ValueError(f"unknown smoothing {smoothing!r}")
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    cat, manifest, stats = _open(index_root, snapshot_id)
     all_terms = sorted({t for ts in queries.values() for t in ts})
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    ).collect()
+    drows = _dict_rows(spark, cat, manifest, all_terms)
     k1b = (None, None)
     if smoothing == "bm25plus":
         # BM25+ slot reuse (documented in _lm_part_fn): consts carry the
@@ -2107,34 +1769,12 @@ def search_lm(
         # path evaluates in-engine, folded into each branch's formula at use
         consts = {r["term"]: (r["cf"] / total_c) for r in drows}
     present = [t for t in all_terms if t in consts]
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(present)
-    )
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
-    if bulk is not None:
-        bp = bulk.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        per_part = postings.groupBy("doc_part").cogroup(bp.groupBy("doc_part")).applyInPandas(
-            _lm_part_fn(queries, consts, k, smoothing, float(mu), float(lam),
-                        excluded, with_bulk=True, k1b=k1b),
-            schema=RESULT_SCHEMA,
-        )
-    else:
-        per_part = postings.groupBy("doc_part").applyInPandas(
-            _lm_part_fn(queries, consts, k, smoothing, float(mu), float(lam),
-                        excluded, k1b=k1b),
-            schema=RESULT_SCHEMA,
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    postings = _postings(spark, cat, manifest, present)
+    excluded = _load_tombstones(spark, cat, manifest)
+    scorer = _lm_part_fn(queries, consts, k, smoothing, float(mu), float(lam), excluded, k1b)
+    per_part = _per_shard(postings, scorer, RESULT_SCHEMA,
+                          side=_bulk_side(spark, cat, manifest))
+    return _rank_merge(per_part, k)
 
 
 def script_score_cosine_indexed(
@@ -2317,7 +1957,7 @@ def routed_search(
     if BULK_TOMBSTONE_TABLE in manifest["tables"]:
         raise ValueError("routed index carries bulk tombstones — "
                          "unsupported state (delete_docs_bulk is guarded)")
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
+    excluded = _load_tombstones(spark, cat, manifest)
     npp = int(rt["parts_per_route"])
     in_route = None
     for v in route_list:
@@ -2327,7 +1967,7 @@ def routed_search(
         in_route = c if in_route is None else (in_route | c)
 
     # route-local corpus stats: one pruned scan of the doc_map slice
-    g = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    g = _snapshot_stats(cat, manifest)
     srow = (
         cat.read_table(spark, "doc_map", snapshot=manifest)
         .filter(in_route)
@@ -2352,28 +1992,12 @@ def routed_search(
         .filter(in_route & F.col("term").isin(all_terms))
     )
     drows = postings.groupBy("term").agg(F.sum("n").alias("df")).collect()
-    idfs = {
-        r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in drows
-    }
+    idfs = {r["term"]: _bm25_idf(n_docs, r["df"]) for r in drows}
     present = [t for t in all_terms if t in idfs]
-
-    per_part = (
-        postings.filter(F.col("term").isin(present))
-        .groupBy("doc_part")
-        .applyInPandas(
-            _part_scorer(queries, idfs, stats, k, algo, excluded=excluded),
-            schema=RESULT_SCHEMA,
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    per_part = _per_shard(postings.filter(F.col("term").isin(present)),
+                          _part_scorer(queries, idfs, stats, k, algo, excluded),
+                          RESULT_SCHEMA)
+    return _rank_merge(per_part, k)
 
 
 def search_bm25_plus(

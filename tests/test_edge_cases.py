@@ -64,3 +64,34 @@ def test_collapse_more_groups_than_k(spark):
     got = collapse_topk(docs, ["merge", "window"], "source", k=3).collect()
     assert len(got) == 3
     assert len({r["source"] for r in got}) == 3  # one per group
+
+
+def test_lit_doubles_bit_identical_to_f_lit(spark):
+    """The parsed array literal carries exactly the doubles F.lit would:
+    signed zero, a tiny and a huge normal, and the smallest subnormal."""
+    import struct
+
+    from fafnir_spark.portable import lit_doubles
+
+    vals = [-0.0, 1e-17, 1e+305, 5e-324]
+    row = spark.range(1).select(
+        lit_doubles(vals).alias("arr"),
+        *[F.lit(float(v)).alias(f"v{i}") for i, v in enumerate(vals)],
+    ).first()
+    for i, v in enumerate(vals):
+        want = struct.pack("<d", v)
+        assert struct.pack("<d", row["arr"][i]) == want, v
+        assert struct.pack("<d", row[f"v{i}"]) == want, v
+
+
+def test_empty_literal_arrays_are_typed(spark):
+    """Empty literals keep their element type, so zip_with/cosine over
+    them still resolve."""
+    from fafnir_spark.portable import lit_doubles, lit_doubles_2d
+
+    df = spark.range(1).select(lit_doubles([]).alias("v"), lit_doubles_2d([]).alias("m"),
+                               lit_doubles_2d([[1.5], []]).alias("r"))
+    assert df.schema["v"].dataType.simpleString() == "array<double>"
+    assert df.schema["m"].dataType.simpleString() == "array<array<double>>"
+    assert df.schema["r"].dataType.simpleString() == "array<array<double>>"
+    assert df.first().asDict() == {"v": [], "m": [], "r": [[1.5], []]}

@@ -684,3 +684,57 @@ def test_bucketed_join_skips_exchange(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
+
+
+@pytest.fixture(scope="module")
+def bulk_idx(spark, tmp_path_factory):
+    """The ``idx`` corpus with 30% of its docs mass-deleted as a bulk
+    tombstone table."""
+    from fafnir_spark.incremental import delete_docs_bulk
+
+    root = str(tmp_path_factory.mktemp("planbulk"))
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    build_index(spark, normalize_docs(docs, id_col="doc_id", text_col="text"),
+                root, n_parts=4, block_size=32, tokenizer="whitespace", build_id="x")
+    delete_docs_bulk(spark, root, docs.filter(
+        F.pmod(F.col("doc_id"), F.lit(10)) < 3).select("doc_id"))
+    return root
+
+
+def _jobs_of(spark, group, action):
+    """Number of Spark jobs ``action()`` submits, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("bulk", [False, True], ids=["plain", "bulk"])
+@pytest.mark.parametrize("path", ["run_queries", "searcher"])
+def test_indexed_query_plan_shape(spark, idx, bulk_idx, path, bulk):
+    """The two benchmarked indexed paths keep their physical shape: ONE
+    per-shard pandas stage (a grouped map, or a cogroup with the bulk
+    tombstone table), the doc_part exchange(s) feeding it plus the two of
+    the per-qid rank merge; and one Searcher.search(...).collect() submits
+    a fixed number of jobs (dictionary lookup + the AQE stages)."""
+    import re
+
+    from fafnir_spark.wand import Searcher
+
+    root = bulk_idx if bulk else idx
+    q = {"q": ["merge", "window", "customer"], "r": ["spark"]}
+    if path == "run_queries":
+        df = run_queries(spark, root, q, k=10)
+    else:
+        searcher = Searcher(spark, root)
+        n_jobs = _jobs_of(spark, f"plan_shape_{bulk}",
+                          lambda: searcher.search(q, k=10).collect())
+        assert n_jobs == (8 if bulk else 7), n_jobs
+        df = searcher.search(q, k=10)
+    plan = _final_plan(df)
+    assert plan.count("FlatMapGroupsInPandas") == (0 if bulk else 1), plan
+    assert plan.count("FlatMapCoGroupsInPandas") == (1 if bulk else 0), plan
+    assert len(re.findall(r"\bExchange\b", plan)) == (4 if bulk else 3), plan
