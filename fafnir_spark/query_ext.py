@@ -413,8 +413,7 @@ def mlt_source_terms(docs: DataFrame, doc_id: int, text_col: str = "text") -> Da
     extraction. tf comes from the single filtered row (point predicate,
     pushed to the scan); df is aggregated only over the source doc's terms
     (semi-join restriction before the groupBy)."""
-    from .query import doc_term_freqs
-    from .textstats import tokens_expr
+    from .query import _corpus_stats, doc_term_freqs
 
     base = docs.select(F.col("doc_id"), F.col(text_col).alias("__text"))
     src_tf = doc_term_freqs(base.filter(F.col("doc_id") == doc_id), "doc_id", "__text")
@@ -423,14 +422,9 @@ def mlt_source_terms(docs: DataFrame, doc_id: int, text_col: str = "text") -> Da
         corpus_tf.join(F.broadcast(src_tf.select("term")), "term", "left_semi")
         .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     )
-    n_docs = (
-        base.select(F.size(tokens_expr("__text")).alias("dl"))
-        .filter(F.col("dl") > 0)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
     return (
         src_tf.join(dfs, "term")
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(F.broadcast(_corpus_stats(base)))
         .withColumn("tfidf", F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 6))
         .select("term", "tf", "tfidf")
     )
@@ -608,9 +602,7 @@ def bm25_search_after(docs: DataFrame, terms: list[str],
     O(k): the cursor predicate filters BEFORE the top-k selection, so the
     plan is filter → TakeOrderedAndProject, never rank-everything-and-skip.
     (rank, doc_id, score) with rank 1..k within the page."""
-    from pyspark.sql.window import Window
-
-    from .query import bm25_scores
+    from .query import _topk_ranked, bm25_scores
 
     cs, cd = float(cursor[0]), int(cursor[1])
     scores = bm25_scores(docs, terms, text_col=text_col)
@@ -618,9 +610,7 @@ def bm25_search_after(docs: DataFrame, terms: list[str],
         (F.col("score") < F.lit(cs))
         | ((F.col("score") == F.lit(cs)) & (F.col("doc_id") > F.lit(cd)))
     )
-    top = after.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
-    return top.withColumn("rank", w).select("rank", "doc_id", "score").orderBy("rank")
+    return _topk_ranked(after, k)
 
 
 def suggest_terms(docs: DataFrame, term: str, k: int = 5,
@@ -846,31 +836,23 @@ def explain_score(docs: DataFrame, terms: list[str], doc_id: int,
     stats stay corpus-wide; only the final projection filters to the doc
     (Catalyst pushes the doc_id filter into the tf branch, not the stats
     branches)."""
-    from . import B, K1
-    from .query import doc_term_freqs, term_dfs
+    from .query import _bm25_parts, _corpus_stats, doc_term_freqs, term_dfs
     from .tokenizer import tokens_expr
 
     qterms = sorted(set(terms))
     q = docs.sparkSession.createDataFrame([(t,) for t in qterms], "term string")
     base = docs.select(F.col("doc_id"), F.col(text_col).alias("__text"))
     tf = doc_term_freqs(base, "doc_id", "__text")
-    dl = base.select(
-        "doc_id", F.size(tokens_expr("__text")).cast("long").alias("dl")
-    ).filter(F.col("dl") > 0)
+    # every doc with a tf row has dl > 0, so this join needs no dl filter
+    dl = base.select("doc_id", F.size(tokens_expr("__text")).cast("long").alias("dl"))
     dfs = term_dfs(tf).select("term", "df")
-    stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tfn = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
-    )
+    idf, tfn = _bm25_parts()
     return (
         tf.filter(F.col("doc_id") == doc_id)
         .join(F.broadcast(q), "term")
         .join(F.broadcast(dfs.join(F.broadcast(q), "term")), "term")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(F.broadcast(_corpus_stats(base)))
         .withColumn("idf", F.round(idf, 6))
         .withColumn("tfn", F.round(tfn, 6))
         .withColumn("part_score", F.round(idf * tfn, 6))
@@ -902,9 +884,7 @@ def proximity_rescore(docs: DataFrame, terms: list[str], k: int = 10,
     the first two query terms are present, then re-rank the window to the
     final top-k. The expensive positional computation touches only
     rescore_n docs — the ES rescorer contract. (rank, doc_id, score)."""
-    from pyspark.sql.window import Window
-
-    from .query import bm25_topk
+    from .query import _topk_ranked, bm25_topk
     from .tokenizer import tokens_expr
 
     assert len(terms) >= 2, "proximity rescore needs two anchor terms"
@@ -924,9 +904,7 @@ def proximity_rescore(docs: DataFrame, terms: list[str], k: int = 10,
         .withColumn("score", F.round(F.col("score") + bonus, 6))
         .select("doc_id", "score")
     )
-    top = rescored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
-    return top.withColumn("rank", w).select("rank", "doc_id", "score").orderBy("rank")
+    return _topk_ranked(rescored, k)
 
 
 def match_phrase_prefix(docs: DataFrame, stem: list[str], prefix: str,
@@ -1385,7 +1363,7 @@ def multi_match_bm25(
     per-field), each branch the standard broadcast-query BM25; the fusion
     is a groupBy over scored docs only; the single-query top-k compiles to
     TakeOrderedAndProject. (rank, doc_id, score)."""
-    from .query import bm25_scores
+    from .query import _topk_ranked, bm25_scores
 
     if mode not in ("best_fields", "most_fields"):
         raise ValueError(f"unknown multi_match mode {mode!r}")
@@ -1401,12 +1379,7 @@ def multi_match_bm25(
         F.col("smax") + F.lit(float(tie_breaker)) * (F.col("ssum") - F.col("smax"))
         if mode == "best_fields" else F.col("ssum")
     )
-    scores = agg.select("doc_id", F.round(raw, 6).alias("score"))
-    from pyspark.sql.window import Window
-
-    top = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
-    return top.withColumn("rank", w).select("rank", "doc_id", "score").orderBy("rank")
+    return _topk_ranked(agg.select("doc_id", F.round(raw, 6).alias("score")), k)
 
 
 def multi_match_cross_fields(
@@ -1432,10 +1405,7 @@ def multi_match_cross_fields(
     per-term count window, which single-reducers hot terms). Weights
     should be dyadic (1.0, 2.0, 2.5…)
     so the weighted sums stay exact across engines."""
-    from pyspark.sql.window import Window
-
-    from . import B, K1
-    from .query import SCORE_DECIMALS
+    from .query import SCORE_DECIMALS, _bm25_parts, _corpus_stats, _term_stats, _topk_ranked
     from .tokenizer import tokens_expr
 
     qterms = sorted(set(terms))
@@ -1465,31 +1435,18 @@ def multi_match_cross_fields(
     tf = toks.groupBy("doc_id", "term").agg(
         F.sum("w").alias("tf"), F.min("__dl").alias("dl")
     )
-    # Zero-weighted min(tf)/min(dl) pin the subtree shape so both branches
-    # share one Exchange (scan runs once) — see query._tf_dl_df.
-    dfs = tf.groupBy("term").agg(
-        (F.count(F.lit(1)) + F.min("tf") * F.lit(0) + F.min("dl") * F.lit(0)).alias("df")
+    # pinned df: both branches share one Exchange (scan runs once)
+    matched = (
+        tf.join(F.broadcast(_term_stats(tf)), "term")
+        .crossJoin(F.broadcast(_corpus_stats(base, F.col("__dl"))))
     )
-    matched = tf.join(F.broadcast(dfs), "term")
-    stats = (
-        base.select("__dl").filter(F.col("__dl") > 0)
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("__dl").alias("avgdl"))
-    )
-    matched = matched.crossJoin(F.broadcast(stats))
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tfn = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
-    )
+    idf, tfn = _bm25_parts()
     scores = (
         matched.withColumn("part_score", idf * tfn)
         .groupBy("doc_id")
         .agg(F.round(F.sum("part_score"), SCORE_DECIMALS).alias("score"))
     )
-    top = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
-    return top.withColumn("rank", w).select("rank", "doc_id", "score").orderBy("rank")
+    return _topk_ranked(scores, k)
 
 
 def analyzed_text_col(stopwords: list[str], text_col: str = "text") -> F.Column:
@@ -2337,28 +2294,12 @@ def simple_query_string_bm25(docs: DataFrame, q: str, k: int = 10,
     group membership and per-group sums are conditional aggregates over
     the ≤|terms| matched rows per doc, the single-query top-k compiles
     to TakeOrderedAndProject. (rank, doc_id, score)."""
-    from pyspark.sql.window import Window
-
-    from . import B, K1
-    from .query import SCORE_DECIMALS, _tf_dl_df, _widen_scan
-    from .tokenizer import tokens_expr
+    from .query import SCORE_DECIMALS, _bm25_parts, _direct_matched, _text_base, _topk_ranked
 
     groups = parse_simple_query_string(q)
     all_terms = sorted({t for g in groups for t in g["pos"] + g["neg"]})
-    base = _widen_scan(docs.select(F.col(id_col).alias("doc_id"),
-                                   F.col(text_col).alias("__text")))
-    matched = _tf_dl_df(base, all_terms)
-    stats = (
-        base.select(F.size(tokens_expr("__text")).cast("long").alias("dl"))
-        .filter(F.col("dl") > 0)
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-    )
-    matched = matched.crossJoin(F.broadcast(stats))
-    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5)))
-    tfn = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
-    )
+    matched = _direct_matched(_text_base(docs, id_col, text_col), all_terms)
+    idf, tfn = _bm25_parts()
     per = matched.withColumn("part", idf * tfn)
     aggs = []
     for i, g in enumerate(groups):
@@ -2378,9 +2319,7 @@ def simple_query_string_bm25(docs: DataFrame, q: str, k: int = 10,
         score = s if score is None else (score + s)
     scores = byd.filter(hits).select(
         "doc_id", F.round(score, SCORE_DECIMALS).alias("score"))
-    top = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
-    return top.withColumn("rank", w).select("rank", "doc_id", "score").orderBy("rank")
+    return _topk_ranked(scores, k)
 
 
 def analyze_api(spark, text: str, analyzer: str = "whitespace",
@@ -2471,8 +2410,7 @@ def prf_bm25(docs: DataFrame, terms: list[str], k: int = 10, fb_k: int = 5,
     the groupBy); the expansion list is a bounded driver-side collect
     (the more_like_this precedent); the final pass is bm25_scores with
     term_boosts. (rank, doc_id, score)."""
-    from .query import bm25_scores, doc_term_freqs
-    from .scoring import _topk_ranked
+    from .query import _topk_ranked, bm25_scores, doc_term_freqs
 
     qterms = sorted(set(terms))
     fb = _topk_ranked(bm25_scores(docs, qterms, text_col=text_col), fb_k)
@@ -2511,13 +2449,12 @@ def synonym_graph_bm25(docs: DataFrame, lexemes: list[list[tuple]],
     Scale shape: variant counting is 100% row-local (array filters over
     the token list — no position explode, no self-join); the matched
     relation carries ≤ |lexemes| rows per doc; df is the ≤|lexemes|-row
-    groupBy broadcast back (the _tf_dl_df shape with its zero-weighted
-    plan pin); corpus stats are a 1-row aggregate; the finish is
-    TakeOrderedAndProject. (rank, doc_id, score)."""
-    from pyspark.sql.window import Window
-
-    from . import B, K1
-    from .query import SCORE_DECIMALS
+    groupBy broadcast back; corpus stats are a 1-row aggregate; the finish
+    is TakeOrderedAndProject. The matched rows come straight from the
+    explode (no tf aggregate), so the df branch has no exchange to reuse
+    and the plan reads the corpus three times: FileScan == 3.
+    (rank, doc_id, score)."""
+    from .query import SCORE_DECIMALS, _bm25_parts, _corpus_stats, _topk_ranked
     from .tokenizer import tokens_expr
 
     toks = tokens_expr(text_col)
@@ -2558,23 +2495,11 @@ def synonym_graph_bm25(docs: DataFrame, lexemes: list[list[tuple]],
         .filter(F.col("e.tf") > 0)
         .select("doc_id", F.col("__dl").alias("dl"),
                 F.col("e.lex").alias("lex"), F.col("e.tf").alias("tf")))
-    # zero-weighted plan pin — see query._tf_dl_df
-    dfs = matched.groupBy("lex").agg(
-        (F.count(F.lit(1)) + F.min("tf") * F.lit(0)
-         + F.min("dl") * F.lit(0)).alias("df"))
-    stats = (base.select("__dl").filter(F.col("__dl") > 0)
-             .agg(F.count(F.lit(1)).alias("n_docs"),
-                  F.avg("__dl").alias("avgdl")))
+    dfs = matched.groupBy("lex").agg(F.count(F.lit(1)).alias("df"))
+    stats = _corpus_stats(base, F.col("__dl"))
     j = matched.join(F.broadcast(dfs), "lex").crossJoin(F.broadcast(stats))
-    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5)))
-    tfn = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1)
-        * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl")))
+    idf, tfn = _bm25_parts()
     scores = (j.withColumn("part", idf * tfn)
               .groupBy("doc_id")
               .agg(F.round(F.sum("part"), SCORE_DECIMALS).alias("score")))
-    top = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(int(k))
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (top.withColumn("rank", F.row_number().over(w))
-            .select("rank", "doc_id", "score").orderBy("rank"))
+    return _topk_ranked(scores, int(k))

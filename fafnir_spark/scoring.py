@@ -9,6 +9,15 @@ here as a composition over the shared one-pass BM25 relation
 scan, only row-local arithmetic or a bounded regroup of already-matched
 docs.
 
+The statistics path and the top-k finish live in query.py: every
+index-free similarity here (LM Dirichlet/JM, classic TF-IDF, scripted,
+BM25+) is its per-term part expression handed to query._direct_topk
+(plus a per-doc aggregate for TF-IDF's coord); dis_max is query._bm25_by
+grouped per (doc, subquery); the five function_score shapers (gauss,
+decay_linear, rank_feature, field_value_factor, distance_feature) are one
+row-local field expression over the rounded BM25 score (_bm25_shaped);
+everything finishes with query._topk_ranked.
+
 Rank-identity contract: every combinator multiplies/merges ROUNDED
 (6-decimal) BM25 scores and re-rounds, in the exact operand order the
 DuckDB oracle uses (oracles.function_score_* builders), so value hashes
@@ -21,20 +30,33 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from . import B, K1
 from .portable import hash60, lit_doubles
-from .query import SCORE_DECIMALS, _tf_dl_df, _widen_scan, bm25_scores, tokens_expr
+from .query import (
+    SCORE_DECIMALS,
+    _bm25_by,
+    _bm25_parts,
+    _direct_topk,
+    _term_stats,
+    _topk_ranked,
+    bm25_scores,
+    tokens_expr,
+)
 
 
-def _topk_ranked(scores: DataFrame, k: int) -> DataFrame:
-    """Shared deterministic top-k finish: orderBy().limit(k) compiles to
-    TakeOrderedAndProject (per-partition heaps, k-row merge); the rank
-    window runs AFTER the limit, over k rows."""
-    top = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
-    return top.withColumn("rank", w).select("rank", "doc_id", "score").orderBy("rank")
+def _bm25_shaped(docs: DataFrame, terms: list[str], field: str, text_col: str,
+                 k: int, shaped: F.Column) -> DataFrame:
+    """The function_score finish: ``shaped`` combines the rounded BM25
+    ``score`` with a row-local expression of the numeric doc ``field``
+    (read as double ``__v``); re-rounded, deterministic top-k. The field
+    read is a join on the already-matched docs — no pass beyond bm25's
+    own."""
+    scores = bm25_scores(docs, terms, text_col=text_col)
+    vals = docs.select("doc_id", F.col(field).cast("double").alias("__v"))
+    out = scores.join(vals, "doc_id").select(
+        "doc_id", F.round(shaped, SCORE_DECIMALS).alias("score")
+    )
+    return _topk_ranked(out, k)
 
 
 def function_score_gauss(
@@ -57,17 +79,9 @@ def function_score_gauss(
     lambda is computed driver-side and enters BOTH engines as a literal.
     The decay factor is row-local — no pass beyond bm25's own."""
     lam = math.log(decay) / (scale * scale)
-    scores = bm25_scores(docs, terms, text_col=text_col)
-    vals = docs.select("doc_id", F.col(field).cast("double").alias("__v"))
     d = F.abs(F.col("__v") - F.lit(float(origin)))
-    out = (
-        scores.join(vals, "doc_id")
-        .select(
-            "doc_id",
-            F.round(F.col("score") * F.exp(F.lit(lam) * d * d), SCORE_DECIMALS).alias("score"),
-        )
-    )
-    return _topk_ranked(out, k)
+    return _bm25_shaped(docs, terms, field, text_col, k,
+                        F.col("score") * F.exp(F.lit(lam) * d * d))
 
 
 def dis_max(
@@ -86,33 +100,15 @@ def dis_max(
     shared filtered tf+dl+df relation, routed to their subquery via a
     broadcast (term, sub) relation, regrouped per (doc, sub) then per doc
     — never a pass per subquery."""
-    spark = docs.sparkSession
     all_terms = sorted({t for sq in subqueries for t in sq})
-    q = spark.createDataFrame(
+    q = docs.sparkSession.createDataFrame(
         [(t, i) for i, sq in enumerate(subqueries) for t in sorted(set(sq))],
         "term string, sub int",
     )
-    base = _widen_scan(docs.select("doc_id", F.col(text_col).alias("__text")))
-    matched = _tf_dl_df(base, all_terms)
-    stats = (
-        base.select(F.size(tokens_expr("__text")).cast("long").alias("dl"))
-        .filter(F.col("dl") > 0)
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-    )
-    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5)))
-    tfn = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
-    )
-    per_sub = (
-        matched.join(F.broadcast(q), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("part_score", idf * tfn)
-        .groupBy("doc_id", "sub")
-        .agg(F.round(F.sum("part_score"), SCORE_DECIMALS).alias("sub_score"))
-    )
+    per_sub = _bm25_by(docs, q, all_terms, ("doc_id", "sub"), text_col=text_col)
     out = (
         per_sub.groupBy("doc_id")
-        .agg(F.max("sub_score").alias("best"), F.sum("sub_score").alias("total"))
+        .agg(F.max("score").alias("best"), F.sum("score").alias("total"))
         .select(
             "doc_id",
             F.round(
@@ -228,8 +224,6 @@ def rank_feature_bm25(
                             integer powers stay exact cross-engine; ES's
                             fractional default 0.6 is a libm pow, which
                             drifts between engines and is refused)"""
-    scores = bm25_scores(docs, terms, text_col=text_col)
-    vals = docs.select("doc_id", F.col(field).cast("double").alias("__v"))
     v, pv = F.col("__v"), F.lit(float(pivot))
     if function == "saturation":
         contrib = F.lit(float(boost)) * v / (v + pv)
@@ -239,11 +233,7 @@ def rank_feature_bm25(
         contrib = F.lit(float(boost)) * (v * v) / (v * v + pv * pv)
     else:
         raise ValueError(f"unknown rank_feature function {function!r}")
-    out = scores.join(vals, "doc_id").select(
-        "doc_id",
-        F.round(F.col("score") + contrib, SCORE_DECIMALS).alias("score"),
-    )
-    return _topk_ranked(out, k)
+    return _bm25_shaped(docs, terms, field, text_col, k, F.col("score") + contrib)
 
 
 def field_value_factor(
@@ -261,14 +251,8 @@ def field_value_factor(
     — multiplicative popularity boosting (the ES docs' canonical
     field_value_factor example). Row-local feature read, chains from the
     ROUNDED bm25 score, identical operand order in the oracle."""
-    scores = bm25_scores(docs, terms, text_col=text_col)
-    vals = docs.select("doc_id", F.col(field).cast("double").alias("__v"))
     mult = F.log(F.lit(1.0) + F.lit(float(factor)) * F.col("__v"))
-    out = scores.join(vals, "doc_id").select(
-        "doc_id",
-        F.round(F.col("score") * mult, SCORE_DECIMALS).alias("score"),
-    )
-    return _topk_ranked(out, k)
+    return _bm25_shaped(docs, terms, field, text_col, k, F.col("score") * mult)
 
 
 def sparse_vector_topk(
@@ -399,22 +383,11 @@ def lm_topk(
 
     summed over matched query terms (Lucene clamps each Dirichlet term at
     0 so scores stay non-negative). Same ONE-pass shape as BM25: the
-    shared filtered tf+dl+df relation (query._tf_dl_df), cf folded into
-    the same <=|qterms|-row per-term groupBy broadcast as df, and C
-    (= total corpus tokens) rides the 1-row stats aggregate. Operand
+    shared filtered tf+dl+df relation (query._tf_dl_df), cf from the
+    same <=|qterms|-row per-term groupBy broadcast as df (pinned the same
+    way, so the plan keeps FileScan == 2 although LM never reads df), and
+    C (= total corpus tokens) rides the 1-row stats aggregate. Operand
     order is pinned by the oracle template (oracles.lm_topk_sql)."""
-    qterms = sorted(set(terms))
-    base = _widen_scan(docs.select("doc_id", F.col(text_col).alias("__text")))
-    # cf via the same <=|qterms|-row groupBy broadcast as df (inside
-    # _tf_dl_df) — never a per-term SUM window, which funnels a hot
-    # term's whole match set through one reducer.
-    matched = _tf_dl_df(base, qterms, with_cf=True)
-    stats = (
-        base.select(F.size(tokens_expr("__text")).cast("long").alias("dl"))
-        .filter(F.col("dl") > 0)
-        .agg(F.sum("dl").cast("double").alias("total_c"))
-    )
-    m = matched.crossJoin(F.broadcast(stats))
     p = F.col("cf") / F.col("total_c")
     if smoothing == "dirichlet":
         part = F.greatest(
@@ -430,12 +403,7 @@ def lm_topk(
         )
     else:
         raise ValueError(f"unknown smoothing {smoothing!r}")
-    scores = (
-        m.select("doc_id", part.alias("part"))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("part"), SCORE_DECIMALS).alias("score"))
-    )
-    return _topk_ranked(scores, k)
+    return _direct_topk(docs, terms, part, k, text_col)
 
 
 def distance_feature_topk(
@@ -457,18 +425,12 @@ def distance_feature_topk(
     date/geo origins are this same formula over a different distance).
     Row-local feature read on already-matched docs, chained from the
     ROUNDED bm25 score (house contract) — no pass beyond bm25's own."""
-    scores = bm25_scores(docs, terms, text_col=text_col)
-    vals = docs.select("doc_id", F.col(field).cast("double").alias("__v"))
     contrib = (
         F.lit(float(boost))
         * F.lit(float(pivot))
         / (F.lit(float(pivot)) + F.abs(F.col("__v") - F.lit(float(origin))))
     )
-    out = scores.join(vals, "doc_id").select(
-        "doc_id",
-        F.round(F.col("score") + contrib, SCORE_DECIMALS).alias("score"),
-    )
-    return _topk_ranked(out, k)
+    return _bm25_shaped(docs, terms, field, text_col, k, F.col("score") + contrib)
 
 
 # pinned docs get score PIN_BASE - position so they outrank any organic
@@ -572,8 +534,6 @@ def search_as_you_type(
     order — three rounded doubles, fixed association, so the DuckDB
     mirror (three independent branch CTEs) is bit-identical.
     (rank, doc_id, score)."""
-    from . import B, K1
-
     full, prefix = terms[:-1], terms[-1]
     if not full:
         raise ValueError("search_as_you_type needs >=1 complete term")
@@ -599,7 +559,7 @@ def search_as_you_type(
         F.transform(F.filter(toks, _is_pref), _tag("p")),
         F.transform(gram_arr, _tag("g")),
     )
-    base = _widen_scan(docs.select("doc_id", text_col)).select(
+    base = docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("__dlb"),
         F.size(gram_arr).cast("long").alias("__dlg"),
@@ -622,12 +582,9 @@ def search_as_you_type(
         F.min("__dlb").alias("dlb"),
         F.min("__dlg").alias("dlg"),
     )
-    # zero-weight pins (the query._tf_dl_df convention) so this branch's
-    # exchange subtree stays identical to tf's and is executed once
-    dfs = tf.groupBy("fld", "term").agg(
-        (F.count(F.lit(1)) + F.min("tf") * F.lit(0)
-         + F.min("dlb") * F.lit(0) + F.min("dlg") * F.lit(0)).alias("df")
-    )
+    # pinned per-(arm, term) df: this branch's exchange subtree stays
+    # identical to tf's and is executed once
+    dfs = _term_stats(tf, ("fld", "term"), ("dlb", "dlg"))
     stats = base.agg(
         F.count(F.when(F.col("__dlb") > 0, F.lit(1))).alias("nb"),
         F.avg(F.when(F.col("__dlb") > 0, F.col("__dlb"))).alias("avgb"),
@@ -637,12 +594,7 @@ def search_as_you_type(
     m = tf.join(F.broadcast(dfs), ["fld", "term"]).crossJoin(F.broadcast(stats))
 
     def _part(nd, dl, avg):
-        idf = F.log(
-            F.lit(1.0) + (F.col(nd) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        )
-        tfn = (F.col("tf") * F.lit(K1 + 1.0)) / (
-            F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col(dl) / F.col(avg))
-        )
+        idf, tfn = _bm25_parts(nd, dl, avg)
         return idf * tfn
 
     part_b = F.when(F.col("fld") == "b", _part("nb", "dlb", "avgb"))
@@ -683,30 +635,13 @@ def tfidf_classic_topk(
 
     (queryNorm is omitted — it is rank-neutral per query, which Lucene
     itself dropped in 7.0). Same one-pass _tf_dl_df shape as BM25/LM:
-    filtered tf with row-local dl, df as the posting-bounded count
-    window, 1-row n_docs aggregate."""
-    qterms = sorted(set(terms))
-    nq = float(len(qterms))
-    base = _widen_scan(docs.select("doc_id", F.col(text_col).alias("__text")))
-    matched = _tf_dl_df(base, qterms)
-    stats = (
-        base.select(F.size(tokens_expr("__text")).cast("long").alias("dl"))
-        .filter(F.col("dl") > 0)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    m = matched.crossJoin(F.broadcast(stats))
+    filtered tf with row-local dl, df via the bounded per-term groupBy
+    broadcast, 1-row n_docs aggregate."""
+    nq = float(len(set(terms)))
     idf = F.lit(1.0) + F.log(F.col("n_docs") / (F.col("df") + F.lit(1.0)))
     part = F.sqrt(F.col("tf")) * idf * idf / F.sqrt(F.col("dl"))
-    scores = (
-        m.select("doc_id", part.alias("part"))
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                (F.count(F.lit(1)) / F.lit(nq)) * F.sum("part"), SCORE_DECIMALS
-            ).alias("score")
-        )
-    )
-    return _topk_ranked(scores, k)
+    coord = F.count(F.lit(1)) / F.lit(nq)
+    return _direct_topk(docs, terms, part, k, text_col, doc_score=coord * F.sum("part"))
 
 
 def script_score_cosine(
@@ -966,20 +901,7 @@ def scripted_similarity_topk(
     the script is row-local arithmetic, so FileScan == 2 regardless of
     the script. (rank, doc_id, score)."""
     thunk, _sql = parse_similarity_script(script)
-    base = _widen_scan(docs.select("doc_id", F.col(text_col).alias("__text")))
-    matched = _tf_dl_df(base, sorted(set(terms)))
-    stats = (
-        base.select(F.size(tokens_expr("__text")).cast("long").alias("__dl"))
-        .filter(F.col("__dl") > 0)
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("__dl").alias("avgdl"))
-    )
-    m = matched.crossJoin(F.broadcast(stats))
-    scores = (
-        m.withColumn("part", thunk())
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("part"), SCORE_DECIMALS).alias("score"))
-    )
-    return _topk_ranked(scores, k)
+    return _direct_topk(docs, terms, thunk(), k, text_col)
 
 
 def bm25_plus_topk(
@@ -1001,27 +923,9 @@ def bm25_plus_topk(
     recommended default; dyadic, so the sum stays exact cross-engine).
     Same one-pass _tf_dl_df shape as BM25: filtered tf with row-local dl,
     df via the bounded per-term groupBy broadcast, 1-row stats aggregate."""
-    qterms = sorted(set(terms))
-    base = _widen_scan(docs.select("doc_id", F.col(text_col).alias("__text")))
-    matched = _tf_dl_df(base, qterms)
-    stats = (
-        base.select(F.size(tokens_expr("__text")).cast("long").alias("dl"))
-        .filter(F.col("dl") > 0)
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-    )
-    m = matched.crossJoin(F.broadcast(stats))
     idf = F.log((F.col("n_docs") + F.lit(1.0)) / F.col("df"))
-    norm = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
-    )
-    part = idf * (norm + F.lit(float(delta)))
-    scores = (
-        m.select("doc_id", part.alias("part"))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("part"), SCORE_DECIMALS).alias("score"))
-    )
-    return _topk_ranked(scores, k)
+    tfn = _bm25_parts()[1]
+    return _direct_topk(docs, terms, idf * (tfn + F.lit(float(delta))), k, text_col)
 
 
 def mmr_rerank(
@@ -1050,7 +954,6 @@ def mmr_rerank(
     class). Docs without a vector drop out (the script_score join rule).
     (pick, doc_id, rel)."""
     from .dedup import cosine_expr
-    from .query import bm25_scores
 
     ranked = _topk_ranked(bm25_scores(docs, terms, text_col=text_col), pool)
     cand = ranked.join(
@@ -1109,16 +1012,8 @@ def function_score_decay_linear(
     must be dyadic so s is an exact driver-side literal shared with the
     oracle; the decay factor is row-local — no pass beyond bm25's own."""
     sig = float(scale) / (1.0 - float(decay))
-    scores = bm25_scores(docs, terms, text_col=text_col)
-    vals = docs.select("doc_id", F.col(field).cast("double").alias("__v"))
     d = F.greatest(
         F.lit(0.0),
         F.abs(F.col("__v") - F.lit(float(origin))) - F.lit(float(offset)))
     mult = F.greatest(F.lit(0.0), (F.lit(sig) - d) / F.lit(sig))
-    out = (
-        scores.join(vals, "doc_id")
-        .select("doc_id",
-                F.round(F.col("score") * mult, SCORE_DECIMALS)
-                .alias("score"))
-    )
-    return _topk_ranked(out, k)
+    return _bm25_shaped(docs, terms, field, text_col, k, F.col("score") * mult)

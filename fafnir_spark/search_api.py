@@ -780,9 +780,7 @@ def search_rescore(docs: DataFrame, body: dict,
     rescore relation is semi-joined down to the window's ids BEFORE the
     left join (both sides <= window rows — the window broadcast is the
     build side twice). (rank, doc_id, score)."""
-    from pyspark.sql.window import Window
-
-    from .query import bm25_scores, bm25_topk
+    from .query import _topk_ranked, bm25_scores, bm25_topk
 
     terms, rterms, window, qw, rw, size = _rescore_parts(body, text_col)
     win = (bm25_topk(docs, terms, k=window, text_col=text_col)
@@ -795,10 +793,7 @@ def search_rescore(docs: DataFrame, body: dict,
         F.round(F.lit(qw) * F.col("s1")
                 + F.lit(rw) * F.coalesce(F.col("s2"), F.lit(0.0)), 6
                 ).alias("score"))
-    top = comb.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(size)
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (top.withColumn("rank", F.row_number().over(w))
-            .select("rank", "doc_id", "score").orderBy("rank"))
+    return _topk_ranked(comb, size)
 
 
 def search_rescore_sql(body: dict, text_col: str = "text") -> str:

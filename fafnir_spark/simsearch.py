@@ -898,7 +898,7 @@ def hybrid_linear(
     case). Same scale shape as hybrid_rrf: two top-k branches, 1-row
     min/max stats broadcast, fusion join ≤ 2·n_each rows.
     (rank, doc_id, score)."""
-    from .query import bm25_topk
+    from .query import _topk_ranked, bm25_topk
 
     b = bm25_topk(docs, terms, k=n_each, id_col=id_col, text_col=text_col).select(
         "doc_id", F.col("score").alias("bs")
@@ -924,13 +924,7 @@ def hybrid_linear(
         + (F.lit(float(w_vec)) * F.coalesce(ne, F.lit(0.0))),
         6,
     )
-    top = (
-        u.select("doc_id", score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return top.withColumn("rank", F.row_number().over(w)).select("rank", "doc_id", "score")
+    return _topk_ranked(u.select("doc_id", score.alias("score")), k)
 
 
 def sq8_quantize_col(vec_col: Column, scale_col: Column) -> Column:

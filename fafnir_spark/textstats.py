@@ -132,16 +132,12 @@ def top_terms_per_doc(docs: DataFrame, k: int = 3,
     same rank-identity contract as BM25. (doc_id, rk, term, tfidf)."""
     from pyspark.sql.window import Window
 
-    from .query import doc_term_freqs
+    from .query import _corpus_stats, doc_term_freqs
 
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
     tf = doc_term_freqs(base, "doc_id", "__text")
     dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = (
-        base.select(F.size(tokens_expr("__text")).alias("dl"))
-        .filter(F.col("dl") > 0)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
+    n_docs = _corpus_stats(base)
     scored = (
         # no broadcast hint on dfs: the df relation is full-vocabulary —
         # billions of distinct identifiers on code corpora — so the join

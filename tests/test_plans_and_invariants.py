@@ -478,23 +478,58 @@ def _final_plan(df):
     )[0]
 
 
-def test_direct_bm25_two_scans_no_smj(spark):
-    """Index-free BM25 must touch the corpus exactly twice — the filtered
-    tf+dl+df pass (term-isin below the groupBy, dl row-local, df via a
-    <=|qterms|-row groupBy whose exchange is REUSED from the tf pass) and
-    the 1-row n_docs/avgdl aggregate — with no big-big SortMergeJoin
-    anywhere (the old dl join) and NO per-term count window (the round-4
-    hot-term single-reducer defect)."""
-    from fafnir_spark.query import bm25_topk
+def _with_title(docs):
+    return docs.withColumn(
+        "title", F.array_join(F.slice(F.split(F.col("text"), " "), 1, 5), " ")
+    )
 
+
+def _direct_similarity_cases():
+    """name -> docs -> DataFrame for every index-free similarity that rides
+    the shared filtered tf+dl+df pass."""
+    from fafnir_spark import query, query_ext, scoring
+
+    import __spark_entry__ as E
+
+    q = ["merge", "window"]
+    return {
+        "bm25_topk": lambda d: query.bm25_topk(d, q, k=10),
+        "bm25_topk_batch": lambda d: query.bm25_topk_batch(
+            d, {"a": q, "b": ["slow", "vector"]}, k=5),
+        "dis_max": lambda d: scoring.dis_max(d, [["merge"], ["window"]], k=5),
+        "search_as_you_type": lambda d: scoring.search_as_you_type(
+            d, ["group", "merge", "cu"], k=10),
+        "lm_dirichlet": lambda d: scoring.lm_topk(d, q, k=10, smoothing="dirichlet"),
+        "lm_jm": lambda d: scoring.lm_topk(d, q, k=10, smoothing="jm"),
+        "tfidf_classic": lambda d: scoring.tfidf_classic_topk(d, q, k=10),
+        "scripted_similarity": lambda d: scoring.scripted_similarity_topk(
+            d, q, E.SIM_SCRIPT, k=10),
+        "bm25_plus": lambda d: scoring.bm25_plus_topk(d, q, k=10),
+        "simple_query_string": lambda d: query_ext.simple_query_string_bm25(
+            d, E.SQS_QUERY, k=10),
+        "multi_match_cross_fields": lambda d: query_ext.multi_match_cross_fields(
+            _with_title(d), ["merge"], {"text": 1.0, "title": 2.0}, k=5),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_direct_similarity_cases()))
+def test_direct_bm25_two_scans_no_smj(spark, case):
+    """Every index-free similarity must touch the corpus exactly twice —
+    the filtered tf+dl+df pass (term-isin below the groupBy, dl row-local,
+    df/cf via a <=|qterms|-row groupBy whose exchange is REUSED from the
+    tf pass) and the 1-row corpus-stats aggregate — with no big-big
+    SortMergeJoin anywhere (the old dl join), NO per-term count window
+    (the round-4 hot-term single-reducer defect) and no repartition of
+    the raw corpus text ahead of the tokenize pass."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _final_plan(bm25_topk(docs, ["merge", "window"], k=10))
+    plan = _final_plan(_direct_similarity_cases()[case](docs))
     assert plan.count("FileScan") == 2, plan.count("FileScan")
     assert "ReusedExchange" in plan  # dfs branch rides the tf exchange
     assert "SortMergeJoin" not in plan
     # the only Window left is the k-row rank window (ordered by score) —
     # never a per-term partition over the unbounded match set
     assert "windowspecdefinition(term" not in plan
+    assert "REPARTITION_BY_NUM" not in plan
 
 
 def test_search_as_you_type_one_tagged_pass(spark):
