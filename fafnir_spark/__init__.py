@@ -13,6 +13,13 @@ Manning/Raghavan/Schütze IIR ch.4; Block-Max WAND — Ding & Suel, SIGIR'11;
 Okapi BM25 — Robertson/Walker).
 """
 
+import os
+
+if "PYTHON_WORKER_FACTORY_SECRET" in os.environ:  # inside a PySpark worker
+    from . import _zipcache
+
+    _zipcache.install()
+
 __version__ = "0.1.0"
 
 K1 = 1.2

@@ -290,15 +290,31 @@ def _result_frame(parts: list[tuple[str, np.ndarray, np.ndarray]]) -> pd.DataFra
 
 def _rank_merge(per_part: DataFrame, k: int, by=("qid",), decimals: int = 6) -> DataFrame:
     """Coordinator merge of per-shard top-k rows: rank each ``by`` group on
-    (rounded score desc, doc_id asc) and keep k. (*by, rank, doc_id, score)."""
+    (rounded score desc, doc_id asc) and keep k. (*by, rank, doc_id, score).
+
+    The rank filter becomes a per-group partial limit ahead of the ``by``
+    exchange, so at most (groups × per-shard pandas tasks × k) rows reach
+    the merge; ``coalesce(1)`` keeps those in one partition, where the final
+    (by, rank) sort runs without a range exchange and its sampling job."""
     w = Window.partitionBy(*by).orderBy(F.col("score").desc(), F.col("doc_id").asc())
     return (
         per_part.withColumn("score", F.round(F.col("raw_score"), decimals))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
+        .coalesce(1)
         .select(*by, "rank", "doc_id", "score")
         .orderBy(*by, "rank")
     )
+
+
+def _no_hits(spark: SparkSession, k: int, decimals: int = 6) -> DataFrame:
+    """The (qid, rank, doc_id, score) answer of a query set none of whose
+    terms is in the dictionary: the rank merge over a ``WHERE false``
+    relation, which the optimizer folds to an empty LocalRelation, so
+    collecting it submits no job (``createDataFrame([])`` would run one)."""
+    none = spark.sql("SELECT CAST(NULL AS STRING) AS qid, CAST(NULL AS BIGINT) AS doc_id, "
+                     "CAST(NULL AS DOUBLE) AS raw_score WHERE false")
+    return _rank_merge(none, k, decimals=decimals)
 
 
 def _take_top(scored: DataFrame, k: int) -> DataFrame:
@@ -1187,6 +1203,8 @@ class Searcher:
         all_terms = sorted({t for ts in queries.values() for t in ts})
         idfs = self._idfs(all_terms)
         present = [t for t in all_terms if t in idfs]
+        if not present:
+            return _no_hits(self.spark, k)
         postings = self._postings.filter(F.col("term").isin(present))
         per_part = _per_shard(
             postings, _part_scorer(queries, idfs, self.stats, k, algo, self._excluded),
@@ -1316,6 +1334,8 @@ def run_queries(
     all_terms = sorted({t for ts in queries.values() for t in ts})
     idfs = _idfs(spark, cat, manifest, all_terms, stats["n_docs"])
     present = [t for t in all_terms if t in idfs]
+    if not present:
+        return _no_hits(spark, k, score_decimals)
     postings = _postings(spark, cat, manifest, present)
     # tombstones (incremental deletes/upserts): filtered at decode time,
     # ES-style, scoped per segment (stable-id upsert keeps one live version).

@@ -95,3 +95,82 @@ def test_empty_literal_arrays_are_typed(spark):
     assert df.schema["m"].dataType.simpleString() == "array<array<double>>"
     assert df.schema["r"].dataType.simpleString() == "array<array<double>>"
     assert df.first().asDict() == {"v": [], "m": [], "r": [[1.5], []]}
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+def test_zip_cache_skips_unchanged_archives(tmp_path, monkeypatch):
+    """After install(), invalidating import caches reads no unchanged zip
+    directory, and a rewritten archive is still re-read."""
+    import importlib
+    import sys
+    import zipimport
+
+    from fafnir_spark import _zipcache
+
+    archive = tmp_path / "zc.zip"
+    _write_zip(archive, {"zc_one": "X = 1\n"})
+    monkeypatch.syspath_prepend(str(archive))
+    for name in ("zc_one", "zc_two"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    # restored at teardown, so the patch does not leak into other tests
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        zipimport.zipimporter.invalidate_caches)
+    assert importlib.import_module("zc_one").X == 1
+
+    _zipcache.install()
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda a: reads.append(a) or read_directory(a))
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert reads == []
+
+    _write_zip(archive, {"zc_one": "X = 1\n", "zc_two": "Y = 2\n"})
+    importlib.invalidate_caches()
+    assert reads == [str(archive)]
+    assert importlib.import_module("zc_two").Y == 2
+
+
+def test_zip_cache_installed_in_workers_only(spark):
+    """A pandas UDF task that runs package code finds zipimporter patched
+    in its worker (second task: the patch outlives the task that installed
+    it) and re-reads no zip directory on the per-task invalidation; the
+    driver process stays unpatched."""
+    import zipimport
+
+    def report(pdf):  # nested, so it pickles by value
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        from fafnir_spark.wand import _bm25_idf
+
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda a: reads.append(a) or read_directory(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        return pd.DataFrame({
+            "module": [zipimport.zipimporter.invalidate_caches.__module__],
+            "reads": [len(reads)],
+            "idf": [_bm25_idf(10, 1)],
+        })
+
+    df = spark.range(1).groupBy("id").applyInPandas(
+        report, "module string, reads long, idf double")
+    df.collect()
+    row = df.collect()[0]
+    assert row["module"] == "fafnir_spark._zipcache"
+    assert row["reads"] == 0
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"

@@ -752,9 +752,10 @@ def _jobs_of(spark, group, action):
 def test_indexed_query_plan_shape(spark, idx, bulk_idx, path, bulk):
     """The two benchmarked indexed paths keep their physical shape: ONE
     per-shard pandas stage (a grouped map, or a cogroup with the bulk
-    tombstone table), the doc_part exchange(s) feeding it plus the two of
-    the per-qid rank merge; and one Searcher.search(...).collect() submits
-    a fixed number of jobs (dictionary lookup + the AQE stages)."""
+    tombstone table), the doc_part exchange(s) feeding it plus the qid
+    exchange of the rank merge, whose final sort runs in one partition (no
+    range exchange); and one Searcher.search(...).collect() submits a fixed
+    number of jobs (dictionary lookup + the AQE stages)."""
     import re
 
     from fafnir_spark.wand import Searcher
@@ -767,9 +768,38 @@ def test_indexed_query_plan_shape(spark, idx, bulk_idx, path, bulk):
         searcher = Searcher(spark, root)
         n_jobs = _jobs_of(spark, f"plan_shape_{bulk}",
                           lambda: searcher.search(q, k=10).collect())
-        assert n_jobs == (8 if bulk else 7), n_jobs
+        assert n_jobs == (6 if bulk else 5), n_jobs
         df = searcher.search(q, k=10)
     plan = _final_plan(df)
     assert plan.count("FlatMapGroupsInPandas") == (0 if bulk else 1), plan
     assert plan.count("FlatMapCoGroupsInPandas") == (1 if bulk else 0), plan
-    assert len(re.findall(r"\bExchange\b", plan)) == (4 if bulk else 3), plan
+    assert len(re.findall(r"\bExchange\b", plan)) == (3 if bulk else 2), plan
+    assert "rangepartitioning" not in plan, plan
+
+
+@pytest.mark.parametrize("bulk", [False, True], ids=["plain", "bulk"])
+def test_absent_terms_skip_the_scan(spark, idx, bulk_idx, bulk):
+    """A query set with no dictionary term is answered by an empty
+    LocalRelation with the usual schema: no scan or merge, and run_queries
+    loads no tombstones.
+    A first call submits only the dictionary lookup's jobs; once the
+    Searcher knows the term is missing, search(...).collect() submits none."""
+    from fafnir_spark.wand import Searcher, _dict_rows, _open
+
+    root = bulk_idx if bulk else idx
+    q = {"x": ["zz_never"]}
+    cat, manifest, _stats = _open(root, None)
+    n_lookup = _jobs_of(spark, f"absent_dict_{bulk}",
+                        lambda: _dict_rows(spark, cat, manifest, ["zz_never"]))
+    searcher = Searcher(spark, root)
+    assert _jobs_of(spark, f"absent_first_{bulk}",
+                    lambda: searcher.search(q, k=5).collect()) == n_lookup
+    assert _jobs_of(spark, f"absent_again_{bulk}",
+                    lambda: searcher.search(q, k=5).collect()) == 0
+    assert _jobs_of(spark, f"absent_rq_{bulk}",
+                    lambda: run_queries(spark, root, q, k=5).collect()) == n_lookup
+    df = searcher.search(q, k=5)
+    assert df.collect() == []
+    assert df.schema == searcher.search({"q": ["merge"]}, k=5).schema
+    assert run_queries(spark, root, q, k=5).schema == run_queries(
+        spark, root, {"q": ["merge"]}, k=5).schema
