@@ -393,7 +393,8 @@ def build_index(
         # recompute; north rule: docs/sec, postings/sec, bytes compressed
         # per task; fafnir analog: progress counters,
         # openmaptiles2mimir.rs:130-135)
-        n_docs = spark.read.parquet(cat.segment_dir("doc_map", f"{build_id}-{shard}")).count()
+        n_docs = cat.read_segments(
+            spark, [cat.segment_dir("doc_map", f"{build_id}-{shard}")]).count()
         byte_cols = (
             F.sum(F.length("doc_ids")) + F.sum(F.length("tfs"))
             + F.sum(F.length("dls")) + F.sum(F.length("weights"))
@@ -401,7 +402,7 @@ def build_index(
         if with_positions:
             byte_cols = byte_cols + F.sum(F.length("positions"))
         pstats = (
-            spark.read.parquet(cat.segment_dir("postings", f"{build_id}-{shard}"))
+            cat.read_segments(spark, [cat.segment_dir("postings", f"{build_id}-{shard}")])
             .agg(F.sum("n").alias("postings"), byte_cols.alias("bytes"))
             .collect()[0]
         )
@@ -486,14 +487,11 @@ def finalize_index(
     """Derive the global dictionary from written postings, compute stats,
     verify doc_id uniqueness, publish the snapshot."""
     post_segs = [cat.segment_dir("postings", f"{build_id}-{s}") for s in range(n_shards)]
-    post = spark.read.parquet(post_segs[0])
-    for p in post_segs[1:]:
-        post = post.unionByName(spark.read.parquet(p), allowMissingColumns=True)
-    dictionary = dictionary_from_postings(post)
+    dictionary = dictionary_from_postings(cat.read_segments(spark, post_segs))
     cat.write_segment(dictionary, "dictionary", build_id, sort_within_by=["term"])
 
     dm_segs = [cat.segment_dir("doc_map", f"{build_id}-{s}") for s in range(n_shards)]
-    dm = spark.read.parquet(*dm_segs)
+    dm = cat.read_segments(spark, dm_segs)
     stats = dm.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("doc_id").alias("n_ids"),

@@ -12,6 +12,19 @@ No Iceberg runtime jar ships in this sandbox, so `use_iceberg` stays False
 and every table is a parquet directory tree + `_manifest.json`; the schemas
 and the commit protocol are identical either way, and the module is the only
 place that would change on a real cluster (`spark.read.format("iceberg")`).
+
+Each segment declares its own file schema, as Iceberg table metadata does:
+`write_segment` leaves `<segment dir>/_schema.json` (the parquet files'
+schema, without the hive partition columns, plus the partition column
+names) next to the data, and `read_segments` builds the DataFrame from
+those declarations. A `spark.read.parquet(dir)` without a schema runs one
+Spark job per call to infer it from the file footers; a declared read runs
+none. Spark's file index skips files whose names start with `_`, and
+`clone_index`/`follow_index` copy whole segment dirs, so the declaration
+travels with its segment. Segments written before the schema file existed, or a
+column whose type differs between segments, fall back to per-segment
+inference (never a silent cast), so older snapshots keep reading as they
+did.
 """
 
 from __future__ import annotations
@@ -20,8 +33,10 @@ import json
 import os
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 # schemes treated as the local filesystem (fast path: plain os IO +
 # POSIX-atomic os.replace). Everything else — s3a, gs, abfs, hdfs — goes
@@ -38,6 +53,43 @@ def _scheme(path: str) -> str:
 
 def _is_local(path: str) -> bool:
     return _scheme(path) in _LOCAL_SCHEMES
+
+
+# per-segment schema declaration (see the module docstring)
+SCHEMA_FILE = "_schema.json"
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every level nullable — the form Spark reads a parquet
+    file back as, so declarations compare equal across writers."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                           for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _merge_schemas(decls: list[tuple[StructType, list[str]] | None]) -> StructType | None:
+    """The segments' declared file schemas merged by column name in
+    first-seen segment order — the order ``unionByName(allowMissingColumns
+    =True)`` gives — or None when a segment declares none or one column
+    has two types."""
+    if None in decls:
+        return None
+    fields: dict[str, StructField] = {}
+    for schema, _parts in decls:
+        for f in schema.fields:
+            seen = fields.setdefault(f.name, f)
+            if seen.dataType != f.dataType:
+                return None
+    return StructType(list(fields.values()))
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
 
 def _local_path(path: str) -> str:
@@ -288,18 +340,19 @@ class Catalog:
         partition_by: list[str] | None = None,
         sort_within_by: list[str] | None = None,
     ) -> str:
-        """Write one immutable segment of a table.
+        """Write one immutable segment of a table, then its schema file.
 
         ``sort_within_by`` orders rows inside each file so parquet row-group
         min/max statistics prune term lookups (the parquet stand-in for
         Iceberg sort orders / Lucene's term dictionary locality).
         """
         path = self.segment_dir(name, segment)
+        parts = list(partition_by or [])
         if sort_within_by:
             df = df.sortWithinPartitions(*sort_within_by)
         w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
+        if parts:
+            w = w.partitionBy(*parts)
         w.parquet(path)
         # an empty result (e.g. a doc-less build shard) writes zero part
         # files, which would make later schema inference fail — write an
@@ -308,6 +361,12 @@ class Catalog:
         # works on object stores (s3a/gs/abfs), not just local paths.
         if not self._has_parquet_files(df.sparkSession, path):
             df.sparkSession.createDataFrame([], df.schema).write.mode("overwrite").parquet(path)
+            parts = []  # that file holds the partition columns as data
+        data = StructType([f for f in df.schema.fields if f.name not in parts])
+        self._write_text_atomic(
+            os.path.join(path, SCHEMA_FILE),
+            json.dumps({"schema": _as_nullable(data).jsonValue(), "partition_by": parts}),
+        )
         return path
 
     @staticmethod
@@ -324,16 +383,55 @@ class Catalog:
                 return True
         return False
 
+    def _segment_schema(self, seg: str) -> tuple[StructType, list[str]] | None:
+        """(file schema, partition columns) declared by ``seg``; None for a
+        segment written before schema files existed."""
+        text = self._read_text(os.path.join(seg, SCHEMA_FILE))
+        if text is None:
+            return None
+        decl = json.loads(text)
+        return StructType.fromJson(decl["schema"]), decl["partition_by"]
+
+    def data_schema(self, segs: list[str]) -> StructType | None:
+        """The merged declared file schema of ``segs`` (partition columns
+        excluded), for reads of their partition dirs; None when
+        ``read_segments`` would fall back to inference."""
+        return _merge_schemas([self._segment_schema(s) for s in segs])
+
+    def read_segments(self, spark: SparkSession, segs: list[str]) -> DataFrame:
+        """The union of segment dirs ``segs``, read with their declared
+        schemas: building the DataFrame runs no Spark job.
+
+        - Unpartitioned segments are one scan of every dir under the
+          merged schema; a column missing from some segments reads as null.
+        - Partitioned segments (postings by doc_part, ivf_assign by
+          centroid_id, data streams by __zone) stay a per-segment union.
+          One scan over ``seg=*/part=*`` is refused by Spark's partition
+          discovery, and a table-dir basePath would make ``seg=`` a
+          partition column that shadows the files' own ``seg`` column (the
+          upsert's keep_seg match). Spark still types the partition column
+          from the paths without a job, exactly as inference did.
+        - A segment without a schema file, or a column with two types,
+          makes the whole read fall back to per-segment inference, the
+          pre-declaration path — a type conflict is never cast away."""
+        decls = [self._segment_schema(s) for s in segs]
+        merged = _merge_schemas(decls)
+        if merged is None:
+            return _union([spark.read.parquet(s) for s in segs])
+        if not any(parts for _, parts in decls):
+            return spark.read.schema(merged).parquet(*segs)
+        return _union([spark.read.schema(schema).parquet(s)
+                       for s, (schema, _) in zip(segs, decls)])
+
     def read_table(self, spark: SparkSession, name: str, snapshot: dict | None = None) -> DataFrame:
-        """Read the union of the table's published segments."""
+        """The union of the table's published segments (``read_segments``:
+        declared schemas, no Spark job to build the frame; older segments
+        without a schema file fall back to per-segment inference)."""
         m = snapshot or self.read_manifest()
         segs = m["tables"].get(name, [])
         if not segs:
             raise FileNotFoundError(f"table {name} has no published segments in {self.root}")
-        df = spark.read.parquet(segs[0])
-        for s in segs[1:]:
-            df = df.unionByName(spark.read.parquet(s), allowMissingColumns=True)
-        return df
+        return self.read_segments(spark, segs)
 
     def read_dictionary(self, spark: SparkSession, snapshot: dict | None = None) -> DataFrame:
         """The logical term dictionary: per-segment dictionary files with

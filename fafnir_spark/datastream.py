@@ -86,6 +86,14 @@ def _zone_paths(zones: dict, hit: list) -> list:
             for z in hit for s in zones[z]["segs"]]
 
 
+def _reader(spark: SparkSession, cat: Catalog, segs: list[str]):
+    """``spark.read`` with the declared file schema of the segments about
+    to be read, so building the scan runs no inference job; plain
+    inference for segments written before schema files existed."""
+    schema = cat.data_schema(list(dict.fromkeys(segs)))
+    return spark.read if schema is None else spark.read.schema(schema)
+
+
 def read_data_stream_range(spark: SparkSession, root: str,
                            lo_us: int, hi_us: int, name: str = "ds",
                            snapshot_id: str | None = None) -> DataFrame:
@@ -98,12 +106,13 @@ def read_data_stream_range(spark: SparkSession, root: str,
     hit = [z for z, zm in sorted(zones.items())
            if zm["min_us"] <= hi_us and zm["max_us"] >= lo_us]
     if not hit:
-        return (spark.read.option("basePath", seg).parquet(seg)
+        return (_reader(spark, cat, [seg]).option("basePath", seg).parquet(seg)
                 .filter(F.lit(False)).drop("__zone"))
     paths = _zone_paths(zones, hit)
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     return (
-        spark.read.option("basePath", os.path.dirname(seg)).parquet(*paths)
+        _reader(spark, cat, [s for z in hit for s in zones[z]["segs"]])
+        .option("basePath", os.path.dirname(seg)).parquet(*paths)
         .filter((us >= F.lit(lo_us)) & (us <= F.lit(hi_us)))
         # basePath is the table dir, so BOTH hive-style levels (seg=, 
         # __zone=) surface as partition columns — drop both
@@ -133,7 +142,8 @@ def count_data_stream_range(spark: SparkSession, root: str,
         paths = _zone_paths(zones, partial)
         us = F.unix_micros(F.col("ts").cast("timestamp"))
         scanned = (
-            spark.read.option("basePath", os.path.dirname(seg)).parquet(*paths)
+            _reader(spark, cat, [s for z in partial for s in zones[z]["segs"]])
+            .option("basePath", os.path.dirname(seg)).parquet(*paths)
             .filter((us >= F.lit(lo_us)) & (us <= F.lit(hi_us)))
             .agg(F.count(F.lit(1)).alias("n"))
         )

@@ -243,7 +243,7 @@ def append_index(
     if ts_dir is not None:
         tables[TOMBSTONE_TABLE] = [ts_dir]
     new_dict = dictionary_from_postings(
-        spark.read.parquet(cat.segment_dir("postings", segment))
+        cat.read_segments(spark, [cat.segment_dir("postings", segment)])
     )
     dict_seg = f"seg-{segment}-{uuid.uuid4().hex[:6]}"
     cat.write_segment(new_dict, "dictionary", dict_seg, sort_within_by=["term"])
@@ -253,12 +253,12 @@ def append_index(
     # doc_map segment only; avgdl = sum_dl/n_docs (deterministic, partition-
     # order independent). Legacy stats without sum_dl seed it with one scan
     # of the prior doc_map (dl column only), then stay additive forever.
-    new_agg = spark.read.parquet(cat.segment_dir("doc_map", segment)).agg(
+    new_agg = cat.read_segments(spark, [cat.segment_dir("doc_map", segment)]).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
     ).collect()[0]
     old_sum = stats.get("sum_dl")
     if old_sum is None:
-        old_sum = spark.read.parquet(*m["tables"]["doc_map"]).agg(
+        old_sum = cat.read_segments(spark, m["tables"]["doc_map"]).agg(
             F.sum("dl")).collect()[0][0] or 0
     n_docs = int(stats["n_docs"]) + int(new_agg["n"])
     sum_dl = int(old_sum) + int(new_agg["sum_dl"] or 0)
@@ -375,7 +375,7 @@ def update_doc_meta(spark: SparkSession, index_root: str, updates: DataFrame) ->
     ids = updates.select("doc_id")
     new_dirs: list[str] = []
     for d in m["tables"]["doc_map"]:
-        seg_df = spark.read.parquet(d)
+        seg_df = cat.read_segments(spark, [d])
         touched = seg_df.join(F.broadcast(ids), "doc_id", "left_semi").limit(1).count()
         if not touched:
             new_dirs.append(d)

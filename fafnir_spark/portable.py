@@ -13,7 +13,7 @@ Verified equal on both engines (see tests/test_portable.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 HASH60_MAX = (1 << 60) - 1
@@ -74,3 +74,16 @@ def lit_doubles_2d(rows) -> Column:
     if not all(math.isfinite(v) for row in mat for v in row):
         return F.array(*[lit_doubles(row) for row in mat])
     return F.expr("array(" + ",".join(_double_array_sql(row) for row in mat) + ")")
+
+
+def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """An empty DataFrame of schema ``ddl`` (e.g. ``"rank int, doc_id
+    long"``) that collects without a Spark job: a typed ``SELECT CAST(NULL
+    AS ...) ... WHERE false``, which the optimizer folds to an empty
+    LocalRelation. ``createDataFrame([], ddl)`` runs one job on every
+    collect."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    cols = ", ".join(f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+                     for f in _parse_datatype_string(ddl).fields)
+    return spark.sql(f"SELECT {cols} WHERE false")

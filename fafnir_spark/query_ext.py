@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .portable import empty_frame
 from .query import conjunctive_match
 
 # ES bounds every multi-term rewrite (indices.query.bool.max_clause_count;
@@ -162,7 +163,7 @@ def prefix_bm25(docs: DataFrame, prefix: str, k: int = 10, text_col: str = "text
 
     terms = expand_prefix(docs, prefix, text_col)
     if not terms:
-        return docs.sparkSession.createDataFrame([], "rank int, doc_id long, score double")
+        return empty_frame(docs.sparkSession, "rank int, doc_id long, score double")
     return bm25_topk(docs, terms, k=k, text_col=text_col)
 
 
@@ -369,7 +370,7 @@ def search_text(docs: DataFrame, query: str, k: int = 10, text_col: str = "text"
     for p in spec["prefixes"]:
         scored = sorted(set(scored) | set(expand_prefix(docs, p, text_col)))
     if not scored:
-        return docs.sparkSession.createDataFrame([], "rank int, doc_id long, score double")
+        return empty_frame(docs.sparkSession, "rank int, doc_id long, score double")
     eligible = None
 
     def _and(base, extra):
@@ -454,7 +455,7 @@ def more_like_this(docs: DataFrame, doc_id: int, k: int = 10, n_terms: int = 5,
         .limit(n_terms).collect()
     ]
     if not terms:
-        return docs.sparkSession.createDataFrame([], "rank int, doc_id long, score double")
+        return empty_frame(docs.sparkSession, "rank int, doc_id long, score double")
     src = docs.sparkSession.createDataFrame([(int(doc_id),)], "doc_id long")
     return bm25_topk(docs, terms, k=k, text_col=text_col, excluded_docs=src)
 
@@ -487,7 +488,7 @@ def more_like_this_indexed(
     terms_l, tfs_l, _dl, _pos = TOKENIZERS[tokenizer](pd.Series([like_text]))[0]
     empty = "qid string, rank int, doc_id long, score double"
     if not terms_l:
-        return spark.createDataFrame([], empty)
+        return empty_frame(spark, empty)
     tf_df = spark.createDataFrame(
         [(t, int(c)) for t, c in zip(terms_l, tfs_l)], "term string, tf int"
     )
@@ -504,7 +505,7 @@ def more_like_this_indexed(
         .limit(n_terms).collect()
     ]
     if not sel:
-        return spark.createDataFrame([], empty)
+        return empty_frame(spark, empty)
     return run_queries(spark, index_root, {"mlt": sel}, k=k, snapshot_id=snapshot_id)
 
 
@@ -570,7 +571,7 @@ def fuzzy_bm25(docs: DataFrame, qterms: list[str], k: int = 10,
     vocab = doc_term_freqs(docs, text_col=text_col).select("term").distinct()
     terms = fuzzy_expand(vocab, qterms, max_edits)
     if not terms:
-        return docs.sparkSession.createDataFrame([], "rank int, doc_id long, score double")
+        return empty_frame(docs.sparkSession, "rank int, doc_id long, score double")
     return bm25_topk(docs, terms, k=k, text_col=text_col)
 
 
@@ -588,7 +589,7 @@ def fuzzy_bm25_indexed(spark, index_root: str, qterms: list[str], k: int = 10,
     vocab = cat.read_dictionary(spark, snapshot=manifest).select("term")
     terms = fuzzy_expand(vocab, qterms, max_edits)
     if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return empty_frame(spark, "rank int, doc_id long, score double")
     res = run_queries(spark, index_root, {"fz": terms}, k=k, snapshot_id=snapshot_id)
     return res.select("rank", "doc_id", "score")
 
@@ -631,7 +632,7 @@ def suggest_terms(docs: DataFrame, term: str, k: int = 5,
     dfs = term_dfs(doc_term_freqs(docs, text_col=text_col)).select("term", "df")
     cands = [t for t in fuzzy_expand(dfs.select("term"), [term]) if t != term]
     if not cands:
-        return docs.sparkSession.createDataFrame([], "rk int, term string, df long")
+        return empty_frame(docs.sparkSession, "rk int, term string, df long")
     top = (
         dfs.filter(F.col("term").isin(cands))
         .orderBy(F.col("df").desc(), F.col("term").asc())
@@ -654,7 +655,7 @@ def suggest_terms_indexed(spark, index_root: str, term: str, k: int = 5,
     d = cat.read_dictionary(spark, snapshot=manifest).select("term", "df")
     cands = [t for t in fuzzy_expand(d.select("term"), [term]) if t != term]
     if not cands:
-        return spark.createDataFrame([], "rk int, term string, df long")
+        return empty_frame(spark, "rk int, term string, df long")
     top = (
         d.filter(F.col("term").isin(cands))
         .orderBy(F.col("df").desc(), F.col("term").asc())
@@ -923,7 +924,7 @@ def match_phrase_prefix(docs: DataFrame, stem: list[str], prefix: str,
 
     completions = expand_prefix(docs, prefix, text_col)
     if not completions:
-        return docs.sparkSession.createDataFrame([], "rank int, doc_id long, score double")
+        return empty_frame(docs.sparkSession, "rank int, doc_id long, score double")
     eligible = None
     for c in completions:
         pm = phrase_match(docs, " ".join(stem + [c]), text_col=text_col).select("doc_id")
@@ -1151,7 +1152,7 @@ def wildcard_bm25(docs: DataFrame, pattern: str, k: int = 10,
 
     terms = expand_wildcard(docs, pattern, text_col)
     if not terms:
-        return docs.sparkSession.createDataFrame([], "rank int, doc_id long, score double")
+        return empty_frame(docs.sparkSession, "rank int, doc_id long, score double")
     return bm25_topk(docs, terms, k=k, text_col=text_col)
 
 
@@ -1181,7 +1182,7 @@ def regexp_bm25(docs: DataFrame, pattern: str, k: int = 10,
 
     terms = expand_regexp(docs, pattern, text_col)
     if not terms:
-        return docs.sparkSession.createDataFrame([], "rank int, doc_id long, score double")
+        return empty_frame(docs.sparkSession, "rank int, doc_id long, score double")
     return bm25_topk(docs, terms, k=k, text_col=text_col)
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .incremental import append_index
+from .portable import empty_frame
 
 
 def stream_corpus(
@@ -370,7 +371,7 @@ def stream_percolate(
     )
     q.awaitTermination()
     if not acc:
-        return spark.createDataFrame([], "doc_id long, qid string")
+        return empty_frame(spark, "doc_id long, qid string")
     return spark.createDataFrame(sorted(acc), "doc_id long, qid string")
 
 
@@ -471,7 +472,7 @@ def stream_minhash_dedup(
     q.awaitTermination()
     uniq = sorted(set(acc))
     if not uniq:
-        return spark.createDataFrame([], "doc_a long, doc_b long, jaccard double")
+        return empty_frame(spark, "doc_a long, doc_b long, jaccard double")
     return spark.createDataFrame(uniq, "doc_a long, doc_b long, jaccard double")
 
 

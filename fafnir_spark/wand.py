@@ -54,7 +54,7 @@ from pyspark.sql.window import Window
 
 from .catalog import Catalog
 from .codec import delta_decode, f64_decode, varint_decode
-from .portable import lit_doubles
+from .portable import empty_frame, lit_doubles
 
 RESULT_SCHEMA = "qid string, doc_id long, raw_score double"
 
@@ -309,11 +309,9 @@ def _rank_merge(per_part: DataFrame, k: int, by=("qid",), decimals: int = 6) -> 
 
 def _no_hits(spark: SparkSession, k: int, decimals: int = 6) -> DataFrame:
     """The (qid, rank, doc_id, score) answer of a query set none of whose
-    terms is in the dictionary: the rank merge over a ``WHERE false``
-    relation, which the optimizer folds to an empty LocalRelation, so
-    collecting it submits no job (``createDataFrame([])`` would run one)."""
-    none = spark.sql("SELECT CAST(NULL AS STRING) AS qid, CAST(NULL AS BIGINT) AS doc_id, "
-                     "CAST(NULL AS DOUBLE) AS raw_score WHERE false")
+    terms is in the dictionary: the rank merge over an ``empty_frame``, so
+    collecting it submits no job."""
+    none = empty_frame(spark, RESULT_SCHEMA)
     return _rank_merge(none, k, decimals=decimals)
 
 

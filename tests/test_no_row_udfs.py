@@ -33,3 +33,10 @@ def test_collect_only_for_small_relations():
     for path, src in _sources().items():
         if DRIVER_LOOP.search(src):
             assert path.name in allowed, f"driver-side collect loop in {path.name}"
+
+
+def test_segment_reads_go_through_the_catalog():
+    # a spark.read.parquet of a segment dir infers its schema with a Spark
+    # job; Catalog.read_segments / read_table read the declared schema
+    for name in ("build.py", "incremental.py", "wand.py", "federate.py"):
+        assert "spark.read.parquet(" not in (PKG / name).read_text(), name

@@ -755,7 +755,8 @@ def test_indexed_query_plan_shape(spark, idx, bulk_idx, path, bulk):
     tombstone table), the doc_part exchange(s) feeding it plus the qid
     exchange of the rank merge, whose final sort runs in one partition (no
     range exchange); and one Searcher.search(...).collect() submits a fixed
-    number of jobs (dictionary lookup + the AQE stages)."""
+    number of jobs (dictionary lookup + the AQE stages; reading the
+    dictionary's declared schema costs none)."""
     import re
 
     from fafnir_spark.wand import Searcher
@@ -768,7 +769,7 @@ def test_indexed_query_plan_shape(spark, idx, bulk_idx, path, bulk):
         searcher = Searcher(spark, root)
         n_jobs = _jobs_of(spark, f"plan_shape_{bulk}",
                           lambda: searcher.search(q, k=10).collect())
-        assert n_jobs == (6 if bulk else 5), n_jobs
+        assert n_jobs == (5 if bulk else 4), n_jobs
         df = searcher.search(q, k=10)
     plan = _final_plan(df)
     assert plan.count("FlatMapGroupsInPandas") == (0 if bulk else 1), plan
@@ -803,3 +804,35 @@ def test_absent_terms_skip_the_scan(spark, idx, bulk_idx, bulk):
     assert df.schema == searcher.search({"q": ["merge"]}, k=5).schema
     assert run_queries(spark, root, q, k=5).schema == run_queries(
         spark, root, {"q": ["merge"]}, k=5).schema
+
+
+EMPTY_SCHEMAS = [
+    "rank int, doc_id long, score double",
+    "qid string, rank int, doc_id long, score double",
+    "qid string, doc_id long, raw_score double",
+    "rk int, term string, df long",
+    "doc_id long, qid string",
+    "doc_a long, doc_b long, jaccard double",
+]
+
+
+@pytest.mark.parametrize("i", range(len(EMPTY_SCHEMAS)))
+def test_empty_frame_collects_without_a_job(spark, i):
+    """Every schema an empty result is returned with: no job on collect,
+    and the schema ``createDataFrame([], schema)`` gave."""
+    from fafnir_spark.portable import empty_frame
+
+    schema = EMPTY_SCHEMAS[i]
+    df = empty_frame(spark, schema)
+    assert _jobs_of(spark, f"empty_frame_{i}", df.collect) == 0
+    assert df.collect() == []
+    assert df.schema == spark.createDataFrame([], schema).schema
+
+
+def test_query_without_terms_returns_jobless_empty(spark):
+    from fafnir_spark.query_ext import wildcard_bm25
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    df = wildcard_bm25(docs, "zzq*never")
+    assert _jobs_of(spark, "wildcard_empty", df.collect) == 0
+    assert df.schema == spark.createDataFrame([], EMPTY_SCHEMAS[0]).schema
