@@ -29,6 +29,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .esql import _split_toplevel
+
 _ID = r"[A-Za-z_][A-Za-z0-9_]*"
 _NUM = r"-?\d+(?:\.\d+)?"
 _STR = r"'(?:[^'\\]*)'"
@@ -52,24 +54,6 @@ def _lit(tok: str):
 
 def _lit_sql(tok: str) -> str:
     return tok.strip()
-
-
-def _split_items(s: str) -> list[str]:
-    """Split SELECT items on commas NOT inside parentheses
-    (round(avg(x), 6) must stay one item)."""
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return out
 
 
 class _Item:
@@ -202,7 +186,7 @@ def _parse(query: str) -> dict:
     if not m:
         raise EsSqlError(f"unsupported ES SQL shape: {query!r}")
     p = m.groupdict()
-    items = [_parse_item(x) for x in _split_items(p["items"])]
+    items = [_parse_item(x) for x in _split_toplevel(p["items"])]
     group = ([c.strip() for c in p["group"].split(",")] if p["group"]
              else [])
     for g in group:

@@ -2535,13 +2535,7 @@ def graph_pagerank(orders: DataFrame, lineitem: DataFrame,
     from pyspark.sql.window import Window
 
     d = float(damping)
-    edges = (
-        orders.join(lineitem,
-                    orders["o_orderkey"] == lineitem["l_orderkey"])
-        .select(F.col("o_custkey").alias("src"),
-                (F.lit(10**9) + F.col("l_suppkey")).alias("dst"))
-        .distinct()
-    )
+    edges = _order_graph(orders, lineitem)
     nodes = (edges.select(F.col("src").alias("node"))
              .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct())
@@ -2596,13 +2590,7 @@ def graph_pagerank_personalized(orders: DataFrame, lineitem: DataFrame,
         raise ValueError("personalized pagerank needs a non-empty seed set")
     d = float(damping)
     sl = sorted({int(s) for s in seeds})
-    edges = (
-        orders.join(lineitem,
-                    orders["o_orderkey"] == lineitem["l_orderkey"])
-        .select(F.col("o_custkey").alias("src"),
-                (F.lit(10**9) + F.col("l_suppkey")).alias("dst"))
-        .distinct()
-    )
+    edges = _order_graph(orders, lineitem)
     nodes = (edges.select(F.col("src").alias("node"))
              .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct())
@@ -2704,13 +2692,7 @@ def graph_hits(orders: DataFrame, lineitem: DataFrame,
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    edges = (
-        orders.join(lineitem,
-                    orders["o_orderkey"] == lineitem["l_orderkey"])
-        .select(F.col("o_custkey").alias("src"),
-                (F.lit(10**9) + F.col("l_suppkey")).alias("dst"))
-        .distinct()
-    )
+    edges = _order_graph(orders, lineitem)
     h = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("s"))
     a = None
@@ -2838,22 +2820,13 @@ def graph_bfs_hops(orders: DataFrame, lineitem: DataFrame,
     Scale shape: every shuffle is keyed by a node id; the dist relation
     is ≤|nodes| rows; no collect, no driver-side frontier. Output is the
     bounded histogram (hops, n_nodes), ordered."""
-    edges = (
-        orders.join(lineitem,
-                    orders["o_orderkey"] == lineitem["l_orderkey"])
-        .select(F.col("o_custkey").alias("src"),
-                (F.lit(10**9) + F.col("l_suppkey")).alias("dst"))
-        .distinct()
-    )
     # sym is referenced once per hop round — without a lineage cut each
     # round replans the orders⋈lineitem+distinct+union subtree (max_hops
     # copies; at scale that is max_hops duplicate joins). No repartition
     # pin here: the per-round edge⋈dist join is ~1:1, not exploding, and
     # an alternating A/B showed the pinned extra shuffle costing ~0.4s at
     # sf0.1 (the link_prediction pin rule applies to FAN-OUT stages only).
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.localCheckpoint()
+    sym = _order_graph_sym(orders, lineitem).localCheckpoint()
     nodes = sym.select(F.col("src").alias("node")).distinct()
     dist = (nodes.filter(F.col("node").isin([int(s) for s in seeds]))
             .select("node", F.lit(0).cast("long").alias("d")))
@@ -3268,17 +3241,24 @@ def holt_linear(events: DataFrame) -> DataFrame:
             .orderBy("day"))
 
 
-def _order_graph_sym(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """The symmetric customer↔supplier order graph (src, dst) — the edge
-    derivation shared by graph_bfs_hops / graph_kcore / link_prediction
-    (suppliers offset by 10^9 into the shared node-id space)."""
-    edges = (
+def _order_graph(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """The distinct customer→supplier order-graph edges (src, dst) — the
+    edge derivation every order-graph kernel shares (suppliers offset by
+    10^9 into the shared node-id space)."""
+    return (
         orders.join(lineitem,
                     orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(F.col("o_custkey").alias("src"),
                 (F.lit(10**9) + F.col("l_suppkey")).alias("dst"))
         .distinct()
     )
+
+
+def _order_graph_sym(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """The symmetric customer↔supplier order graph (src, dst): both
+    directions of every ``_order_graph`` edge (graph_bfs_hops /
+    graph_kcore / link_prediction)."""
+    edges = _order_graph(orders, lineitem)
     return edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 

@@ -45,6 +45,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .esql import _split_toplevel
+
 _RANGE_OPS = {"gte": "__ge__", "gt": "__gt__", "lte": "__le__", "lt": "__lt__"}
 
 
@@ -1094,23 +1096,6 @@ def _rt_condition(s: str):
     return thunk, f"{fld} {'<>' if op == '!=' else op} {vs}"
 
 
-def _rt_split_args(s: str) -> list[str]:
-    """Split on top-level commas (CASE nests in the else arm)."""
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return out
-
-
 _RT_FUNCS = {"abs": "abs", "length": "length", "lower": "lower",
              "upper": "upper"}
 _RT_ARITH = {
@@ -1127,7 +1112,7 @@ def compile_runtime_script(s: str):
     s = s.strip()
     m = re.fullmatch(r"CASE\((.+)\)", s, re.DOTALL)
     if m:
-        args = _rt_split_args(m.group(1))
+        args = _split_toplevel(m.group(1))
         if len(args) != 3:
             raise RuntimeFieldError(f"CASE takes 3 args: {s!r}")
         cond_t, cond_s = _rt_condition(args[0])

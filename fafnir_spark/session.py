@@ -50,10 +50,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # UI off by default (test noise); SPARK_GRAFT_UI=1 enables the
-        # REST metrics endpoint for peak-shuffle evidence (scale_sanity)
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false")
+        # no web UI: per-job metrics are read from the status store
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -11,12 +11,19 @@ divergence, while sub-1e-12 residue only appears on non-rounded analytic
 columns (percentile interpolation and the like).
 
 Usage: python scripts/driver_sim.py [sf_dir] [only_query ...]
+
+Runs cannot overlap: ``entry`` rebuilds the fixed
+``<tempdir>/fafnir_entry_idx``, so a run holds an flock on
+``<tempdir>/fafnir_entry_idx.lock`` and a second concurrent run exits 3.
 """
 
 from __future__ import annotations
 
+import fcntl
 import importlib
+import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -61,11 +68,28 @@ def compare(got_rows, got_cols, want_df):
     return True, f"{len(got)} rows"
 
 
+def lock_entry_index(tmp: str | None = None):
+    """Hold an exclusive flock on ``<tmp>/fafnir_entry_idx.lock`` for the
+    life of the process (the OS drops it when the process dies, so it never
+    goes stale), or exit 3 if another run holds it."""
+    path = os.path.join(tmp or tempfile.gettempdir(), "fafnir_entry_idx.lock")
+    f = open(path, "w")
+    try:
+        fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        f.close()
+        print(f"REFUSED: another driver_sim run holds {path}; "
+              "run them one after the other", file=sys.stderr)
+        sys.exit(3)
+    return f
+
+
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
     from fafnir_spark.session import get_spark
 
+    lock = lock_entry_index()  # noqa: F841 - held until the process exits
     m = importlib.import_module("__spark_entry__")
     spark = get_spark("driver-sim", cores=8)
     con = duckdb.connect()

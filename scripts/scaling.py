@@ -72,33 +72,19 @@ def _scale_sanity_section() -> str:
         return ""
     with open(p) as f:
         s = json.load(f)
-    return f"""## Scale sanity — {s['docs']:,}-document build (scripts/scale_sanity.py)
+    ops = s.pop("ops", {})
+    table = "".join(
+        f"| {name} | {o['rows']:,} | {o['sec']} | {o['shuffle_write_mb']} | "
+        f"{o['task_skew']} | {o['max_stage_skew']} |\n" for name, o in ops.items())
+    if table:
+        table = ("\n| op | rows | sec | shuffle write MB | task skew | max stage skew |\n"
+                 "|---|---|---|---|---|---|\n" + table)
+    return f"""## Scale sanity — {s['docs']:,}-document build (scripts/scale.py 1m)
 
 ```json
 {json.dumps(s)}
 ```
-
-Throughput holds from the scaling corpus to {s['docs']:,} docs
-({s['docs_per_sec']:,} docs/sec on {s['cpus']} cores); compressed payload
-{s['bytes_per_posting']} bytes/posting; {s['queries']}-query BM25 batch over
-{s['postings']:,} postings in {s['query_batch_s']}s.
-{_dedup_row(s)}"""
-
-
-def _dedup_row(s: dict) -> str:
-    if "minhash_lsh_s" not in s:
-        return ""
-    return f"""
-Dedup scale pass over {s.get('dedup_docs', s['docs']):,} docs of the same
-corpus (post round-5 polarity fix — big buckets anti-joined, candidates
-verified by scoped Jaccard): MinHash+LSH {s['minhash_docs_per_sec']}
-docs/sec portable-hash / {s.get('minhash_fast_docs_per_sec', '?')} docs/sec
-xxhash64 ({s['minhash_pairs']} pairs >= threshold), winnowing overlap
-{s['winnow_docs_per_sec']} docs/sec ({s['winnow_pairs']} pairs). Peak
-single-stage shuffle {s.get('peak_stage_shuffle_write_mb', '?')} MB write /
-{s.get('peak_stage_shuffle_read_mb', '?')} MB read across the whole run —
-the candidate-verify join dominates; no stage concentrates the corpus on
-one reducer.
+{table}
 """
 
 
@@ -205,7 +191,7 @@ measurement windows = {best['eff_raw']:.2f} ({best['date']}, tput
 
 "Probe-valid" = the leading capacity probe showed an uncontended window
 (probe_eff >= {PROBE_VALID_EFF}; the quiet-window criterion is probe8 <= 12.5s via
-scripts/scaling_when_quiet.sh). Delivered CPU on this shared box swings
+scripts/when_quiet.sh). Delivered CPU on this shared box swings
 >2x between windows and contention is one-sided, so only probe-valid
 windows are trusted for the raw number; every run (valid or not) is in
 BENCH/history.jsonl with its probe_eff.

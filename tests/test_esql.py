@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from fafnir_spark.esql import EsqlError, esql
+from fafnir_spark.esql import EsqlError, _split_toplevel, esql
 from tests.conftest import SF_DIR
 
 
@@ -302,6 +302,14 @@ def test_pipe_split_respects_strings_and_parens(spark, events):
         | FORK (WHERE event_type == "a|b" | LIMIT 1) (LIMIT 2)
     """, {"events": events}).collect()
     assert {r["_fork"] for r in rows} == {"fork2"}  # no 'a|b' rows exist
+
+
+def test_split_toplevel_keeps_nested_parens_and_trailing_item():
+    """The one comma splitter es_sql and runtime fields share: commas inside
+    nested parentheses stay in their item; a trailing comma yields an
+    empty last item."""
+    assert _split_toplevel("g, round(avg(x), 6) AS a,") == [
+        "g", " round(avg(x), 6) AS a", ""]
 
 
 def test_stats_where_per_agg_filter(spark, events):
