@@ -696,16 +696,17 @@ def terms_enum_indexed(spark, index_root: str, prefix: str, size: int = 10,
             .orderBy(F.col("term").asc()).limit(size))
 
 
-def significant_text(docs: DataFrame, query_terms: list[str], k: int = 10,
-                     text_col: str = "text") -> DataFrame:
-    """ES significant_text aggregation: JLH like significant_terms, but
-    with ``filter_duplicate_text`` semantics — the FOREGROUND is deduped
-    by exact text (md5, keep min doc_id) before counting, so one piece of
-    boilerplate repeated across matching docs can't fabricate
-    significance. Background stats stay corpus-wide (duplicates and all),
-    exactly as ES computes them. Plan adds ONE md5 groupBy over the
-    matched slice (bounded by matches); everything else is the
-    significant_terms shape. (rk, term, fg_df, bg_df, jlh)."""
+def _significant(docs: DataFrame, query_terms: list[str], k: int, text_col: str,
+                 name: str, score, foreground=None) -> DataFrame:
+    """The foreground/background relation the significant-terms ops share:
+    one tf relation feeds both sides. The foreground is the docs matching
+    any query term (``foreground(base, matched)`` may narrow them); its
+    per-term df is a semi-join on that doc set, the background df is the
+    standard dictionary aggregation, and the scalars fg_n / n_docs ride
+    along as broadcast 1-row relations. ``score`` is the heuristic over
+    (fg_df, bg_df, fg_n, n_docs); query terms are excluded, and the top k
+    by it (ties by term) finish as orderBy().limit(k) plus the rank
+    window. (rk, term, fg_df, bg_df, <name>)."""
     from pyspark.sql.window import Window
 
     from .query import doc_term_freqs, term_dfs
@@ -714,13 +715,9 @@ def significant_text(docs: DataFrame, query_terms: list[str], k: int = 10,
     q = docs.sparkSession.createDataFrame([(t,) for t in qterms], "term string")
     base = docs.select(F.col("doc_id"), F.col(text_col).alias("__text"))
     tf = doc_term_freqs(base, "doc_id", "__text")
-    matched = tf.join(F.broadcast(q), "term").select("doc_id").distinct()
-    fg_docs = (
-        base.join(matched, "doc_id", "left_semi")
-        .groupBy(F.md5("__text").alias("__h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
+    fg_docs = tf.join(F.broadcast(q), "term").select("doc_id").distinct()
+    if foreground is not None:
+        fg_docs = foreground(base, fg_docs)
     fg_n = fg_docs.agg(F.count(F.lit(1)).alias("fg_n"))
     bg_n = base.agg(F.count(F.lit(1)).alias("n_docs"))
     fg_df = (
@@ -733,22 +730,45 @@ def significant_text(docs: DataFrame, query_terms: list[str], k: int = 10,
         .crossJoin(F.broadcast(fg_n))
         .crossJoin(F.broadcast(bg_n))
         .filter(~F.col("term").isin(qterms))
-        .withColumn("__fg_rate", F.col("fg_df") / F.col("fg_n"))
-        .withColumn("__bg_rate", F.col("bg_df") / F.col("n_docs"))
-        .withColumn(
-            "jlh",
-            F.round(
-                (F.col("__fg_rate") - F.col("__bg_rate"))
-                * (F.col("__fg_rate") / F.col("__bg_rate")),
-                6,
-            ),
-        )
+        .select("term", "fg_df", "bg_df", F.round(score, 6).alias(name))
     )
-    top = scored.orderBy(F.col("jlh").desc(), F.col("term").asc()).limit(k)
-    w = Window.orderBy(F.col("jlh").desc(), F.col("term").asc())
-    return top.withColumn("rk", F.row_number().over(w)).select(
-        "rk", "term", "fg_df", "bg_df", "jlh"
-    ).orderBy("rk")
+    top = scored.orderBy(F.col(name).desc(), F.col("term").asc()).limit(k)
+    w = F.row_number().over(Window.orderBy(F.col(name).desc(), F.col("term").asc()))
+    return (
+        top.withColumn("rk", w)
+        .select("rk", "term", "fg_df", "bg_df", name)
+        .orderBy("rk")
+    )
+
+
+def _jlh():
+    """jlh = (fg_rate - bg_rate) * (fg_rate / bg_rate)."""
+    fg_rate = F.col("fg_df") / F.col("fg_n")
+    bg_rate = F.col("bg_df") / F.col("n_docs")
+    return (fg_rate - bg_rate) * (fg_rate / bg_rate)
+
+
+def significant_text(docs: DataFrame, query_terms: list[str], k: int = 10,
+                     text_col: str = "text") -> DataFrame:
+    """ES significant_text aggregation: JLH like significant_terms, but
+    with ``filter_duplicate_text`` semantics — the FOREGROUND is deduped
+    by exact text (md5, keep min doc_id) before counting, so one piece of
+    boilerplate repeated across matching docs can't fabricate
+    significance. Background stats stay corpus-wide (duplicates and all),
+    exactly as ES computes them. Plan adds ONE md5 groupBy over the
+    matched slice (bounded by matches); everything else is the
+    significant_terms shape. (rk, term, fg_df, bg_df, jlh)."""
+
+    def first_per_text(base, matched):
+        return (
+            base.join(matched, "doc_id", "left_semi")
+            .groupBy(F.md5("__text").alias("__h"))
+            .agg(F.min("doc_id").alias("doc_id"))
+            .select("doc_id")
+        )
+
+    return _significant(docs, query_terms, k, text_col, "jlh", _jlh(),
+                        foreground=first_per_text)
 
 
 def significant_terms(docs: DataFrame, query_terms: list[str], k: int = 10,
@@ -760,49 +780,9 @@ def significant_terms(docs: DataFrame, query_terms: list[str], k: int = 10,
     where fg_rate = fg_df/fg_n and bg_rate = df/n_docs. Query terms are
     excluded from the output. (rk, term, fg_df, bg_df, jlh).
 
-    Plan: one tf relation feeds both sides — the foreground restriction is
-    a semi-join on the matched-doc set, the background df is the standard
-    dictionary aggregation; scalar fg_n/n_docs ride along as broadcast
-    1-row relations. Top-k via orderBy().limit(k)."""
-    from pyspark.sql.window import Window
-
-    from .query import doc_term_freqs, term_dfs
-
-    qterms = sorted(set(query_terms))
-    q = docs.sparkSession.createDataFrame([(t,) for t in qterms], "term string")
-    base = docs.select(F.col("doc_id"), F.col(text_col).alias("__text"))
-    tf = doc_term_freqs(base, "doc_id", "__text")
-    matched = tf.join(F.broadcast(q), "term").select("doc_id").distinct()
-    fg_n = matched.agg(F.count(F.lit(1)).alias("fg_n"))
-    bg_n = base.agg(F.count(F.lit(1)).alias("n_docs"))
-    fg_df = (
-        tf.join(matched, "doc_id", "left_semi")
-        .groupBy("term").agg(F.count(F.lit(1)).alias("fg_df"))
-    )
-    bg_df = term_dfs(tf).select("term", F.col("df").alias("bg_df"))
-    scored = (
-        fg_df.join(bg_df, "term")
-        .crossJoin(F.broadcast(fg_n))
-        .crossJoin(F.broadcast(bg_n))
-        .filter(~F.col("term").isin(qterms))
-        .withColumn("__fg_rate", F.col("fg_df") / F.col("fg_n"))
-        .withColumn("__bg_rate", F.col("bg_df") / F.col("n_docs"))
-        .withColumn(
-            "jlh",
-            F.round(
-                (F.col("__fg_rate") - F.col("__bg_rate"))
-                * (F.col("__fg_rate") / F.col("__bg_rate")),
-                6,
-            ),
-        )
-    )
-    top = scored.orderBy(F.col("jlh").desc(), F.col("term").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("jlh").desc(), F.col("term").asc()))
-    return (
-        top.withColumn("rk", w)
-        .select("rk", "term", "fg_df", "bg_df", "jlh")
-        .orderBy("rk")
-    )
+    Plan: the shared ``_significant`` relation; top-k via
+    orderBy().limit(k)."""
+    return _significant(docs, query_terms, k, text_col, "jlh", _jlh())
 
 
 def top_hits_grouped(docs: DataFrame, terms: list[str], group_col: str,
@@ -2211,22 +2191,6 @@ def significant_terms_chi2(docs: DataFrame, query_terms: list[str], k: int = 10,
     one tf pass, foreground semi-join, broadcast scalars, orderBy·limit
     finish. All arithmetic in float64 with fixed operand order.
     (rk, term, fg_df, bg_df, chi2)."""
-    from pyspark.sql.window import Window
-
-    from .query import doc_term_freqs, term_dfs
-
-    qterms = sorted(set(query_terms))
-    q = docs.sparkSession.createDataFrame([(t,) for t in qterms], "term string")
-    base = docs.select(F.col("doc_id"), F.col(text_col).alias("__text"))
-    tf = doc_term_freqs(base, "doc_id", "__text")
-    matched = tf.join(F.broadcast(q), "term").select("doc_id").distinct()
-    fg_n = matched.agg(F.count(F.lit(1)).alias("fg_n"))
-    bg_n = base.agg(F.count(F.lit(1)).alias("n_docs"))
-    fg_df = (
-        tf.join(matched, "doc_id", "left_semi")
-        .groupBy("term").agg(F.count(F.lit(1)).alias("fg_df"))
-    )
-    bg_df = term_dfs(tf).select("term", F.col("df").alias("bg_df"))
     n11 = F.col("fg_df").cast("double")
     n1_ = F.col("fg_n").cast("double")
     n_1 = F.col("bg_df").cast("double")
@@ -2234,20 +2198,7 @@ def significant_terms_chi2(docs: DataFrame, query_terms: list[str], k: int = 10,
     d = n11 * (nn - n1_ - n_1 + n11) - (n1_ - n11) * (n_1 - n11)
     chi2 = nn * d * d / (n1_ * n_1 * (nn - n1_) * (nn - n_1))
     signed = F.when(n11 / n1_ >= n_1 / nn, chi2).otherwise(-chi2)
-    scored = (
-        fg_df.join(bg_df, "term")
-        .crossJoin(F.broadcast(fg_n))
-        .crossJoin(F.broadcast(bg_n))
-        .filter(~F.col("term").isin(qterms))
-        .select("term", "fg_df", "bg_df", F.round(signed, 6).alias("chi2"))
-    )
-    top = scored.orderBy(F.col("chi2").desc(), F.col("term").asc()).limit(k)
-    w = F.row_number().over(Window.orderBy(F.col("chi2").desc(), F.col("term").asc()))
-    return (
-        top.withColumn("rk", w)
-        .select("rk", "term", "fg_df", "bg_df", "chi2")
-        .orderBy("rk")
-    )
+    return _significant(docs, query_terms, k, text_col, "chi2", signed)
 
 
 def parse_simple_query_string(q: str) -> list[dict]:

@@ -1,7 +1,8 @@
-"""Continuous corpus ingestion: Structured Streaming → incremental appends.
+"""Continuous corpus ingestion and micro-batch analytics over Structured
+Streaming.
 
 The reference is a bounded-channel pipelined batch job (SURVEY.md §2.8:
-channels of 10k docs, buffer_unordered — /root/reference
+channels of 10k docs, buffer_unordered — the reference's
 src/bin/openmaptiles2mimir.rs:23,64-82) with no event-time semantics; its
 "streaming" is really continuous arrival + incremental indexing. The Spark
 translation: a file-source stream over the corpus directory, each
@@ -10,11 +11,38 @@ foreachBatch (exactly-once per batch id: a segment named for the batch is
 idempotent — re-running a batch overwrites the same segment, and the
 manifest publish is atomic).
 
-At scale the same code runs against a Kafka/Iceberg CDC source; only
-``readStream`` options change.
+Every op runs on the same plumbing, written once:
+
+- ``_read``: the one stream source (parquet files under a path, one file
+  per micro-batch unless the caller says otherwise). At scale the same
+  code runs against a Kafka/Iceberg CDC source; only ``_read``'s
+  ``readStream`` options change.
+- ``_start`` / ``_drain``: the foreachBatch sink with its checkpoint;
+  ``_drain`` triggers availableNow (drain what exists, stop) and waits.
+- ``_to_memory``: the memory sink of the stateful (watermarked, joined or
+  applyInPandasWithState) ops, drained the same way; returns the table.
+- ``_fold``: per batch, append the op's ``partial(batch)`` to
+  ``state_dir/<sub>`` (``_append``); after the drain, read the state back
+  (``_state``). An op then states only its partial, its state algebra and
+  its tail over the folded state.
+
+The state algebras, chosen by ``_fold``'s ``keys``:
+
+- stamp-keyed additive (``keys=(k, ...)``): sums and counts merge by
+  addition, so a replayed batch must count once. Each batch's rows carry
+  the batch id in ``_b``; the read keeps one row per ``keys + _b``.
+- union-closed distinct (``keys=()``): the state is a set (distinct
+  events, bottom-k hashes); union is idempotent, so no stamp is needed
+  and the read is ``distinct()``.
+- lattice (``keys=None``): min / max merges absorb a replayed partial,
+  so the state is read as it is and the tail's min / max does the merge.
+  stream_sampled_quantiles reads its sample this way too and keeps one
+  row per (group, key) itself.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +50,139 @@ from pyspark.sql import functions as F
 from .catalog import Catalog
 from .incremental import append_index
 from .portable import empty_frame
+
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+_DAY_US = 86_400_000_000
+
+
+def _read(spark: SparkSession, source_path: str, schema: str = EVENTS_SCHEMA,
+          max_files: int | None = 1) -> DataFrame:
+    """The stream source: parquet files under ``source_path`` (a dir or a
+    glob), at most ``max_files`` per micro-batch (None: no cap)."""
+    reader = spark.readStream.schema(schema)
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.parquet(source_path)
+
+
+def _start(stream: DataFrame, checkpoint_dir: str, step, available_now: bool = True):
+    """Run ``step(batch_df, batch_id)`` on every micro-batch; returns the
+    started query (availableNow stops it once the source is drained)."""
+    writer = stream.writeStream.foreachBatch(step).option(
+        "checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _drain(stream: DataFrame, checkpoint_dir: str, step) -> None:
+    """``_start`` and wait until every available batch is processed."""
+    _start(stream, checkpoint_dir, step).awaitTermination()
+
+
+def _to_memory(df: DataFrame, name: str, mode: str, checkpoint_dir: str) -> DataFrame:
+    """Drain a streaming result into the memory table ``name``."""
+    q = (
+        df.writeStream.format("memory").queryName(name).outputMode(mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    return df.sparkSession.table(name)
+
+
+def _append(part: DataFrame, path: str, bid: int | None = None) -> None:
+    """Append a batch's state rows; with ``bid`` each carries the stamp ``_b``."""
+    if bid is not None:
+        part = part.withColumn("_b", F.lit(int(bid)))
+    part.write.mode("append").parquet(path)
+
+
+def _state(spark: SparkSession, path: str, keys: tuple | None) -> DataFrame:
+    """Read a state dir back under its algebra (module docstring)."""
+    state = spark.read.parquet(path)
+    if keys is None:
+        return state
+    return state.dropDuplicates([*keys, "_b"]) if keys else state.distinct()
+
+
+def _fold(spark: SparkSession, source_path: str, checkpoint_dir: str, state_dir: str,
+          sub: str, partial, keys: tuple | None) -> DataFrame:
+    """Drain the event stream, appending ``partial(batch)`` to
+    ``state_dir/sub`` (stamped when ``keys`` is non-empty), and return the
+    state read back."""
+    path = os.path.join(state_dir, sub)
+    _drain(_read(spark, source_path), checkpoint_dir,
+           lambda df, bid: _append(partial(df), path, bid if keys else None))
+    return _state(spark, path, keys)
+
+
+def _day():
+    """The event's calendar day as 'yyyy-MM-dd'."""
+    return F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day")
+
+
+def _day_no(name: str):
+    """The event's day as a number of days since the epoch."""
+    return F.expr(f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {_DAY_US}").alias(name)
+
+
+def _us():
+    """Event time as microseconds since the epoch."""
+    return F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
+
+
+# ---- folds that two or more ops share; each op adds its own tail ----
+
+def _day_sums(spark, source_path, checkpoint_dir, state_dir, sub, part, out) -> DataFrame:
+    """Per-day value sums, additive and stamped, rounded once after the
+    merge. (day, <out>)."""
+    return _fold(
+        spark, source_path, checkpoint_dir, state_dir, sub,
+        lambda df: df.groupBy(_day()).agg(F.sum("value").alias(part)),
+        keys=("day",),
+    ).groupBy("day").agg(F.round(F.sum(part), 6).alias(out))
+
+
+def _day_counts(spark, source_path, checkpoint_dir, state_dir, sub) -> DataFrame:
+    """Per-day event counts, exact-integer additive. (d, x)."""
+    return _fold(
+        spark, source_path, checkpoint_dir, state_dir, sub,
+        lambda df: df.groupBy(_day_no("d")).agg(F.count(F.lit(1)).cast("long").alias("x")),
+        keys=("d",),
+    ).groupBy("d").agg(F.sum("x").cast("long").alias("x"))
+
+
+def _dow_cells(spark, source_path, checkpoint_dir, state_dir, sub) -> DataFrame:
+    """The event_type × weekday contingency counts, exact-integer
+    additive. (event_type, dow, o)."""
+    return _fold(
+        spark, source_path, checkpoint_dir, state_dir, sub,
+        lambda df: df.select(
+            "event_type",
+            F.expr("extract(dayofweek FROM cast(ts as timestamp))").cast("int").alias("dow"),
+        ).groupBy("event_type", "dow").agg(F.count(F.lit(1)).cast("long").alias("o")),
+        keys=("event_type", "dow"),
+    ).groupBy("event_type", "dow").agg(F.sum("o").cast("long").alias("o"))
+
+
+def _user_scores(spark, source_path, checkpoint_dir, state_dir, sub, target) -> DataFrame:
+    """Per-user event count (additive) and converter flag (a max lattice),
+    stamped. (user_id, cnt, buy)."""
+    return _fold(
+        spark, source_path, checkpoint_dir, state_dir, sub,
+        lambda df: df.groupBy("user_id").agg(
+            F.count(F.lit(1)).cast("long").alias("cnt"),
+            F.max(F.when(F.col("event_type") == target, 1).otherwise(0))
+            .cast("long").alias("buy"),
+        ),
+        keys=("user_id",),
+    ).groupBy("user_id").agg(
+        F.sum("cnt").cast("long").alias("cnt"), F.max("buy").cast("long").alias("buy"))
 
 
 def stream_corpus(
@@ -41,10 +202,6 @@ def stream_corpus(
     Returns the StreamingQuery. ``available_now=True`` drains what exists
     and stops (the testable mode); False runs continuously.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -61,10 +218,8 @@ def stream_corpus(
         ).withColumn("weight", F.lit(1.0))
         append_index(spark, docs, index_root, segment=seg, tokenizer=tokenizer)
 
-    writer = stream.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_read(spark, source_dir, schema, max_files_per_trigger),
+                  checkpoint_dir, sink, available_now)
 
 
 def stream_tumbling_counts(
@@ -87,12 +242,8 @@ def stream_tumbling_counts(
     # are interpreted in the session tz and date_format converts back with
     # the same tz, so the wall-clock window labels round-trip identically —
     # the oracle diverges only under a fractional-hour-offset session tz.
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
     agg = (
-        stream.withWatermark("ts", watermark)
+        _read(spark, source_path).withWatermark("ts", watermark)
         .groupBy(F.window(F.col("ts"), window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 6).alias("sum_value"))
         .select(
@@ -100,13 +251,7 @@ def stream_tumbling_counts(
             "event_type", "n", "sum_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _to_memory(agg, name, mode, checkpoint_dir)
 
 
 def stream_dedup_exact(
@@ -114,7 +259,7 @@ def stream_dedup_exact(
     source_path: str,
     checkpoint_dir: str,
     name: str,
-    schema: str = "doc_id long, text string, lang string, source string, n_chars long",
+    schema: str = DOCS_SCHEMA,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -127,12 +272,8 @@ def stream_dedup_exact(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_path)
-        .select(F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("content_hash"))
-    )
+    stream = _read(spark, source_path, schema).select(
+        F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("content_hash"))
 
     def fn(key, pdfs, state):
         min_doc = None
@@ -148,13 +289,7 @@ def stream_dedup_exact(
         fn, "content_hash string, doc_id long", "seen int",
         "append", GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _to_memory(out, name, "append", checkpoint_dir)
 
 
 def stream_sliding_counts(
@@ -170,23 +305,13 @@ def stream_sliding_counts(
     each event lands in window/slide overlapping windows). Complete mode
     over a drained source equals the batch sliding aggregation, so the
     same DuckDB oracle checks it."""
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
     agg = (
-        stream.withWatermark("ts", watermark)
+        _read(spark, source_path).withWatermark("ts", watermark)
         .groupBy(F.window(F.col("ts"), window, slide).alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"), "n")
     )
-    q = (
-        agg.writeStream.format("memory").queryName(name).outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _to_memory(agg, name, "complete", checkpoint_dir)
 
 
 def stream_session_counts(
@@ -203,12 +328,8 @@ def stream_session_counts(
     sessions only — the batch anchor is pipeline.session_window_agg, and
     equality over a drained multi-batch source is tested with a
     far-future filler batch that finalizes every session)."""
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
     agg = (
-        stream.withWatermark("ts", watermark)
+        _read(spark, source_path).withWatermark("ts", watermark)
         .groupBy(F.session_window(F.col("ts"), gap).alias("w"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -220,13 +341,7 @@ def stream_session_counts(
             "user_id", "n", "sum_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _to_memory(agg, name, "append", checkpoint_dir)
 
 
 def stream_cdc_apply(
@@ -246,10 +361,6 @@ def stream_cdc_apply(
     from .build import normalize_docs
     from .incremental import delete_docs, upsert_docs
 
-    stream = spark.readStream.schema(
-        "op string, doc_id long, text string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
     def apply_batch(batch_df, batch_id: int) -> None:
         ups = batch_df.filter(F.col("op") == "u").select("doc_id", "text")
         if ups.limit(1).count():
@@ -268,13 +379,8 @@ def stream_cdc_apply(
         if dels:
             delete_docs(spark, index_root, dels)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(_read(spark, source_path, "op string, doc_id long, text string"),
+           checkpoint_dir, apply_batch)
 
 
 def stream_zone_counts(
@@ -296,10 +402,7 @@ def stream_zone_counts(
     zones = spark.createDataFrame(
         ZONES, "zone_id int, zone_name string, lo double, hi double, center double"
     )
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
+    stream = _read(spark, source_path)
     agg = (
         stream.join(
             F.broadcast(zones),
@@ -308,13 +411,7 @@ def stream_zone_counts(
         .groupBy("zone_name")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
-        agg.writeStream.format("memory").queryName(name).outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _to_memory(agg, name, "complete", checkpoint_dir)
 
 
 def _require_fresh_checkpoint(checkpoint_dir: str, what: str) -> None:
@@ -324,8 +421,6 @@ def _require_fresh_checkpoint(checkpoint_dir: str, what: str) -> None:
     their rows from the result (partial output, not an error). Ops whose
     result is derived from persisted state (stream_hll_cardinality,
     stream_change_point) resume fine and don't take this guard."""
-    import os
-
     if os.path.isdir(checkpoint_dir) and os.listdir(checkpoint_dir):
         raise ValueError(
             f"{what}: checkpoint dir {checkpoint_dir!r} is non-empty — "
@@ -351,10 +446,6 @@ def stream_percolate(
     from .query_ext import percolate
 
     _require_fresh_checkpoint(checkpoint_dir, "stream_percolate")
-    stream = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
     # per-batch matches gathered driver-side: percolator OUTPUT is the
     # alert relation (bounded by matches, the thing a sink receives) —
     # the matching itself stays distributed inside percolate()
@@ -364,12 +455,7 @@ def stream_percolate(
         rows = percolate(df, queries).collect()
         acc.extend((r["doc_id"], r["qid"]) for r in rows)
 
-    q = (
-        stream.writeStream.foreachBatch(gather)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
+    _drain(_read(spark, source_path, DOCS_SCHEMA), checkpoint_dir, gather)
     if not acc:
         return empty_frame(spark, "doc_id long, qid string")
     return spark.createDataFrame(sorted(acc), "doc_id long, qid string")
@@ -407,18 +493,11 @@ def stream_minhash_dedup(
     batch pair set whenever no bucket ever exceeds the cap (asserted in
     tests; a bucket crossing the cap mid-stream keeps pairs batch mode
     would drop — streaming can't un-emit). (doc_a, doc_b, jaccard)."""
-    import os
-
     from .dedup import minhash_band_rows, ngram_jaccard_pairs
 
     _require_fresh_checkpoint(checkpoint_dir, "stream_minhash_dedup")
     docs_dir = os.path.join(state_dir, "docs")
     bands_dir = os.path.join(state_dir, "bands")
-
-    stream = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
     acc: list = []
 
     def step(df, bid):
@@ -427,15 +506,12 @@ def stream_minhash_dedup(
         # from the streaming batch df collapses to an empty degenerate
         # join (the foreachBatch self-join lineage trap); dropDuplicates
         # makes a checkpoint-replayed batch idempotent
-        df.select("doc_id", "text").withColumn("_b", F.lit(int(bid))) \
-            .write.mode("append").parquet(docs_dir)
+        _append(df.select("doc_id", "text"), docs_dir, bid)
         alld = spark.read.parquet(docs_dir).dropDuplicates(["doc_id"])
         new = alld.filter(F.col("_b") == int(bid))
         # bands of the NEW slice only — O(batch); prior bands come from
         # the persisted band state, never recomputed
-        minhash_band_rows(new, num_hashes, bands) \
-            .withColumn("_b", F.lit(int(bid))) \
-            .write.mode("append").parquet(bands_dir)
+        _append(minhash_band_rows(new, num_hashes, bands), bands_dir, bid)
         band_all = spark.read.parquet(bands_dir) \
             .dropDuplicates(["doc_id", "band_key"])
         band_new = band_all.filter(F.col("_b") == int(bid))
@@ -464,12 +540,7 @@ def stream_minhash_dedup(
         rows = ngram_jaccard_pairs(docs_cand, threshold, candidates=cand).collect()
         acc.extend((r["doc_a"], r["doc_b"], r["jaccard"]) for r in rows)
 
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
+    _drain(_read(spark, source_path, DOCS_SCHEMA), checkpoint_dir, step)
     uniq = sorted(set(acc))
     if not uniq:
         return empty_frame(spark, "doc_a long, doc_b long, jaccard double")
@@ -496,36 +567,23 @@ def stream_hll_cardinality(
 
     Batch-stamped register rows keep checkpoint replays idempotent (a
     replayed batch re-appends identical (col, idx, rho) rows — max absorbs
-    them). (col, n_empty, est_raw, est) — sketch-only output; exact counts
-    need the raw stream and are the batch path's audit column."""
-    import os
-
+    them; the state is a lattice, read without a dedupe). (col, n_empty,
+    est_raw, est) — sketch-only output; exact counts need the raw stream
+    and are the batch path's audit column."""
     from .sketches import hll_estimate_cols, hll_register_rows
 
     regs_dir = os.path.join(state_dir, "regs")
     rem_bits = 60 - p
 
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
     def step(df, bid):
         for c in sorted(val_cols):
-            hll_register_rows(df, c, p=p).select(
-                F.lit(c).alias("col"), "idx",
-                F.col("maxrho").alias("rho"), F.lit(int(bid)).alias("_b"),
-            ).write.mode("append").parquet(regs_dir)
+            _append(hll_register_rows(df, c, p=p).select(
+                F.lit(c).alias("col"), "idx", F.col("maxrho").alias("rho")),
+                regs_dir, bid)
 
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
+    _drain(_read(spark, source_path), checkpoint_dir, step)
     merged = (
-        spark.read.parquet(regs_dir)
+        _state(spark, regs_dir, None)
         .groupBy("col", "idx")
         .agg(F.max("rho").alias("maxrho"))
     )
@@ -552,41 +610,10 @@ def stream_change_point(
     |days|·|batches| partial rows (compactable by re-summing); batch
     stamps make checkpoint replays detectable. Same output contract (and
     oracle) as pipeline.change_point_agg."""
-    import os
-
     from .pipeline import change_point_from_buckets
 
-    buckets_dir = os.path.join(state_dir, "buckets")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy(
-                F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day")
-            )
-            .agg(F.sum("value").alias("partial"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(buckets_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(buckets_dir)
-        .dropDuplicates(["day", "_b"])
-        .groupBy("day")
-        .agg(F.round(F.sum("partial"), 6).alias("sum_value"))
-    )
-    return change_point_from_buckets(merged)
+    return change_point_from_buckets(_day_sums(
+        spark, source_path, checkpoint_dir, state_dir, "buckets", "partial", "sum_value"))
 
 
 def stream_downsample(
@@ -604,24 +631,13 @@ def stream_downsample(
     (same rounding, same oracle); state is bounded at |series·buckets|
     ·|batches| partial rows (compactable by re-merging); batch stamps
     make checkpoint replays detectable."""
-    import os
-
-    buckets_dir = os.path.join(state_dir, "buckets")
     secs = 3600 * interval_hours
 
-    def bucket_col():
+    def partial(df):
         td = F.col("ts").cast("timestamp").cast("double")
-        return (F.floor(td / F.lit(float(secs))) * F.lit(secs)).cast("long")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.select("event_type", bucket_col().alias("bucket_ts"),
-                      "value", "ts", "event_id")
+        bucket = (F.floor(td / F.lit(float(secs))) * F.lit(secs)).cast("long")
+        return (
+            df.select("event_type", bucket.alias("bucket_ts"), "value", "ts", "event_id")
             .groupBy("event_type", "bucket_ts")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("pn"),
@@ -630,20 +646,11 @@ def stream_downsample(
                 F.sum("value").alias("psum"),
                 F.max(F.struct("ts", "event_id", "value")).alias("plast"),
             )
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(buckets_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
     return (
-        spark.read.parquet(buckets_dir)
-        .dropDuplicates(["event_type", "bucket_ts", "_b"])
+        _fold(spark, source_path, checkpoint_dir, state_dir, "buckets", partial,
+              keys=("event_type", "bucket_ts"))
         .groupBy("event_type", "bucket_ts")
         .agg(
             F.sum("pn").cast("long").alias("n"),
@@ -674,16 +681,10 @@ def stream_interval_join(
     Drained via availableNow the result equals the batch interval join,
     so the DuckDB oracle checks it exactly. Returns the materialized
     (user_id, click_id, err_id) pair table."""
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
 
     def side(etype: str, id_alias: str, ts_alias: str, uid: str) -> DataFrame:
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(source_path)
+            _read(spark, source_path)
             .filter(F.col("event_type") == etype)
             .select(
                 F.col("event_id").alias(id_alias),
@@ -701,15 +702,8 @@ def stream_interval_join(
         & (F.col("err_ts") <= F.col("click_ts")
            + F.expr(f"INTERVAL {int(within_minutes)} MINUTES"))
     )
-    q = (
-        left.join(right, cond, "inner")
-        .select("user_id", "click_id", "err_id")
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    pairs = left.join(right, cond, "inner").select("user_id", "click_id", "err_id")
+    return _to_memory(pairs, name, "append", checkpoint_dir)
 
 
 def stream_cm_heavy_hitters(
@@ -731,48 +725,26 @@ def stream_cm_heavy_hitters(
     n_batches rows, compactable by re-summing; derived-from-state, so
     checkpoint resume is safe (no fresh-run guard needed). Returns
     (term, est, exact) top-k."""
-    import os
-
     from .sketches import cm_register_rows, cm_topk_from
     from .tokenizer import tokens_expr
 
     regs_dir = os.path.join(state_dir, "regs")
     terms_dir = os.path.join(state_dir, "terms")
 
-    stream = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
     def step(df, bid):
         toks = df.select(F.explode(tokens_expr("text")).alias("term"))
-        (
-            cm_register_rows(toks, "term", depth=depth, width=width)
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(regs_dir)
-        )
-        (
-            toks.groupBy("term")
-            .agg(F.count(F.lit(1)).cast("long").alias("partial"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(terms_dir)
-        )
+        _append(cm_register_rows(toks, "term", depth=depth, width=width), regs_dir, bid)
+        _append(toks.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("partial")),
+                terms_dir, bid)
 
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
+    _drain(_read(spark, source_path, DOCS_SCHEMA), checkpoint_dir, step)
     regs = (
-        spark.read.parquet(regs_dir)
-        .dropDuplicates(["j", "bucket", "_b"])
+        _state(spark, regs_dir, ("j", "bucket"))
         .groupBy("j", "bucket")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
     exact = (
-        spark.read.parquet(terms_dir)
-        .dropDuplicates(["term", "_b"])
+        _state(spark, terms_dir, ("term",))
         .groupBy("term")
         .agg(F.sum("partial").cast("long").alias("exact"))
     )
@@ -795,42 +767,25 @@ def stream_sampled_quantiles(
     rows whose portable 60-bit key hash falls under 2^60/2^shift and
     appends them to parquet state. The sample is a pure row predicate, so
     it is closed under union AND idempotent under checkpoint replay — a
-    replayed batch re-appends identical rows and the read-side distinct
-    absorbs them. The drained state is EXACTLY the batch sample, so
-    streaming quantiles == batch sampled quantiles bit-for-bit (same
-    exact-percentile interpolation over the same rows), with state
+    replayed batch re-appends identical rows and the read-side dedupe on
+    (group, key) absorbs them. The drained state is EXACTLY the batch
+    sample, so streaming quantiles == batch sampled quantiles bit-for-bit
+    (same exact-percentile interpolation over the same rows), with state
     bounded at p·n rows no matter how long the stream runs.
 
     Unlike the batch op there is no exact-percentile audit column — that
     would require unbounded raw-row state, which is the thing the sketch
     exists to avoid. (group, n_sample, q<q>_est...), group asc."""
-    import os
-
     from .portable import hash60
 
-    samp_dir = os.path.join(state_dir, "sample")
     thr = (1 << 60) >> shift
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (df.filter(hash60(F.col(key_col).cast("string")) < thr)
-           .select(F.col(group_col).alias("grp"),
-                   F.col(key_col).alias("key"),
-                   F.col(val_col).alias("val"))
-           .write.mode("append").parquet(samp_dir))
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = spark.read.parquet(samp_dir).dropDuplicates(["grp", "key"])
+    merged = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "sample",
+        lambda df: df.filter(hash60(F.col(key_col).cast("string")) < thr).select(
+            F.col(group_col).alias("grp"), F.col(key_col).alias("key"),
+            F.col(val_col).alias("val")),
+        keys=None,
+    ).dropDuplicates(["grp", "key"])
     est_aggs = [
         F.round(F.expr(f"percentile(val, {q!r})"), 6).alias(f"q{int(q * 100)}_est")
         for q in qs
@@ -860,42 +815,17 @@ def stream_anomaly_hourly(
     bounded at |day·hour buckets|·|batches| partial rows (compactable by
     re-summing); batch stamps make checkpoint replays detectable. Same
     output contract (and oracle) as pipeline.anomaly_hourly."""
-    import os
-
     from .pipeline import anomaly_from_hour_counts
 
     _require_fresh_checkpoint(checkpoint_dir, "stream_anomaly_hourly")
-    buckets_dir = os.path.join(state_dir, "hour_buckets")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy(
-                F.date_format("ts", "yyyy-MM-dd").alias("day"),
-                F.hour("ts").cast("long").alias("hour"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("partial"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(buckets_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(buckets_dir)
-        .dropDuplicates(["day", "hour", "_b"])
-        .groupBy("day", "hour")
-        .agg(F.sum("partial").cast("long").alias("n"))
-    )
+    merged = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "hour_buckets",
+        lambda df: df.groupBy(
+            F.date_format("ts", "yyyy-MM-dd").alias("day"),
+            F.hour("ts").cast("long").alias("hour"),
+        ).agg(F.count(F.lit(1)).cast("long").alias("partial")),
+        keys=("day", "hour"),
+    ).groupBy("day", "hour").agg(F.sum("partial").cast("long").alias("n"))
     return anomaly_from_hour_counts(merged, k=k)
 
 
@@ -912,40 +842,19 @@ def stream_transform_pivot(
     only at the fold). State is bounded at |users|·|batches| partial rows
     (compactable by re-merging); batch stamps make checkpoint replays
     detectable. Same output contract (and oracle) as transform_pivot."""
-    import os
-
     _require_fresh_checkpoint(checkpoint_dir, "stream_transform_pivot")
-    buckets_dir = os.path.join(state_dir, "user_partials")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy("user_id")
-            .agg(
+    return (
+        _fold(
+            spark, source_path, checkpoint_dir, state_dir, "user_partials",
+            lambda df: df.groupBy("user_id").agg(
                 F.count(F.lit(1)).cast("long").alias("pn"),
                 F.count(F.when(F.col("event_type") == "error", F.lit(1)))
                 .cast("long").alias("pe"),
                 F.sum("value").alias("pv"),
                 F.max("ts").alias("pt"),
-            )
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(buckets_dir)
+            ),
+            keys=("user_id",),
         )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    return (
-        spark.read.parquet(buckets_dir)
-        .dropDuplicates(["user_id", "_b"])
         .groupBy("user_id")
         .agg(
             F.sum("pn").cast("long").alias("n_events"),
@@ -974,37 +883,12 @@ def stream_hdr_percentiles(
     (octaves · 2^sub_bits) · |batches| partial rows; batch stamps make
     checkpoint replays idempotent (dropDuplicates on (e, sub, _b)).
     Same output contract (and oracle) as sketches.hdr_percentiles."""
-    import os
-
     from .sketches import hdr_buckets, hdr_percentiles_from_buckets
 
-    buckets_dir = os.path.join(state_dir, "hdr_buckets")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            hdr_buckets(df, "value", sub_bits)
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(buckets_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(buckets_dir)
-        .dropDuplicates(["e", "sub", "_b"])
-        .groupBy("e", "sub")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    merged = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "hdr_buckets",
+        lambda df: hdr_buckets(df, "value", sub_bits), keys=("e", "sub"),
+    ).groupBy("e", "sub").agg(F.sum("cnt").cast("long").alias("cnt"))
     return hdr_percentiles_from_buckets(merged, pcts, sub_bits)
 
 
@@ -1022,40 +906,10 @@ def stream_moving_ewma(
     answer. State is bounded at |days| · |batches| partial rows; batch
     stamps make checkpoint replays idempotent. Same output contract (and
     oracle) as pipeline.moving_ewma."""
-    import os
-
     from .pipeline import ewma_from_buckets
 
-    buckets_dir = os.path.join(state_dir, "ewma_buckets")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy(F.date_format(F.date_trunc("day", F.col("ts")),
-                                     "yyyy-MM-dd").alias("day"))
-            .agg(F.sum("value").alias("part"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(buckets_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(buckets_dir)
-        .dropDuplicates(["day", "_b"])
-        .groupBy("day")
-        .agg(F.round(F.sum("part"), 6).alias("sum_value"))
-    )
-    return ewma_from_buckets(merged)
+    return ewma_from_buckets(_day_sums(spark, source_path, checkpoint_dir, state_dir,
+                                       "ewma_buckets", "part", "sum_value"))
 
 
 def stream_active_users(
@@ -1069,38 +923,13 @@ def stream_active_users(
     (day, user_id) rows and appends them to parquet state — set union is
     idempotent AND commutative, so the read-side distinct over the state
     IS the batch relation regardless of batch boundaries or checkpoint
-    replays (the stream_sampled_quantiles union-closed rule; no batch
-    stamps needed). The shared tail (pipeline.active_users_from_distinct)
-    gives the batch answer exactly. Same oracle as rolling_active_users."""
-    import os
-
+    replays (the union-closed algebra; no batch stamps needed). The
+    shared tail (pipeline.active_users_from_distinct) gives the batch
+    answer exactly. Same oracle as rolling_active_users."""
     from .pipeline import active_users_from_distinct
 
-    day_us = 86_400_000_000
-    du_dir = os.path.join(state_dir, "day_users")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, _bid):
-        (
-            df.select(
-                F.expr(f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {day_us}")
-                .alias("day"), "user_id")
-            .distinct()
-            .write.mode("append").parquet(du_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    du = spark.read.parquet(du_dir).distinct()
+    du = _fold(spark, source_path, checkpoint_dir, state_dir, "day_users",
+               lambda df: df.select(_day_no("day"), "user_id").distinct(), keys=())
     return active_users_from_distinct(du, window_days)
 
 
@@ -1118,45 +947,21 @@ def stream_rfm_segments(
     rounded ONCE post-merge) and the shared scoring tail
     (pipeline.rfm_from_per_user) gives the batch answer. Batch stamps
     make checkpoint replays idempotent. Same oracle as rfm_segments."""
-    import os
-
     from .pipeline import rfm_from_per_user
 
-    pu_dir = os.path.join(state_dir, "rfm_per_user")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.filter(F.col("event_type") == "purchase")
-            .select("user_id",
-                    F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-                    "value")
-            .groupBy("user_id")
-            .agg(F.max("us").alias("last_us"),
-                 F.count(F.lit(1)).cast("long").alias("freq"),
-                 F.sum("value").alias("val"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(pu_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    per_user = (
-        spark.read.parquet(pu_dir)
-        .dropDuplicates(["user_id", "_b"])
+    per_user = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "rfm_per_user",
+        lambda df: df.filter(F.col("event_type") == "purchase")
+        .select("user_id", _us(), "value")
         .groupBy("user_id")
-        .agg(F.max("last_us").alias("last_us"),
-             F.sum("freq").cast("long").alias("freq"),
-             F.round(F.sum("val"), 6).alias("monetary"))
+        .agg(F.max("us").alias("last_us"),
+             F.count(F.lit(1)).cast("long").alias("freq"),
+             F.sum("value").alias("val")),
+        keys=("user_id",),
+    ).groupBy("user_id").agg(
+        F.max("last_us").alias("last_us"),
+        F.sum("freq").cast("long").alias("freq"),
+        F.round(F.sum("val"), 6).alias("monetary"),
     )
     return rfm_from_per_user(per_user, buckets)
 
@@ -1181,39 +986,15 @@ def stream_funnel(
     partials. The shared tail (pipeline.funnel_steps over the
     reconstructed relation) gives the batch answer exactly — same oracle
     as funnel_steps."""
-    import os
-
     from .pipeline import funnel_steps
 
-    ev_dir = os.path.join(state_dir, "funnel_events")
     step_list = [str(s) for s in steps]
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, _bid):
-        (
-            df.filter(F.col("event_type").isin(step_list))
-            .select("user_id", "event_type",
-                    F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
-            .distinct()
-            .write.mode("append").parquet(ev_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    ev = (
-        spark.read.parquet(ev_dir).distinct()
-        .select("user_id", "event_type",
-                F.timestamp_micros(F.col("us")).alias("ts"))
-    )
+    ev = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "funnel_events",
+        lambda df: df.filter(F.col("event_type").isin(step_list))
+        .select("user_id", "event_type", _us()).distinct(),
+        keys=(),
+    ).select("user_id", "event_type", F.timestamp_micros(F.col("us")).alias("ts"))
     return funnel_steps(ev, steps=steps, window_h=window_h)
 
 
@@ -1234,39 +1015,16 @@ def stream_attribution(
     union-closed distinct state, replay-idempotent, no batch stamps).
     The shared tail (pipeline.attribution over the reconstructed
     relation) gives the batch answer exactly — same oracle as batch."""
-    import os
-
     from .pipeline import attribution
 
-    ev_dir = os.path.join(state_dir, "attr_events")
     types = [str(conversion)] + [str(c) for c in channels]
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, _bid):
-        (
-            df.filter(F.col("event_type").isin(types))
-            .select("user_id", "event_id", "event_type",
-                    F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
-            .distinct()
-            .write.mode("append").parquet(ev_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    ev = (
-        spark.read.parquet(ev_dir).distinct()
-        .select("user_id", "event_id", "event_type",
-                F.timestamp_micros(F.col("us")).alias("ts"))
-    )
+    ev = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "attr_events",
+        lambda df: df.filter(F.col("event_type").isin(types))
+        .select("user_id", "event_id", "event_type", _us()).distinct(),
+        keys=(),
+    ).select("user_id", "event_id", "event_type",
+             F.timestamp_micros(F.col("us")).alias("ts"))
     return attribution(ev, conversion=conversion, channels=channels,
                        window_h=window_h)
 
@@ -1283,41 +1041,13 @@ def stream_theil_sen(
     the shared tail (pipeline.theil_sen_from_buckets) runs the pairwise-
     slope medians over the merged |days|-row bucket relation. Same
     output contract (and oracle) as pipeline.theil_sen_trend."""
-    import os
-
     from .pipeline import theil_sen_from_buckets
 
-    day_us = 86_400_000_000
-    buckets_dir = os.path.join(state_dir, "ts_buckets")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy(F.expr(
-                f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {day_us}")
-                .alias("d"))
-            .agg(F.sum("value").alias("part"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(buckets_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(buckets_dir)
-        .dropDuplicates(["d", "_b"])
-        .groupBy("d")
-        .agg(F.round(F.sum("part"), 6).alias("v"))
-    )
+    merged = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "ts_buckets",
+        lambda df: df.groupBy(_day_no("d")).agg(F.sum("value").alias("part")),
+        keys=("d",),
+    ).groupBy("d").agg(F.round(F.sum("part"), 6).alias("v"))
     return theil_sen_from_buckets(merged)
 
 
@@ -1338,44 +1068,18 @@ def stream_survival_km(
     max-lattice over t1) and the shared estimator tail
     (pipeline.km_from_spans) gives the batch answer exactly — same
     DuckDB oracle as survival_km."""
-    import os
-
     from .pipeline import km_from_spans
 
-    span_dir = os.path.join(state_dir, "km_spans")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.select(
-                "user_id",
-                F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-                "event_type")
-            .groupBy("user_id")
-            .agg(F.min("us").alias("t0"),
-                 F.min(F.when(F.col("event_type") == event_type,
-                              F.col("us"))).alias("tp"),
-                 F.max("us").alias("t1"))
-            .write.mode("append").parquet(span_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    per = (
-        spark.read.parquet(span_dir)
+    per = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "km_spans",
+        lambda df: df.select("user_id", _us(), "event_type")
         .groupBy("user_id")
-        .agg(F.min("t0").alias("t0"), F.min("tp").alias("tp"),
-             F.max("t1").alias("t1"))
-    )
+        .agg(F.min("us").alias("t0"),
+             F.min(F.when(F.col("event_type") == event_type, F.col("us"))).alias("tp"),
+             F.max("us").alias("t1")),
+        keys=None,
+    ).groupBy("user_id").agg(
+        F.min("t0").alias("t0"), F.min("tp").alias("tp"), F.max("t1").alias("t1"))
     end = per.agg(F.max("t1").alias("t_end"))
     spans = per.crossJoin(F.broadcast(end)).select(
         "user_id", "t0", "tp", "t_end")
@@ -1395,41 +1099,14 @@ def stream_autocorrelation(
     IS the batch daily series and the shared tail
     (pipeline.acf_from_daily) gives the batch answer exactly — same
     DuckDB oracle as autocorrelation."""
-    import os
-
     from .pipeline import acf_from_daily
 
-    day_dir = os.path.join(state_dir, "acf_days")
-    day_us = 86_400_000_000
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.select(F.expr(f"unix_micros(cast(ts as timestamp)) "
-                             f"DIV {day_us}").alias("day"))
-            .groupBy("day")
-            .agg(F.count(F.lit(1)).cast("long").alias("x"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(day_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    x = (
-        spark.read.parquet(day_dir)
-        .dropDuplicates(["day", "_b"])
-        .groupBy("day")
-        .agg(F.sum("x").cast("long").alias("x"))
-    )
+    x = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "acf_days",
+        lambda df: df.select(_day_no("day")).groupBy("day")
+        .agg(F.count(F.lit(1)).cast("long").alias("x")),
+        keys=("day",),
+    ).groupBy("day").agg(F.sum("x").cast("long").alias("x"))
     return acf_from_daily(x, max_lag)
 
 
@@ -1456,34 +1133,18 @@ def stream_kmv_cardinality(
     (group, est_distinct, k) — sketch-only output; the exact distinct
     count needs the raw stream and is the batch path's audit column
     (same convention as stream_hll_cardinality)."""
-    import os
-
     from .portable import hash60
     from .sketches import kmv_bottomk, kmv_estimate
 
-    hashes_dir = os.path.join(state_dir, "bottomk")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        dh = df.select(
+    hashes = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "bottomk",
+        lambda df: kmv_bottomk(df.select(
             F.col(group_col).alias("grp"),
             hash60(F.col(val_col).cast("string")).alias("h"),
-        ).distinct()
-        kmv_bottomk(dh, k).write.mode("append").parquet(hashes_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
+        ).distinct(), k),
+        keys=(),
     )
-    q.awaitTermination()
-
-    folded = kmv_bottomk(spark.read.parquet(hashes_dir).distinct(), k)
-    return (kmv_estimate(folded, k)
+    return (kmv_estimate(kmv_bottomk(hashes, k), k)
             .select(F.col("grp").alias(group_col), "est_distinct",
                     F.lit(k).cast("long").alias("k"))
             .orderBy(group_col))
@@ -1503,44 +1164,18 @@ def stream_sprt_ab(
     shared pipeline.sprt_from_day_counts tail computes the identical
     LLR/decision table — bit-for-bit equal to batch, so the oracle IS
     the batch SQL."""
-    import os
-
     from .pipeline import sprt_from_day_counts
 
-    day_us = 86_400_000_000
-    counts_dir = os.path.join(state_dir, "sprt_counts")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy(F.expr(
-                f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {day_us}")
-                .alias("d"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.sum(F.when(F.col("event_type") == event_type, 1)
-                       .otherwise(0)).cast("long").alias("sc"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(counts_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(counts_dir)
-        .dropDuplicates(["d", "_b"])
-        .groupBy("d")
-        .agg(F.sum("n").cast("long").alias("n"),
-             F.sum("sc").cast("long").alias("sc"))
-    )
+    merged = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "sprt_counts",
+        lambda df: df.groupBy(_day_no("d")).agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum(F.when(F.col("event_type") == event_type, 1).otherwise(0))
+            .cast("long").alias("sc"),
+        ),
+        keys=("d",),
+    ).groupBy("d").agg(F.sum("n").cast("long").alias("n"),
+                       F.sum("sc").cast("long").alias("sc"))
     return sprt_from_day_counts(merged)
 
 
@@ -1555,43 +1190,10 @@ def stream_chi2_independence(
     additive state; the shared pipeline.chi2_from_cells tail recomputes
     marginals/expected/contributions from the merged ≤|cells| relation —
     bit-for-bit equal to batch (oracle = the batch SQL)."""
-    import os
-
     from .pipeline import chi2_from_cells
 
-    cells_dir = os.path.join(state_dir, "chi2_cells")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.select(
-                "event_type",
-                F.expr("extract(dayofweek FROM cast(ts as timestamp))")
-                .cast("int").alias("dow"))
-            .groupBy("event_type", "dow")
-            .agg(F.count(F.lit(1)).cast("long").alias("o"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(cells_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(cells_dir)
-        .dropDuplicates(["event_type", "dow", "_b"])
-        .groupBy("event_type", "dow")
-        .agg(F.sum("o").cast("long").alias("o"))
-    )
-    return chi2_from_cells(merged)
+    return chi2_from_cells(_dow_cells(spark, source_path, checkpoint_dir, state_dir,
+                                      "chi2_cells"))
 
 
 def stream_holt_winters(
@@ -1604,40 +1206,10 @@ def stream_holt_winters(
     state (batch stamps + dropDuplicates, rounded ONCE post-merge — the
     stream_theil_sen algebra), then the shared
     pipeline.holt_winters_from_buckets fold. Oracle = the batch SQL."""
-    import os
-
     from .pipeline import holt_winters_from_buckets
 
-    sums_dir = os.path.join(state_dir, "hw_sums")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy(F.date_format(F.date_trunc("day", F.col("ts")),
-                                     "yyyy-MM-dd").alias("day"))
-            .agg(F.sum("value").alias("part"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(sums_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(sums_dir)
-        .dropDuplicates(["day", "_b"])
-        .groupBy("day")
-        .agg(F.round(F.sum("part"), 6).alias("x"))
-    )
-    return holt_winters_from_buckets(merged)
+    return holt_winters_from_buckets(_day_sums(
+        spark, source_path, checkpoint_dir, state_dir, "hw_sums", "part", "x"))
 
 
 def stream_ewma_control_chart(
@@ -1650,42 +1222,10 @@ def stream_ewma_control_chart(
     EXACT-INTEGER additive state; the shared
     pipeline.ewma_chart_from_day_counts tail is bit-identical to batch
     (oracle = the batch SQL)."""
-    import os
-
     from .pipeline import ewma_chart_from_day_counts
 
-    day_us = 86_400_000_000
-    counts_dir = os.path.join(state_dir, "ewma_counts")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy(F.expr(
-                f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {day_us}")
-                .alias("d"))
-            .agg(F.count(F.lit(1)).cast("long").alias("x"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(counts_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(counts_dir)
-        .dropDuplicates(["d", "_b"])
-        .groupBy("d")
-        .agg(F.sum("x").cast("long").alias("x"))
-    )
-    return ewma_chart_from_day_counts(merged)
+    return ewma_chart_from_day_counts(_day_counts(
+        spark, source_path, checkpoint_dir, state_dir, "ewma_counts"))
 
 
 def stream_page_hinkley(
@@ -1697,42 +1237,10 @@ def stream_page_hinkley(
     """Streaming Page-Hinkley: exact-integer additive day counts; the
     shared pipeline.page_hinkley_from_day_counts tail is bit-identical
     to batch (oracle = the batch SQL)."""
-    import os
-
     from .pipeline import page_hinkley_from_day_counts
 
-    day_us = 86_400_000_000
-    counts_dir = os.path.join(state_dir, "ph_counts")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy(F.expr(
-                f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {day_us}")
-                .alias("d"))
-            .agg(F.count(F.lit(1)).cast("long").alias("x"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(counts_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(counts_dir)
-        .dropDuplicates(["d", "_b"])
-        .groupBy("d")
-        .agg(F.sum("x").cast("long").alias("x"))
-    )
-    return page_hinkley_from_day_counts(merged)
+    return page_hinkley_from_day_counts(_day_counts(
+        spark, source_path, checkpoint_dir, state_dir, "ph_counts"))
 
 
 def stream_gains_deciles(
@@ -1746,42 +1254,10 @@ def stream_gains_deciles(
     (event count additive, converter flag a max lattice — the
     stream_rfm_segments algebra); shared pipeline.gains_from_user_scores
     tail, oracle = the batch SQL."""
-    import os
-
     from .pipeline import gains_from_user_scores
 
-    users_dir = os.path.join(state_dir, "gains_users")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy("user_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"),
-                 F.max(F.when(F.col("event_type") == target, 1)
-                       .otherwise(0)).cast("long").alias("buy"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(users_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(users_dir)
-        .dropDuplicates(["user_id", "_b"])
-        .groupBy("user_id")
-        .agg(F.sum("cnt").cast("long").alias("cnt"),
-             F.max("buy").cast("long").alias("buy"))
-    )
-    return gains_from_user_scores(merged)
+    return gains_from_user_scores(_user_scores(
+        spark, source_path, checkpoint_dir, state_dir, "gains_users", target))
 
 
 def stream_mutual_information(
@@ -1794,43 +1270,10 @@ def stream_mutual_information(
     additive cell state as stream_chi2_independence, with the
     pipeline.mi_from_cells tail — bit-identical to batch (oracle = the
     batch SQL)."""
-    import os
-
     from .pipeline import mi_from_cells
 
-    cells_dir = os.path.join(state_dir, "mi_cells")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.select(
-                "event_type",
-                F.expr("extract(dayofweek FROM cast(ts as timestamp))")
-                .cast("int").alias("dow"))
-            .groupBy("event_type", "dow")
-            .agg(F.count(F.lit(1)).cast("long").alias("o"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(cells_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(cells_dir)
-        .dropDuplicates(["event_type", "dow", "_b"])
-        .groupBy("event_type", "dow")
-        .agg(F.sum("o").cast("long").alias("o"))
-    )
-    return mi_from_cells(merged)
+    return mi_from_cells(_dow_cells(spark, source_path, checkpoint_dir, state_dir,
+                                    "mi_cells"))
 
 
 def stream_two_proportion_z(
@@ -1844,46 +1287,19 @@ def stream_two_proportion_z(
     are exact-integer additive state; shared
     pipeline.two_proportion_from_arm_counts tail — bit-identical to
     batch (oracle = the batch SQL)."""
-    import os
-
     from .portable import hash60
     from .pipeline import two_proportion_from_arm_counts
 
-    arms_dir = os.path.join(state_dir, "tpz_arms")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.select(
-                F.pmod(hash60(F.col("user_id").cast("string")), F.lit(2))
-                .cast("int").alias("g"),
-                F.when(F.col("event_type") == event_type, 1).otherwise(0)
-                .alias("s"))
-            .groupBy("g")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.sum("s").cast("long").alias("sc"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(arms_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(arms_dir)
-        .dropDuplicates(["g", "_b"])
-        .groupBy("g")
-        .agg(F.sum("n").cast("long").alias("n"),
-             F.sum("sc").cast("long").alias("sc"))
-    )
+    merged = _fold(
+        spark, source_path, checkpoint_dir, state_dir, "tpz_arms",
+        lambda df: df.select(
+            F.pmod(hash60(F.col("user_id").cast("string")), F.lit(2)).cast("int").alias("g"),
+            F.when(F.col("event_type") == event_type, 1).otherwise(0).alias("s"),
+        ).groupBy("g").agg(F.count(F.lit(1)).cast("long").alias("n"),
+                           F.sum("s").cast("long").alias("sc")),
+        keys=("g",),
+    ).groupBy("g").agg(F.sum("n").cast("long").alias("n"),
+                       F.sum("sc").cast("long").alias("sc"))
     return two_proportion_from_arm_counts(merged)
 
 
@@ -1898,39 +1314,7 @@ def stream_qini_uplift(
     (count additive, converter flag a max lattice); shared
     pipeline.qini_from_user_scores tail (the hash arm derives from
     user_id — no extra state). Oracle = the batch SQL."""
-    import os
-
     from .pipeline import qini_from_user_scores
 
-    users_dir = os.path.join(state_dir, "qini_users")
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).option("maxFilesPerTrigger", 1).parquet(source_path)
-
-    def step(df, bid):
-        (
-            df.groupBy("user_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"),
-                 F.max(F.when(F.col("event_type") == target, 1)
-                       .otherwise(0)).cast("long").alias("buy"))
-            .withColumn("_b", F.lit(int(bid)))
-            .write.mode("append").parquet(users_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-
-    merged = (
-        spark.read.parquet(users_dir)
-        .dropDuplicates(["user_id", "_b"])
-        .groupBy("user_id")
-        .agg(F.sum("cnt").cast("long").alias("cnt"),
-             F.max("buy").cast("long").alias("buy"))
-    )
-    return qini_from_user_scores(merged)
+    return qini_from_user_scores(_user_scores(
+        spark, source_path, checkpoint_dir, state_dir, "qini_users", target))

@@ -18,7 +18,10 @@ gap before the store can evict them. ``max_stage_skew`` adds the max/median
 task-time ratio over all of the op's stages (``task_skew`` covers the
 widest stage only).
 
-Writes ``BENCH/scale_<suite>.json``: the sizes, headline keys per op
+Writes ``BENCH/scale_<suite>.json`` for the full-size headline run (fraction 1
+at 16 cores) and ``BENCH/scale_<suite>_f<F>_c<cores>.json`` for any other, so
+a reduced run never overwrites the headline. The record holds the sizes,
+headline keys per op
 (``<op>_rows``, ``<op>_sec``, ``<op>_<size>_per_sec``, plus op extras such
 as recall or ``bytes_per_posting``) and ``ops``, the per-op records. The
 work dir is removed when the suite ends. Importing this module starts no
@@ -56,6 +59,7 @@ from fafnir_spark.wand import run_queries  # noqa: E402
 
 MIN_ROWS = 1000
 CENTROIDS = 64  # IVF centroids: constant, whatever the fraction
+HEADLINE_CPUS = 16  # cores behind the committed BENCH/scale_<suite>.json
 DIM = 64
 HOT = "hotskewterm"
 
@@ -483,6 +487,12 @@ def run_suite(spark, suite: str, fraction: float = 1.0, tmp: str | None = None) 
     return out
 
 
+def out_path(suite: str, fraction: float, cpus: int) -> str:
+    """Where a run's record goes: the plain name only for the headline run."""
+    tag = "" if (fraction, cpus) == (1.0, HEADLINE_CPUS) else f"_f{fraction:g}_c{cpus}"
+    return os.path.join(REPO, "BENCH", f"scale_{suite}{tag}.json")
+
+
 def main(argv=None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("suite", choices=sorted(SUITES))
@@ -494,14 +504,13 @@ def main(argv=None) -> None:
     # Python workers import fafnir_spark too, whatever the working dir
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
-    spark = get_spark(f"scale-{args.suite}",
-                      cores=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", HEADLINE_CPUS))
+    spark = get_spark(f"scale-{args.suite}", cores=cpus)
     try:
         out = run_suite(spark, args.suite, args.fraction)
     finally:
         spark.stop()
-    path = os.path.join(REPO, "BENCH", f"scale_{args.suite}.json")
-    with open(path, "w") as f:
+    with open(out_path(args.suite, args.fraction, cpus), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps({k: v for k, v in out.items() if k != "ops"}))
 

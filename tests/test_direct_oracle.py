@@ -1,8 +1,11 @@
-"""Index-free similarity queries of `__spark_entry__` vs their DuckDB oracles.
+"""`__spark_entry__` keys vs their DuckDB oracles, key by key.
 
-Runs every `queries()` key that goes through the shared direct
-statistics / BM25 / top-k code in `fafnir_spark.query` at sf0.001 and
-compares it with its `oracle_sql()` through the strict comparator the
+Runs at sf0.001 every `queries()` key that goes through the shared direct
+statistics / BM25 / top-k code in `fafnir_spark.query`, the keys of the
+shared foreground/background relation in `fafnir_spark.query_ext`
+(significant_text; significant_terms and its chi2 variant run in other
+test modules), and the stream ops no other test module covers, and
+compares each with its `oracle_sql()` through the strict comparator the
 simulator script uses (exact values after 6-decimal rounding, and the
 same int/float kind per column).
 """
@@ -26,6 +29,9 @@ KEYS = [
     "rank_feature", "rank_feature_log", "rank_feature_sigmoid",
     "field_value_factor", "distance_feature",
     "proximity_rescore", "search_api_rescore", "rescore_chain",
+    "significant_text",
+    "stream_sliding_window", "stream_zone_lookup", "stream_downsample",
+    "stream_anomaly_hourly", "stream_transform_pivot", "stream_theil_sen",
 ]
 
 

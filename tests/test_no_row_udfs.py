@@ -1,6 +1,7 @@
 """CI gate for BASELINE.json input_hint: vectorized pandas/Arrow UDFs only,
 no per-row Python in the engine (SURVEY.md §7 risk 4)."""
 
+import ast
 import pathlib
 import re
 
@@ -40,3 +41,16 @@ def test_segment_reads_go_through_the_catalog():
     # job; Catalog.read_segments / read_table read the declared schema
     for name in ("build.py", "incremental.py", "wand.py", "federate.py"):
         assert "spark.read.parquet(" not in (PKG / name).read_text(), name
+
+
+def test_stream_plumbing_lives_only_in_the_shared_helpers():
+    # every stream op reads, drains and stamps its state through the
+    # helpers at the top of streaming.py; a copy of that skeleton in an op
+    # is the code this pins out
+    helpers = {"_read", "_start", "_drain", "_to_memory", "_append"}
+    src = (PKG / "streaming.py").read_text()
+    funcs = [n for n in ast.parse(src).body if isinstance(n, ast.FunctionDef)]
+    for needle in ("spark.readStream", ".foreachBatch(", "awaitTermination",
+                   'withColumn("_b"'):
+        users = {f.name for f in funcs if needle in ast.get_source_segment(src, f)}
+        assert users and users <= helpers, (needle, sorted(users - helpers))

@@ -26,6 +26,16 @@ def test_scale_import_starts_no_spark():
     assert out.stdout.strip() == "9"
 
 
+def test_only_the_headline_scale_run_writes_the_plain_name():
+    from scripts.scale import HEADLINE_CPUS, out_path
+
+    bench = os.path.join(REPO, "BENCH")
+    assert out_path("1m", 1.0, HEADLINE_CPUS) == os.path.join(bench, "scale_1m.json")
+    assert out_path("1m", 0.05, 4) == os.path.join(bench, "scale_1m_f0.05_c4.json")
+    assert out_path("ann", 1.0, 4) == os.path.join(bench, "scale_ann_f1_c4.json")
+    assert out_path("ann", 0.5, HEADLINE_CPUS) == os.path.join(bench, "scale_ann_f0.5_c16.json")
+
+
 def test_every_scale_suite_records_per_op_group_stats(spark, tmp_path):
     from scripts import scale
 
