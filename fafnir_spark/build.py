@@ -29,6 +29,17 @@ Instead: shuffle on the group key, sort within partitions by
 detects group boundaries vectorized and carries a partial trailing group
 into the next batch. Same result, O(partitions) UDF invocations.
 
+**One write path:** every posting segment — a build shard, an append,
+a compaction, a reindex — is laid out by the same few helpers, so no
+caller restates the layout: ``_tokenize`` (sha256, passthrough metadata,
+the tokenizer UDF, the routed doc_part), ``_write_segment_pair`` (the
+doc_map + postings segments of one tokenized frame), ``_encode`` (THE
+(term, doc_part) encode exchange at pinned width), ``_write_postings``
+(the ``seg`` column, doc_part partitions, term-sorted files),
+``_write_dictionary``, ``_decode_blocks``/``_decoded`` (THE block decoder:
+posting blocks back to flat posting rows, tombstoned rows dropped — the
+input of every re-encode) and ``_stats_doc`` (THE corpus stats document).
+
 **Resumability:** the build runs in ``n_shards`` build shards, each an
 independent Spark job writing immutable segments + a checkpoint record with
 per-shard lineage and metrics (docs/sec, postings/sec, bytes compressed).
@@ -47,6 +58,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -55,7 +67,14 @@ from pyspark.sql import functions as F
 
 from . import B, K1
 from .catalog import Catalog
-from .codec import delta_encode, f64_encode, varint_encode
+from .codec import (
+    delta_decode,
+    f64_decode,
+    f64_encode,
+    positions_encode,
+    varint_decode,
+    varint_encode_segments,
+)
 from .tokenizer import TOKENIZERS
 
 POSTINGS_SCHEMA = (
@@ -67,14 +86,6 @@ POSTINGS_SCHEMA_POS = POSTINGS_SCHEMA + ", positions binary"
 
 META_COLS = ("repo", "path", "commit", "lang", "source", "content_sha256",
              "n_chars")
-
-
-def passthrough_schema(docs, passthrough: list[str]) -> str:
-    """DDL fragment for doc_map passthrough columns, typed from the SOURCE
-    schema — numeric metadata (e.g. n_chars) keeps its type and becomes a
-    doc-value column range filters can be served from."""
-    types = dict(docs.dtypes)
-    return "".join(f", {c} {types[c]}" for c in passthrough)
 
 
 def _tokenize_map_fn(
@@ -112,10 +123,6 @@ def _encode_sorted(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
     A 'positions' column (list of token indexes per posting), if present,
     is delta+varint packed per block (counts = the tfs already stored).
     """
-    from .codec import positions_encode
-
-    from .codec import varint_encode_segments
-
     with_pos = "positions" in pdf.columns
     term = pdf["term"].to_numpy()
     part = pdf["doc_part"].to_numpy()
@@ -253,6 +260,154 @@ def route_part_expr(routes: list, parts_per_route: int, routing_col: str) -> F.C
             + F.col("doc_part")).cast("int")
 
 
+@contextmanager
+def _tokenize(docs: DataFrame, tokenizer: str, n_parts: int, with_positions: bool,
+              routing: dict | None) -> Iterator[DataFrame]:
+    """The tokenized frame every writer indexes, persisted for the
+    ``with`` block (released even when a check or a write raises): (doc_id,
+    doc_part, dl, weight, terms, tfs[, positions]) plus the passthrough
+    metadata (META_COLS present in ``docs``, content_sha256 computed here),
+    so doc_map needs no join back to the source. ``routing`` (the
+    'routing' json) moves each route's pmod parts into its own disjoint
+    doc_part range — blocks become tenant-pure with NO encoder change, and
+    routing-scoped reads are plain doc_part partition pruning."""
+    docs = docs.withColumn("content_sha256", F.sha2(F.col("content"), 256))
+    meta = [(c, t) for c, t in docs.dtypes if c in META_COLS]
+    schema = (
+        "doc_id long, doc_part int, dl int, weight double, "
+        "terms array<string>, tfs array<int>"
+        + (", positions array<array<int>>" if with_positions else "")
+        # typed from the SOURCE schema: numeric metadata (e.g. n_chars)
+        # becomes a doc-value column range filters can be served from
+        + "".join(f", {c} {t}" for c, t in meta)
+    )
+    passthrough = [c for c, _ in meta]
+    out = docs.select("doc_id", "content", "weight", *passthrough).mapInPandas(
+        _tokenize_map_fn(tokenizer, n_parts, passthrough, with_positions), schema=schema)
+    if routing is not None:
+        out = out.withColumn("doc_part", route_part_expr(
+            routing["routes"], int(routing["parts_per_route"]), routing["routing_col"]))
+    out = out.persist()
+    try:
+        yield out
+    finally:
+        out.unpersist()
+
+
+def _write_segment_pair(spark: SparkSession, cat: Catalog, tokenized: DataFrame,
+                        seg: str, block_size: int, n_parts: int) -> None:
+    """The doc_map and postings segments ``seg`` of one tokenized frame.
+    doc_map rows carry their segment name so tombstones can be scoped per
+    segment (stable-id upsert: old row dead, same-id new row live)."""
+    cat.write_segment(tokenized.drop("terms", "tfs", "positions")
+                      .withColumn("seg", F.lit(seg)), "doc_map", seg)
+    arrays = [F.col("terms").alias("term"), F.col("tfs").alias("tf")]
+    if "positions" in tokenized.columns:
+        arrays.append(F.col("positions"))
+    flat = tokenized.select(
+        "doc_id", "doc_part", "dl", "weight", F.explode(F.arrays_zip(*arrays)).alias("z"),
+    ).select("doc_id", "doc_part", "dl", "weight", "z.*")
+    _write_postings(cat, seg, n_parts, _encode(spark, flat, block_size))
+
+
+def _encode(spark: SparkSession, flat: DataFrame, block_size: int) -> DataFrame:
+    """THE encode exchange: flat (term, doc_part, doc_id, tf, dl, weight
+    [, positions]) rows → posting blocks. The one shuffle keys (term,
+    doc_part); the explicit partition count pins the exchange width — AQE
+    would otherwise coalesce a small shuffle to ~2 tasks and serialize the
+    encode stage. (The dictionary needs no second shuffle: df/cf are
+    derived from the written blocks, dictionary_from_postings.)"""
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        flat.repartition(n_shuffle, "term", "doc_part")
+        .sortWithinPartitions("term", "doc_part", "doc_id")
+        .mapInPandas(_encode_partition_fn(block_size), schema=POSTINGS_SCHEMA_POS
+                     if "positions" in flat.columns else POSTINGS_SCHEMA)
+    )
+
+
+def _write_postings(cat: Catalog, seg: str, n_parts: int, blocks: DataFrame) -> str:
+    """Write posting ``blocks`` as segment ``seg``: one physical partition
+    per doc_part, files term-sorted, every row naming its segment (the
+    scope of keep_seg tombstones)."""
+    return cat.write_segment(
+        blocks.repartition(n_parts, "doc_part").withColumn("seg", F.lit(seg)),
+        "postings", seg, partition_by=["doc_part"], sort_within_by=["term"])
+
+
+def _write_dictionary(cat: Catalog, postings: DataFrame, seg: str) -> str:
+    """The (term, df, cf) segment ``seg`` of ``postings``, term-sorted."""
+    return cat.write_segment(dictionary_from_postings(postings), "dictionary", seg,
+                             sort_within_by=["term"])
+
+
+def _runs(bufs: pd.Series, counts: np.ndarray) -> np.ndarray:
+    """Delta-coded runs of ``counts`` values each, one buffer per run
+    group, → absolute int64 values: ONE delta_decode over the joined
+    buffers (LEB128 is self-delimiting, so it yields the running sum
+    across runs), minus the sum before each run's start (uint64
+    wraparound, as delta_decode)."""
+    cs = np.concatenate((np.zeros(1, np.uint64), delta_decode(b"".join(bufs))))
+    return (cs[1:] - cs[np.repeat(np.cumsum(counts) - counts, counts)]).astype(np.int64)
+
+
+def _decode_blocks(pdf: pd.DataFrame, tombstones=None) -> pd.DataFrame:
+    """THE block decoder: posting block rows → flat (term, doc_part,
+    doc_id, tf, dl, weight[, positions]) rows in block order, vectorized
+    over the whole batch. ``tombstones`` (wand._Tombstones) drops each
+    block's excluded ids, scoped by the block's ``seg``."""
+    n = pdf["n"].to_numpy(dtype=np.int64)
+    tf = varint_decode(b"".join(pdf["tfs"])).astype(np.int64)
+    weight = np.ones(len(tf))  # an empty weights blob decodes as ones
+    weight[np.repeat(pdf["weights"].map(len).to_numpy() > 0, n)] = f64_decode(
+        b"".join(pdf["weights"]))
+    flat = pd.DataFrame({
+        "term": np.repeat(pdf["term"].to_numpy(), n),
+        "doc_part": np.repeat(pdf["doc_part"].to_numpy(), n),
+        "doc_id": _runs(pdf["doc_ids"], n),
+        "tf": tf,
+        "dl": varint_decode(b"".join(pdf["dls"])).astype(np.int64),
+        "weight": weight,
+    })
+    if "positions" in pdf.columns:
+        flat["positions"] = np.split(_runs(pdf["positions"], tf), np.cumsum(tf)[:-1])
+    if tombstones is not None:
+        seg = np.repeat(pdf["seg"].to_numpy(), n)
+        keep = np.ones(len(flat), dtype=bool)
+        for s in pd.unique(pdf["seg"]):
+            rows = seg == s
+            keep[rows] = ~np.isin(flat["doc_id"].to_numpy()[rows],
+                                  tombstones.excluded_for(s))
+        flat = flat[keep]
+    return flat
+
+
+def _decoded(postings: DataFrame, tombstones=None) -> DataFrame:
+    """``postings`` decoded to flat rows, map-side (no shuffle)."""
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                yield _decode_blocks(pdf, tombstones)
+
+    return postings.mapInPandas(fn, schema=(
+        "term string, doc_part int, doc_id long, tf long, dl long, weight double"
+        + (", positions array<long>" if "positions" in postings.columns else "")))
+
+
+def _stats_doc(cat: Catalog, n_docs: int, sum_dl: int | None, n_parts: int,
+               block_size: int) -> dict:
+    """THE corpus stats document, written to the stats json (the manifest
+    meta carries the copy queries read). Exact integer sum_dl with avgdl =
+    sum_dl / n_docs: deterministic across partitionings and additively
+    mergeable by append_index."""
+    n_docs, sum_dl = int(n_docs), int(sum_dl or 0)
+    doc = {"n_docs": n_docs, "avgdl": sum_dl / n_docs if n_docs else 0.0,
+           "sum_dl": sum_dl, "n_parts": n_parts, "block_size": block_size,
+           "k1": K1, "b": B}
+    cat.write_json("stats", doc)
+    return doc
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -294,11 +449,9 @@ def build_index(
     collected once (<= ``max_routes``, the ES shard-count scale; null
     routing rejected) and persisted in the 'routing' json."""
     cat = Catalog(index_root)
-    docs = docs.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-    passthrough = [c for c in docs.columns if c in META_COLS]
-    routes: list | None = None
+    routing: dict | None = None
     if routing_col is not None:
-        if routing_col not in passthrough:
+        if routing_col not in META_COLS or routing_col not in docs.columns:
             raise ValueError(
                 f"routing_col {routing_col!r} must be a passthrough metadata "
                 f"column (one of {sorted(META_COLS)})")
@@ -312,24 +465,16 @@ def build_index(
             raise ValueError(
                 f"{len(routes)} distinct routing values exceeds max_routes="
                 f"{max_routes} — route on a coarser key")
+        routing = {"routing_col": routing_col, "routes": routes,
+                   "parts_per_route": n_parts}
 
     done = cat.read_json("checkpoints") or {"build_id": build_id, "shards": {}}
     if done.get("build_id") != build_id or not resume:
         done = {"build_id": build_id, "shards": {}}
 
-    tok_schema = (
-        "doc_id long, doc_part int, dl int, weight double, "
-        "terms array<string>, tfs array<int>"
-        + (", positions array<array<int>>" if with_positions else "")
-        + passthrough_schema(docs, passthrough)
-    )
-    tok_fn = _tokenize_map_fn(tokenizer, n_parts, passthrough, with_positions)
-    enc_fn = _encode_partition_fn(block_size)
-    postings_schema = POSTINGS_SCHEMA_POS if with_positions else POSTINGS_SCHEMA
-
     totals = {"docs": 0, "postings": 0, "bytes": 0, "secs": 0.0}
     for shard in range(n_shards):
-        key = str(shard)
+        key, seg = str(shard), f"{build_id}-{shard}"
         if key in done["shards"]:
             for m in ("docs", "postings", "bytes"):
                 totals[m] += done["shards"][key][m]
@@ -338,82 +483,30 @@ def build_index(
         part = docs if n_shards == 1 else docs.filter(
             F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)) == shard
         )
-        tokenized = part.select("doc_id", "content", "weight", *passthrough).mapInPandas(
-            tok_fn, schema=tok_schema
-        )
-        if routes is not None:
-            # routed layout: shift each route's pmod-parts into its own
-            # disjoint doc_part range — blocks become tenant-pure with NO
-            # encoder change, and routing-scoped reads are plain doc_part
-            # partition pruning
-            tokenized = tokenized.withColumn(
-                "doc_part", route_part_expr(routes, n_parts, routing_col))
-        tokenized = tokenized.persist()
-
-        # doc_map rows carry their segment name so tombstones can be scoped
-        # per segment (stable-id upsert: old row dead, same-id new row live)
-        cat.write_segment(
-            tokenized.drop("terms", "tfs", *(["positions"] if with_positions else []))
-            .withColumn("seg", F.lit(f"{build_id}-{shard}")),
-            "doc_map", f"{build_id}-{shard}",
-        )
-
-        zip_cols = [F.col("terms").alias("term"), F.col("tfs").alias("tf")]
-        out_cols = [F.col("z.term").alias("term"), F.col("z.tf").alias("tf")]
-        if with_positions:
-            zip_cols.append(F.col("positions").alias("positions"))
-            out_cols.append(F.col("z.positions").alias("positions"))
-        flat = tokenized.select(
-            "doc_id", "doc_part", "dl", "weight",
-            F.explode(F.arrays_zip(*zip_cols)).alias("z"),
-        ).select("doc_id", "doc_part", "dl", "weight", *out_cols)
-
-        # the ONE build shuffle: key (term, doc_part). Explicit partition
-        # count pins the exchange width — AQE would otherwise coalesce a
-        # small shuffle to ~2 tasks and serialize the encode stage.
-        # (The dictionary needs no second shuffle: df/cf are derived from
-        # the written posting blocks in finalize_index.)
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        postings = (
-            flat.repartition(n_shuffle, "term", "doc_part")
-            .sortWithinPartitions("term", "doc_part", "doc_id")
-            .mapInPandas(enc_fn, schema=postings_schema)
-            .repartition(n_parts, "doc_part")
-        )
-        cat.write_segment(
-            postings.withColumn("seg", F.lit(f"{build_id}-{shard}")),
-            "postings",
-            f"{build_id}-{shard}",
-            partition_by=["doc_part"],
-            sort_within_by=["term"],
-        )
-        tokenized.unpersist()
+        with _tokenize(part, tokenizer, n_parts, with_positions, routing) as tokenized:
+            _write_segment_pair(spark, cat, tokenized, seg, block_size, n_parts)
 
         # per-shard lineage + metrics from the *written* segments (no
         # recompute; north rule: docs/sec, postings/sec, bytes compressed
         # per task; fafnir analog: progress counters,
         # openmaptiles2mimir.rs:130-135)
-        n_docs = cat.read_segments(
-            spark, [cat.segment_dir("doc_map", f"{build_id}-{shard}")]).count()
-        byte_cols = (
-            F.sum(F.length("doc_ids")) + F.sum(F.length("tfs"))
-            + F.sum(F.length("dls")) + F.sum(F.length("weights"))
-        )
-        if with_positions:
-            byte_cols = byte_cols + F.sum(F.length("positions"))
+        n_docs = cat.read_segments(spark, [cat.segment_dir("doc_map", seg)]).count()
+        blobs = ["doc_ids", "tfs", "dls", "weights"] + (["positions"] if with_positions else [])
         pstats = (
-            cat.read_segments(spark, [cat.segment_dir("postings", f"{build_id}-{shard}")])
-            .agg(F.sum("n").alias("postings"), byte_cols.alias("bytes"))
+            cat.read_segments(spark, [cat.segment_dir("postings", seg)])
+            .agg(F.sum("n").alias("postings"),
+                 sum(F.sum(F.length(c)) for c in blobs).alias("bytes"))
             .collect()[0]
         )
         secs = time.time() - t0
+        n_post = int(pstats["postings"] or 0)
         rec = {
             "docs": n_docs,
-            "postings": int(pstats["postings"] or 0),
+            "postings": n_post,
             "bytes": int(pstats["bytes"] or 0),
             "secs": round(secs, 3),
             "docs_per_sec": round(n_docs / secs, 2) if secs else 0.0,
-            "postings_per_sec": round(int(pstats["postings"] or 0) / secs, 2) if secs else 0.0,
+            "postings_per_sec": round(n_post / secs, 2) if secs else 0.0,
         }
         done["shards"][key] = rec
         cat.write_json("checkpoints", done)
@@ -421,10 +514,8 @@ def build_index(
             totals[m] += rec[m]
         totals["secs"] += secs
 
-    if routes is not None:
-        cat.write_json("routing", {
-            "routing_col": routing_col, "routes": routes,
-            "parts_per_route": n_parts})
+    if routing is not None:
+        cat.write_json("routing", routing)
     finalize_index(spark, cat, build_id, n_shards, n_parts, block_size, with_positions)
     if compact_after:
         compact_index(spark, cat, block_size)
@@ -436,8 +527,6 @@ def dictionary_from_postings(postings: DataFrame) -> DataFrame:
     (decoded per block, partial-aggregated per partition). Replaces a full
     shuffle of the exploded (doc, term, tf) relation with a scan of the
     ~|vocab|·parts block rows."""
-    from .codec import varint_decode
-
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -487,12 +576,9 @@ def finalize_index(
     """Derive the global dictionary from written postings, compute stats,
     verify doc_id uniqueness, publish the snapshot."""
     post_segs = [cat.segment_dir("postings", f"{build_id}-{s}") for s in range(n_shards)]
-    dictionary = dictionary_from_postings(cat.read_segments(spark, post_segs))
-    cat.write_segment(dictionary, "dictionary", build_id, sort_within_by=["term"])
-
     dm_segs = [cat.segment_dir("doc_map", f"{build_id}-{s}") for s in range(n_shards)]
-    dm = cat.read_segments(spark, dm_segs)
-    stats = dm.agg(
+    dict_seg = _write_dictionary(cat, cat.read_segments(spark, post_segs), build_id)
+    stats = cat.read_segments(spark, dm_segs).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("doc_id").alias("n_ids"),
         F.sum("dl").alias("sum_dl"),
@@ -501,25 +587,9 @@ def finalize_index(
         raise ValueError(
             f"doc_id collision: {stats['n_docs'] - stats['n_ids']} duplicated ids"
         )
-    sum_dl = int(stats["sum_dl"] or 0)
-    stats_doc = {
-        "n_docs": stats["n_docs"],
-        # exact integer sum / count: deterministic across partitionings and
-        # additively mergeable by append_index (incremental stats)
-        "avgdl": (sum_dl / stats["n_docs"]) if stats["n_docs"] else 0.0,
-        "sum_dl": sum_dl,
-        "n_parts": n_parts,
-        "block_size": block_size,
-        "k1": K1,
-        "b": B,
-    }
-    cat.write_json("stats", stats_doc)
+    stats_doc = _stats_doc(cat, stats["n_docs"], stats["sum_dl"], n_parts, block_size)
     cat.publish(
-        {
-            "postings": [cat.segment_dir("postings", f"{build_id}-{s}") for s in range(n_shards)],
-            "dictionary": [cat.segment_dir("dictionary", build_id)],
-            "doc_map": dm_segs,
-        },
+        {"postings": post_segs, "dictionary": [dict_seg], "doc_map": dm_segs},
         meta={"build_id": build_id, "n_shards": n_shards, "n_parts": n_parts,
               "with_positions": with_positions, "stats": stats_doc},
     )
@@ -564,132 +634,38 @@ def compact_index(
     anti-join → re-encode through the build encode path); the id set is
     never collected to the driver, so a purge of any size compacts away.
     """
-    from .codec import delta_decode, f64_decode, varint_decode
+    from .wand import _Tombstones
 
     m = cat.read_manifest()
     postings = cat.read_table(spark, "postings")
-    with_pos = "positions" in postings.columns
-    n_parts = (m.get("meta") or {}).get("n_parts", 8)
-    ts_ids = np.array(sorted(tombstones), dtype=np.int64) if tombstones else None
-    ts_keep = [tombstones[int(i)] for i in ts_ids] if tombstones else None
-
-    def make_decode_flat():
-        from .codec import positions_decode
-
-        exc_cache: dict[str, np.ndarray] = {}
-
-        def exc_for(seg: str) -> np.ndarray:
-            if seg not in exc_cache:
-                exc_cache[seg] = np.sort(
-                    ts_ids[np.array([k != seg for k in ts_keep], dtype=bool)]
-                )
-            return exc_cache[seg]
-
-        def decode_flat(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids, tfs, dls, ws, terms, parts, pos = [], [], [], [], [], [], []
-            for r in pdf.itertuples(index=False):
-                d = delta_decode(r.doc_ids).astype(np.int64)
-                t = varint_decode(r.tfs).astype(np.int64)
-                dl = varint_decode(r.dls).astype(np.int64)
-                w = f64_decode(r.weights)
-                if not len(w):
-                    w = np.ones(len(d))
-                pl = (
-                    [p.astype(np.int64) for p in positions_decode(r.positions, t)]
-                    if with_pos else None
-                )
-                if ts_ids is not None:
-                    exc = exc_for(getattr(r, "seg", "") or "")
-                    if len(exc):
-                        keep = ~np.isin(d, exc)
-                        if not keep.all():
-                            d, t, dl, w = d[keep], t[keep], dl[keep], w[keep]
-                            if with_pos:
-                                pl = [p for p, k in zip(pl, keep) if k]
-                if not len(d):
-                    continue
-                ids.append(d)
-                tfs.append(t)
-                dls.append(dl)
-                ws.append(w)
-                terms.append(np.repeat(r.term, len(d)))
-                parts.append(np.repeat(r.doc_part, len(d)))
-                if with_pos:
-                    pos.extend(pl)
-            if not ids:
-                return pd.DataFrame()
-            cols = {
-                "term": np.concatenate(terms),
-                "doc_part": np.concatenate(parts),
-                "doc_id": np.concatenate(ids),
-                "tf": np.concatenate(tfs),
-                "dl": np.concatenate(dls),
-                "weight": np.concatenate(ws),
-            }
-            flat = pd.DataFrame(cols)
-            if with_pos:
-                flat["positions"] = pos
-            return flat.sort_values(["term", "doc_part", "doc_id"], kind="mergesort")
-
-        return decode_flat
-
-    out_schema = POSTINGS_SCHEMA_POS if with_pos else POSTINGS_SCHEMA
+    ts = _Tombstones(list(tombstones), tombstones.values()) if tombstones else None
     if bulk is not None:
         # two-phase merge: decode to flat rows → distributed anti-join on
-        # the bulk tombstone relation → re-encode via the shared carry
-        # protocol (the exact append-path encode exchange)
-        decode_flat = make_decode_flat()
-
-        def decode_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                flat = decode_flat(pdf)
-                if len(flat):
-                    yield flat
-
-        flat_schema = (
-            "term string, doc_part int, doc_id long, tf long, dl long, weight double"
-            + (", positions array<long>" if with_pos else "")
-        )
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        merged = (
-            postings.mapInPandas(decode_stream, schema=flat_schema)
-            .join(bulk.select("doc_id"), "doc_id", "left_anti")
-            .select("term", "doc_part", "doc_id", "tf", "dl", "weight",
-                    *(["positions"] if with_pos else []))
-            .repartition(n_shuffle, "term", "doc_part")
-            .sortWithinPartitions("term", "doc_part", "doc_id")
-            .mapInPandas(_encode_partition_fn(block_size), schema=out_schema)
-            .repartition(n_parts, "doc_part")
-        )
+        # the bulk tombstone relation → the shared encode exchange
+        blocks = _encode(spark, _decoded(postings, ts).join(
+            bulk.select("doc_id"), "doc_id", "left_anti"), block_size)
     else:
-        decode_flat = make_decode_flat()
-
         def merge_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # decode all blocks, flatten to postings, re-encode sorted runs.
-            # partitions are pre-grouped by (term, doc_part) and sorted, but a
-            # group's blocks may span batches → the shared _iter_group_runs
-            # carry protocol keeps block_ids unique per (term, doc_part).
+            # partitions are pre-grouped by (term, doc_part) and sorted by
+            # block_id, but a group's blocks may span batches → the shared
+            # _iter_group_runs carry protocol keeps block_ids unique per
+            # (term, doc_part); each run's blocks merge by doc_id
             for chunk in _iter_group_runs(batches):
-                flat = decode_flat(chunk)
+                flat = _decode_blocks(chunk, ts)
                 if len(flat):
-                    yield _encode_sorted(flat, block_size)
+                    yield _encode_sorted(flat.sort_values(
+                        ["term", "doc_part", "doc_id"], kind="mergesort"), block_size)
 
-        merged = (
+        blocks = (
             postings.repartition("term", "doc_part")
             .sortWithinPartitions("term", "doc_part", "block_id")
-            .mapInPandas(merge_batches, schema=out_schema)
-            .repartition(n_parts, "doc_part")
+            .mapInPandas(merge_batches, schema=POSTINGS_SCHEMA_POS
+                         if "positions" in postings.columns else POSTINGS_SCHEMA)
         )
     seg = "compacted-" + (m.get("snapshot_id") or "0")
-    cat.write_segment(
-        merged.withColumn("seg", F.lit(seg)),
-        "postings",
-        seg,
-        partition_by=["doc_part"],
-        sort_within_by=["term"],
-    )
     tables = dict(m["tables"])
-    tables["postings"] = [cat.segment_dir("postings", seg)]
+    tables["postings"] = [_write_postings(
+        cat, seg, (m.get("meta") or {}).get("n_parts", 8), blocks)]
     cat.publish(tables, meta=m.get("meta"))
 
 
@@ -716,7 +692,6 @@ def reindex(
     shuffle is the same (term, doc_part) encode exchange as build_index
     (pinned width against AQE coalesce); doc_map/dictionary rewrites are
     column-local copies."""
-    from .codec import delta_decode, f64_decode, positions_decode, varint_decode
     from .incremental import TOMBSTONE_TABLE
     from .wand import BULK_TOMBSTONE_TABLE
 
@@ -733,86 +708,22 @@ def reindex(
             "build_index(routing_col=...) from the corpus instead"
         )
     postings = scat.read_table(spark, "postings")
-    with_pos = "positions" in postings.columns
-
-    def decode_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, tfs, dls, ws, terms, pos = [], [], [], [], [], []
-            for r in pdf.itertuples(index=False):
-                d = delta_decode(r.doc_ids).astype(np.int64)
-                t = varint_decode(r.tfs).astype(np.int64)
-                dl = varint_decode(r.dls).astype(np.int64)
-                w = f64_decode(r.weights)
-                if not len(w):
-                    w = np.ones(len(d))
-                ids.append(d)
-                tfs.append(t)
-                dls.append(dl)
-                ws.append(w)
-                terms.append(np.repeat(r.term, len(d)))
-                if with_pos:
-                    pos.extend(
-                        p.astype(np.int64) for p in positions_decode(r.positions, t)
-                    )
-            if not ids:
-                continue
-            flat = pd.DataFrame({
-                "term": np.concatenate(terms),
-                "doc_id": np.concatenate(ids),
-                "tf": np.concatenate(tfs),
-                "dl": np.concatenate(dls),
-                "weight": np.concatenate(ws),
-            })
-            if with_pos:
-                flat["positions"] = pos
-            yield flat
-
-    flat_schema = (
-        "term string, doc_id long, tf long, dl long, weight double"
-        + (", positions array<long>" if with_pos else "")
-    )
     part = F.pmod(F.col("doc_id"), F.lit(n_parts)).cast("int")
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     seg = "reindex-base"
-    out_schema = POSTINGS_SCHEMA_POS if with_pos else POSTINGS_SCHEMA
-    merged = (
-        postings.mapInPandas(decode_stream, schema=flat_schema)
-        .withColumn("doc_part", part)
-        .select("term", "doc_part", "doc_id", "tf", "dl", "weight",
-                *(["positions"] if with_pos else []))
-        .repartition(n_shuffle, "term", "doc_part")
-        .sortWithinPartitions("term", "doc_part", "doc_id")
-        .mapInPandas(_encode_partition_fn(block_size), schema=out_schema)
-        .repartition(n_parts, "doc_part")
-    )
-    dcat.write_segment(
-        merged.withColumn("seg", F.lit(seg)), "postings", seg,
-        partition_by=["doc_part"], sort_within_by=["term"],
-    )
-    dm = (
-        scat.live_doc_map(spark, m)
-        .withColumn("doc_part", part)
-        .withColumn("seg", F.lit(seg))
-    )
-    dcat.write_segment(dm, "doc_map", seg)
-    dcat.write_segment(
-        scat.read_dictionary(spark, snapshot=m), "dictionary", seg,
-        sort_within_by=["term"],
-    )
-    stats = dict(scat.read_json("stats") or {})
-    stats.update({"n_parts": n_parts, "block_size": block_size})
-    dcat.write_json("stats", stats)
-    old_meta = m.get("meta") or {}
-    dcat.publish(
-        {
-            "postings": [dcat.segment_dir("postings", seg)],
-            "doc_map": [dcat.segment_dir("doc_map", seg)],
-            "dictionary": [dcat.segment_dir("dictionary", seg)],
-        },
-        meta={"build_id": seg, "n_shards": 1, "n_parts": n_parts,
-              "with_positions": old_meta.get("with_positions", with_pos),
-              "stats": stats},
-    )
+    tables = {
+        "postings": [_write_postings(dcat, seg, n_parts, _encode(
+            spark, _decoded(postings).withColumn("doc_part", part), block_size))],
+        "doc_map": [dcat.write_segment(scat.live_doc_map(spark, m).withColumn(
+            "doc_part", part).withColumn("seg", F.lit(seg)), "doc_map", seg)],
+        "dictionary": [dcat.write_segment(scat.read_dictionary(spark, snapshot=m),
+                                          "dictionary", seg, sort_within_by=["term"])],
+    }
+    stats = scat.read_json("stats")
+    dcat.publish(tables, meta={
+        "build_id": seg, "n_shards": 1, "n_parts": n_parts,
+        "with_positions": (m.get("meta") or {}).get(
+            "with_positions", "positions" in postings.columns),
+        "stats": _stats_doc(dcat, stats["n_docs"], stats["sum_dl"], n_parts, block_size)})
 
 
 def split_index(spark: SparkSession, src_root: str, dst_root: str,

@@ -39,9 +39,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import B, K1
-from .build import POSTINGS_SCHEMA  # noqa: F401  (schema parity)
-from .build import _encode_partition_fn, _tokenize_map_fn, compact_index
+from .build import (
+    _stats_doc,
+    _tokenize,
+    _write_dictionary,
+    _write_segment_pair,
+    compact_index,
+)
 from .catalog import Catalog
 
 TOMBSTONE_TABLE = "tombstones"
@@ -116,17 +120,12 @@ def append_index(
     n_parts/block_size come from the published stats so routing stays
     consistent.
     """
+    from .wand import _load_bulk_df
+
     cat = Catalog(index_root)
     stats = cat.read_json("stats")
     n_parts, block_size = stats["n_parts"], stats["block_size"]
     m = cat.read_manifest()
-    # positional indexes must stay positional across appends
-    with_pos = bool((m.get("meta") or {}).get("with_positions"))
-
-    docs = new_docs.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-    from .build import META_COLS, POSTINGS_SCHEMA_POS, passthrough_schema
-
-    passthrough = [c for c in docs.columns if c in META_COLS]
     # routed layout (ES writes-with-routing): re-derive the routed doc_part
     # from the stored routing json so appended segments stay tenant-pure.
     # The route set is fixed at build (an ES shard count): unknown or null
@@ -134,99 +133,54 @@ def append_index(
     rt = cat.read_json("routing")
     if rt is not None:
         rcol = rt["routing_col"]
-        if rcol not in passthrough:
+        if rcol not in new_docs.columns:
             raise ValueError(
                 f"routed index: appended docs must carry the routing "
                 f"column {rcol!r}")
-        vals = [r[0] for r in docs.select(rcol).distinct().collect()]
+        vals = [r[0] for r in new_docs.select(rcol).distinct().collect()]
         unknown = sorted(str(v) for v in vals if v not in rt["routes"])
         if unknown:
             raise ValueError(
                 f"routed index: unknown routing value(s) {unknown} — the "
                 "route set is fixed at build time (rebuild to add routes)")
-    tok_schema = (
-        "doc_id long, doc_part int, dl int, weight double, "
-        "terms array<string>, tfs array<int>"
-        + (", positions array<array<int>>" if with_pos else "")
-        + passthrough_schema(docs, passthrough)
-    )
-    tokenized = docs.select("doc_id", "content", "weight", *passthrough).mapInPandas(
-        _tokenize_map_fn(tokenizer, n_parts, passthrough, with_pos), schema=tok_schema
-    )
-    if rt is not None:
-        from .build import route_part_expr
+    # positional indexes must stay positional across appends
+    with_pos = bool((m.get("meta") or {}).get("with_positions"))
+    tables = dict(m["tables"])
+    with _tokenize(new_docs, tokenizer, n_parts, with_pos, rt) as tokenized:
+        # collision check vs LIVE doc_map (anti-join, broadcast the new ids):
+        # tombstoned ids are fair game — appending them resurrects the id
+        live = cat.live_doc_map(spark, m).select("doc_id")
+        clash = live.join(F.broadcast(tokenized.select("doc_id")), "doc_id").count()
+        if clash:
+            raise ValueError(f"append would collide with {clash} live doc_ids; use upsert_docs")
+        # bulk tombstones are GLOBAL kills (no keep_seg re-pointing): an id in
+        # the bulk set would stay dead even after this append — reject until a
+        # compaction drains the table
+        bulk = _load_bulk_df(spark, cat, m)
+        if bulk is not None:
+            nhit = tokenized.select("doc_id").join(bulk, "doc_id", "left_semi").limit(1).count()
+            if nhit:
+                raise ValueError(
+                    "append includes ids in the bulk tombstone set; run "
+                    "compact_with_tombstones first to resurrect them"
+                )
 
-        tokenized = tokenized.withColumn(
-            "doc_part",
-            route_part_expr(rt["routes"], int(rt["parts_per_route"]),
-                            rt["routing_col"]))
-    tokenized = tokenized.persist()
+        # resurrect: new ids present in the tombstone set get keep_seg=segment
+        # so the version written HERE is the one decode keeps
+        ts_map = _read_tombstones(spark, cat)
+        if ts_map:
+            ts_ids = spark.createDataFrame([(int(i),) for i in sorted(ts_map)], "doc_id long")
+            hit = [
+                int(r["doc_id"])
+                for r in tokenized.select("doc_id").join(F.broadcast(ts_ids), "doc_id")
+                .distinct().collect()
+            ]
+            changed = {i: segment for i in hit if ts_map[i] != segment}
+            if changed:
+                ts_map.update(changed)
+                tables[TOMBSTONE_TABLE] = [_tombstone_segment(spark, cat, ts_map)]
 
-    # collision check vs LIVE doc_map (anti-join, broadcast the new ids):
-    # tombstoned ids are fair game — appending them resurrects the id
-    live = cat.live_doc_map(spark, m).select("doc_id")
-    clash = live.join(F.broadcast(tokenized.select("doc_id")), "doc_id").count()
-    if clash:
-        raise ValueError(f"append would collide with {clash} live doc_ids; use upsert_docs")
-    # bulk tombstones are GLOBAL kills (no keep_seg re-pointing): an id in
-    # the bulk set would stay dead even after this append — reject until a
-    # compaction drains the table
-    from .wand import _load_bulk_df
-
-    bulk = _load_bulk_df(spark, cat, m)
-    if bulk is not None:
-        nhit = tokenized.select("doc_id").join(bulk, "doc_id", "left_semi").limit(1).count()
-        if nhit:
-            raise ValueError(
-                "append includes ids in the bulk tombstone set; run "
-                "compact_with_tombstones first to resurrect them"
-            )
-
-    # resurrect: new ids present in the tombstone set get keep_seg=segment
-    # so the version written HERE is the one decode keeps
-    ts_map = _read_tombstones(spark, cat)
-    ts_dir: str | None = None
-    if ts_map:
-        ts_ids = spark.createDataFrame([(int(i),) for i in sorted(ts_map)], "doc_id long")
-        hit = [
-            int(r["doc_id"])
-            for r in tokenized.select("doc_id").join(F.broadcast(ts_ids), "doc_id")
-            .distinct().collect()
-        ]
-        changed = {i: segment for i in hit if ts_map[i] != segment}
-        if changed:
-            ts_map.update(changed)
-            ts_dir = _tombstone_segment(spark, cat, ts_map)
-
-    cat.write_segment(
-        tokenized.drop("terms", "tfs", *(["positions"] if with_pos else []))
-        .withColumn("seg", F.lit(segment)),
-        "doc_map", segment,
-    )
-    zip_cols = [F.col("terms").alias("term"), F.col("tfs").alias("tf")]
-    out_cols = [F.col("z.term").alias("term"), F.col("z.tf").alias("tf")]
-    if with_pos:
-        zip_cols.append(F.col("positions").alias("positions"))
-        out_cols.append(F.col("z.positions").alias("positions"))
-    flat = tokenized.select(
-        "doc_id", "doc_part", "dl", "weight",
-        F.explode(F.arrays_zip(*zip_cols)).alias("z"),
-    ).select("doc_id", "doc_part", "dl", "weight", *out_cols)
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    enc = (
-        flat.repartition(n_shuffle, "term", "doc_part")
-        .sortWithinPartitions("term", "doc_part", "doc_id")
-        .mapInPandas(
-            _encode_partition_fn(block_size),
-            schema=POSTINGS_SCHEMA_POS if with_pos else POSTINGS_SCHEMA,
-        )
-        .repartition(n_parts, "doc_part")
-    )
-    cat.write_segment(
-        enc.withColumn("seg", F.lit(segment)), "postings", segment,
-        partition_by=["doc_part"], sort_within_by=["term"],
-    )
-    tokenized.unpersist()
+        _write_segment_pair(spark, cat, tokenized, segment, block_size, n_parts)
 
     # per-segment dictionary, merged AT READ (Lucene shape): df and cf are
     # ADDITIVE across segments (tombstone adjustment waits for compaction,
@@ -235,41 +189,27 @@ def append_index(
     # of the global dictionary (at code-corpus vocab that rewrite is a
     # full-dictionary shuffle per micro-batch). Readers aggregate via
     # Catalog.read_dictionary; compaction folds segments back to one.
-    from .build import dictionary_from_postings
-
-    tables = dict(m["tables"])
-    tables["doc_map"] = tables["doc_map"] + [cat.segment_dir("doc_map", segment)]
-    tables["postings"] = tables["postings"] + [cat.segment_dir("postings", segment)]
-    if ts_dir is not None:
-        tables[TOMBSTONE_TABLE] = [ts_dir]
-    new_dict = dictionary_from_postings(
-        cat.read_segments(spark, [cat.segment_dir("postings", segment)])
-    )
-    dict_seg = f"seg-{segment}-{uuid.uuid4().hex[:6]}"
-    cat.write_segment(new_dict, "dictionary", dict_seg, sort_within_by=["term"])
-    tables["dictionary"] = tables["dictionary"] + [cat.segment_dir("dictionary", dict_seg)]
+    new_post, new_dm = cat.segment_dir("postings", segment), cat.segment_dir("doc_map", segment)
+    tables["doc_map"] = tables["doc_map"] + [new_dm]
+    tables["postings"] = tables["postings"] + [new_post]
+    tables["dictionary"] = tables["dictionary"] + [_write_dictionary(
+        cat, cat.read_segments(spark, [new_post]), f"seg-{segment}-{uuid.uuid4().hex[:6]}")]
 
     # stats merge is additive too: count + exact integer dl-sum of the NEW
     # doc_map segment only; avgdl = sum_dl/n_docs (deterministic, partition-
     # order independent). Legacy stats without sum_dl seed it with one scan
     # of the prior doc_map (dl column only), then stay additive forever.
-    new_agg = cat.read_segments(spark, [cat.segment_dir("doc_map", segment)]).agg(
+    new_agg = cat.read_segments(spark, [new_dm]).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
     ).collect()[0]
     old_sum = stats.get("sum_dl")
     if old_sum is None:
         old_sum = cat.read_segments(spark, m["tables"]["doc_map"]).agg(
             F.sum("dl")).collect()[0][0] or 0
-    n_docs = int(stats["n_docs"]) + int(new_agg["n"])
-    sum_dl = int(old_sum) + int(new_agg["sum_dl"] or 0)
-    stats_doc = {
-        "n_docs": n_docs, "avgdl": sum_dl / n_docs, "sum_dl": sum_dl,
-        "n_parts": n_parts, "block_size": block_size, "k1": K1, "b": B,
-    }
-    cat.write_json("stats", stats_doc)
-    meta = dict(m.get("meta") or {})
-    meta["stats"] = stats_doc
-    cat.publish(tables, meta=meta, expected_snapshot=m.get("snapshot_id"))
+    stats_doc = _stats_doc(cat, int(stats["n_docs"]) + int(new_agg["n"]),
+                           int(old_sum) + int(new_agg["sum_dl"] or 0), n_parts, block_size)
+    cat.publish(tables, meta={**(m.get("meta") or {}), "stats": stats_doc},
+                expected_snapshot=m.get("snapshot_id"))
 
 
 def delete_docs(spark: SparkSession, index_root: str, doc_ids: list[int]) -> None:
@@ -410,11 +350,10 @@ def compact_with_tombstones(spark: SparkSession, index_root: str) -> None:
     m = cat.read_manifest()
     bulk = _load_bulk_df(spark, cat, m)
     if ts or bulk is not None:
-        dm_live = cat.live_doc_map(spark, m)  # anti-joins bulk, filters point ts
-        seg = f"compact-dm-{uuid.uuid4().hex[:8]}"
-        cat.write_segment(dm_live, "doc_map", seg)
         tables = dict(m["tables"])
-        tables["doc_map"] = [cat.segment_dir("doc_map", seg)]
+        # live_doc_map anti-joins bulk, filters point ts
+        tables["doc_map"] = [cat.write_segment(
+            cat.live_doc_map(spark, m), "doc_map", f"compact-dm-{uuid.uuid4().hex[:8]}")]
         tables.pop(TOMBSTONE_TABLE, None)
         tables.pop(BULK_TOMBSTONE_TABLE, None)
         cat.publish(tables, meta=m.get("meta"),
@@ -422,24 +361,16 @@ def compact_with_tombstones(spark: SparkSession, index_root: str) -> None:
     compact_index(spark, cat, stats["block_size"], tombstones=ts or None, bulk=bulk)
 
     # exact stats + dictionary from the surviving index
-    dm = cat.read_table(spark, "doc_map")
-    agg = dm.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")).collect()[0]
-    sum_dl = int(agg["sum_dl"] or 0)
-    stats_doc = {**stats, "n_docs": agg["n"], "sum_dl": sum_dl,
-                 "avgdl": (sum_dl / agg["n"]) if agg["n"] else 0.0}
-    cat.write_json("stats", stats_doc)
-
-    from .build import dictionary_from_postings
-
-    dictionary = dictionary_from_postings(cat.read_table(spark, "postings"))
-    dict_seg = f"compact-dict-{uuid.uuid4().hex[:8]}"
-    cat.write_segment(dictionary, "dictionary", dict_seg, sort_within_by=["term"])
+    agg = cat.read_table(spark, "doc_map").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")).collect()[0]
+    stats_doc = _stats_doc(cat, agg["n"], agg["sum_dl"], stats["n_parts"], stats["block_size"])
     m2 = cat.read_manifest()
     tables = dict(m2["tables"])
-    tables["dictionary"] = [cat.segment_dir("dictionary", dict_seg)]
-    meta = dict(m2.get("meta") or {})
-    meta["stats"] = stats_doc  # queries read stats from the manifest
-    cat.publish(tables, meta=meta, expected_snapshot=m2.get("snapshot_id"))
+    tables["dictionary"] = [_write_dictionary(
+        cat, cat.read_table(spark, "postings"), f"compact-dict-{uuid.uuid4().hex[:8]}")]
+    # queries read stats from the manifest
+    cat.publish(tables, meta={**(m2.get("meta") or {}), "stats": stats_doc},
+                expected_snapshot=m2.get("snapshot_id"))
 
 
 def maybe_compact(spark: SparkSession, index_root: str, max_segments: int = 8) -> bool:

@@ -420,7 +420,9 @@ def _require_fresh_checkpoint(checkpoint_dir: str, what: str) -> None:
     checkpoint would skip already-processed batches, silently omitting
     their rows from the result (partial output, not an error). Ops whose
     result is derived from persisted state (stream_hll_cardinality,
-    stream_change_point) resume fine and don't take this guard."""
+    stream_change_point and the stamp-keyed _fold ops such as
+    stream_downsample, stream_anomaly_hourly and stream_transform_pivot)
+    resume fine and don't take this guard."""
     if os.path.isdir(checkpoint_dir) and os.listdir(checkpoint_dir):
         raise ValueError(
             f"{what}: checkpoint dir {checkpoint_dir!r} is non-empty — "
@@ -817,7 +819,6 @@ def stream_anomaly_hourly(
     output contract (and oracle) as pipeline.anomaly_hourly."""
     from .pipeline import anomaly_from_hour_counts
 
-    _require_fresh_checkpoint(checkpoint_dir, "stream_anomaly_hourly")
     merged = _fold(
         spark, source_path, checkpoint_dir, state_dir, "hour_buckets",
         lambda df: df.groupBy(
@@ -842,7 +843,6 @@ def stream_transform_pivot(
     only at the fold). State is bounded at |users|·|batches| partial rows
     (compactable by re-merging); batch stamps make checkpoint replays
     detectable. Same output contract (and oracle) as transform_pivot."""
-    _require_fresh_checkpoint(checkpoint_dir, "stream_transform_pivot")
     return (
         _fold(
             spark, source_path, checkpoint_dir, state_dir, "user_partials",

@@ -54,3 +54,18 @@ def test_stream_plumbing_lives_only_in_the_shared_helpers():
                    'withColumn("_b"'):
         users = {f.name for f in funcs if needle in ast.get_source_segment(src, f)}
         assert users and users <= helpers, (needle, sorted(users - helpers))
+
+
+def test_write_path_lives_only_in_the_shared_helpers():
+    # build, append, compaction and reindex tokenize, encode, decode and
+    # write postings through the helpers in build.py; a copy of that
+    # layout in a caller is the code this pins out
+    owner = {"_tokenize_map_fn(": {"_tokenize"}, "_encode_partition_fn(": {"_encode"},
+             "delta_decode(": {"_runs"}, 'partition_by=["doc_part"]': {"_write_postings"}}
+    for needle, helpers in owner.items():
+        users = set()
+        for name in ("build.py", "incremental.py"):
+            src = (PKG / name).read_text()
+            users |= {f.name for f in ast.parse(src).body if isinstance(f, ast.FunctionDef)
+                      and f"{f.name}(" != needle and needle in ast.get_source_segment(src, f)}
+        assert users == helpers, (needle, sorted(users))

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from fafnir_spark.build import build_index, normalize_docs
 from fafnir_spark.catalog import Catalog
 from fafnir_spark.corpus import CORPUS_SCHEMA, synth_corpus
@@ -360,34 +362,49 @@ def test_stream_sampled_quantiles_equals_batch_and_replay(spark, tmp_path):
     assert [tuple(r) for r in again] == [tuple(r) for r in got]
 
 
-def test_stamp_keyed_fold_resumes_from_its_checkpoint_and_state(spark, tmp_path):
+# (op, batch op, compared columns, state table, state columns): the
+# compared columns are the integer/string ones — exact under any batching
+_FOLD_OPS = {
+    "stream_downsample": (
+        "downsample_tsdb", ("event_type", "bucket_ts", "n"), "buckets",
+        ["event_type", "bucket_ts", "pn", "pmin", "pmax", "psum", "plast"]),
+    "stream_anomaly_hourly": (
+        "anomaly_hourly", ("rank", "day", "hour", "n", "expected", "score"),
+        "hour_buckets", ["day", "hour", "partial"]),
+    "stream_transform_pivot": (
+        "transform_pivot", ("user_id", "n_events", "n_error", "last_ts"),
+        "user_partials", ["user_id", "pn", "pe", "pv", "pt"]),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_FOLD_OPS))
+def test_stamp_keyed_fold_resumes_from_its_checkpoint_and_state(spark, tmp_path, op):
     """A stamp-keyed fold op re-run against its own checkpoint and state
     dir processes no batch twice: with nothing new it returns the same
     rows, and after new arrivals it returns what one fresh run over the
-    whole source returns (the batch counts). The state keeps its
-    on-disk layout: ``buckets/`` rows of the partial columns plus ``_b``,
-    the id of the micro-batch that wrote them."""
-    from fafnir_spark.pipeline import downsample_tsdb
-    from fafnir_spark.streaming import stream_downsample
+    whole source returns (the batch answer). The state keeps its
+    on-disk layout: rows of the partial columns plus ``_b``, the id of
+    the micro-batch that wrote them."""
+    from fafnir_spark import pipeline, streaming
 
+    batch_name, key, table, state_cols = _FOLD_OPS[op]
+    stream_op, batch_op = getattr(streaming, op), getattr(pipeline, batch_name)
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     src = str(tmp_path / "src")
     ev.filter("pmod(event_id, 2) = 0").repartition(2).write.parquet(f"{src}/a")
     ck, state = str(tmp_path / "ck"), str(tmp_path / "state")
 
-    first = stream_downsample(spark, f"{src}/*", ck, state).collect()
-    assert stream_downsample(spark, f"{src}/*", ck, state).collect() == first
+    first = stream_op(spark, f"{src}/*", ck, state).collect()
+    assert stream_op(spark, f"{src}/*", ck, state).collect() == first
 
     ev.filter("pmod(event_id, 2) = 1").repartition(2).write.parquet(f"{src}/b")
-    resumed = stream_downsample(spark, f"{src}/*", ck, state).collect()
-    fresh = stream_downsample(spark, f"{src}/*", str(tmp_path / "ck2"),
-                              str(tmp_path / "state2")).collect()
+    resumed = stream_op(spark, f"{src}/*", ck, state).collect()
+    fresh = stream_op(spark, f"{src}/*", str(tmp_path / "ck2"),
+                      str(tmp_path / "state2")).collect()
     assert resumed == fresh != first
-    key = ("event_type", "bucket_ts", "n")  # exact integer merge: batch counts
     assert [tuple(r[c] for c in key) for r in resumed] == \
-        [tuple(r[c] for c in key) for r in downsample_tsdb(ev).collect()]
+        [tuple(r[c] for c in key) for r in batch_op(ev).collect()]
 
-    st = spark.read.parquet(os.path.join(state, "buckets"))
-    assert st.columns == ["event_type", "bucket_ts", "pn", "pmin", "pmax", "psum",
-                          "plast", "_b"]
+    st = spark.read.parquet(os.path.join(state, table))
+    assert st.columns == [*state_cols, "_b"]
     assert sorted(r["_b"] for r in st.select("_b").distinct().collect()) == [0, 1, 2, 3]
