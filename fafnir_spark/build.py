@@ -617,33 +617,42 @@ def compact_index(
     spark: SparkSession,
     cat: Catalog,
     block_size: int,
-    tombstones: dict[int, str | None] | None = None,
-    bulk: DataFrame | None = None,
+    snapshot: dict | None = None,
 ) -> None:
-    """Rewrite multi-segment postings into one sorted run per (term, part).
+    """Rewrite multi-segment postings into one sorted run per (term, part),
+    draining the tombstones, in ONE commit CAS'd against ``snapshot`` (the
+    current one by default).
 
     fafnir analog: post-publish force-merge to a single segment
     (/root/reference config/elasticsearch/default.toml:26-44).
 
-    ``tombstones``: {doc_id: keep_seg|None} — entries are physically
-    dropped during the merge, EXCEPT postings whose source segment equals
-    the id's keep_seg (the live version written by a stable-id upsert).
+    The snapshot's point tombstones (read past the query closure envelope:
+    this is the op that drains them) are physically dropped during the
+    merge, EXCEPT postings whose source segment equals the id's keep_seg
+    (the live version written by a stable-id upsert).
 
-    ``bulk``: DataFrame(doc_id) of mass-delete tombstones — drained with a
-    DISTRIBUTED left-anti join on the decoded posting rows (decode →
-    anti-join → re-encode through the build encode path); the id set is
-    never collected to the driver, so a purge of any size compacts away.
+    The snapshot's bulk (mass-delete) table is drained with a DISTRIBUTED
+    left-anti join on the decoded posting rows (decode → anti-join →
+    re-encode through the build encode path); the id set is never
+    collected to the driver, so a purge of any size compacts away.
+
+    When there is anything to drain, the live doc_map is rewritten too and
+    both tombstone tables leave the manifest. The dictionary and the stats
+    are derived from the segments this commit publishes.
     """
-    from .wand import _Tombstones
+    from .incremental import TOMBSTONE_TABLE
+    from .wand import BULK_TOMBSTONE_TABLE, _load_bulk_df, _load_tombstones, _snapshot_stats
 
-    m = cat.read_manifest()
-    postings = cat.read_table(spark, "postings")
-    ts = _Tombstones(list(tombstones), tombstones.values()) if tombstones else None
+    m = snapshot or cat.read_manifest()
+    ts = _load_tombstones(spark, cat, m, envelope=False)
+    ts = ts if len(ts) else None
+    bulk = _load_bulk_df(spark, cat, m)
+    postings = cat.read_table(spark, "postings", snapshot=m)
     if bulk is not None:
         # two-phase merge: decode to flat rows → distributed anti-join on
         # the bulk tombstone relation → the shared encode exchange
-        blocks = _encode(spark, _decoded(postings, ts).join(
-            bulk.select("doc_id"), "doc_id", "left_anti"), block_size)
+        blocks = _encode(spark, _decoded(postings, ts).join(bulk, "doc_id", "left_anti"),
+                         block_size)
     else:
         def merge_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # partitions are pre-grouped by (term, doc_part) and sorted by
@@ -663,10 +672,21 @@ def compact_index(
                          if "positions" in postings.columns else POSTINGS_SCHEMA)
         )
     seg = "compacted-" + (m.get("snapshot_id") or "0")
+    n_parts = _snapshot_stats(cat, m)["n_parts"]
     tables = dict(m["tables"])
-    tables["postings"] = [_write_postings(
-        cat, seg, (m.get("meta") or {}).get("n_parts", 8), blocks)]
-    cat.publish(tables, meta=m.get("meta"))
+    if ts is not None or bulk is not None:
+        # live_doc_map anti-joins bulk, filters point ts
+        tables["doc_map"] = [cat.write_segment(cat.live_doc_map(spark, m), "doc_map", seg)]
+        tables.pop(TOMBSTONE_TABLE, None)
+        tables.pop(BULK_TOMBSTONE_TABLE, None)
+    tables["postings"] = [_write_postings(cat, seg, n_parts, blocks)]
+    tables["dictionary"] = [_write_dictionary(
+        cat, cat.read_segments(spark, tables["postings"]), seg)]
+    agg = cat.read_segments(spark, tables["doc_map"]).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")).collect()[0]
+    cat.publish(tables, meta={**(m.get("meta") or {}), "stats": _stats_doc(
+        cat, agg["n"], agg["sum_dl"], n_parts, block_size)},
+                expected_snapshot=m.get("snapshot_id"))
 
 
 def reindex(
@@ -693,7 +713,7 @@ def reindex(
     (pinned width against AQE coalesce); doc_map/dictionary rewrites are
     column-local copies."""
     from .incremental import TOMBSTONE_TABLE
-    from .wand import BULK_TOMBSTONE_TABLE
+    from .wand import BULK_TOMBSTONE_TABLE, _snapshot_stats
 
     scat, dcat = Catalog(src_root), Catalog(dst_root)
     m = scat.read_manifest()
@@ -718,7 +738,7 @@ def reindex(
         "dictionary": [dcat.write_segment(scat.read_dictionary(spark, snapshot=m),
                                           "dictionary", seg, sort_within_by=["term"])],
     }
-    stats = scat.read_json("stats")
+    stats = _snapshot_stats(scat, m)
     dcat.publish(tables, meta={
         "build_id": seg, "n_shards": 1, "n_parts": n_parts,
         "with_positions": (m.get("meta") or {}).get(

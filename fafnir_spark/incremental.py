@@ -11,30 +11,38 @@ Reference semantics being re-expressed:
 
 Engine translation (Lucene/ES-faithful, since ES is the reference's actual
 index backend):
+ * One read-modify-commit (``_commit``) serves append, upsert, point
+   delete and a CDC micro-batch: one snapshot read (its stats from the
+   manifest, never the mutable stats json), one live-id join, deletes
+   applied last, then ONE publish CAS'd against that snapshot — a reader
+   sees the old snapshot or the new one, nothing in between.
+   compact_with_tombstones is one commit too (build.compact_index).
  * append_index: new docs → one more immutable segment set; the global
    dictionary/stats are re-merged from per-segment raws; publish.
  * delete_docs: tombstones. Queries filter tombstoned doc_ids at decode
    time; like ES, deleted docs still count in df/avgdl until a compaction
    physically drops them and recomputes exact stats.
- * upsert_docs: STABLE-id replace. The old version is tombstoned with
-   keep_seg=<new segment>, and the new content is indexed under the SAME
-   doc_id in that segment — decode drops the id from every segment except
-   keep_seg, so exactly one version is live. Re-upsert overwrites the
-   tombstone (last-write-wins by doc_id) and a later delete kills all
-   versions. This matches the reference's update-by-stable-id.
+ * upsert_docs: STABLE-id replace, one commit. The old version is
+   tombstoned with keep_seg=<new segment>, and the new content is indexed
+   under the SAME doc_id in that segment — decode drops the id from every
+   segment except keep_seg, so exactly one version is live. Re-upsert
+   overwrites the tombstone (last-write-wins by doc_id) and a later delete
+   kills all versions. This matches the reference's update-by-stable-id.
  * update_doc_meta: MERGE INTO over doc_map (field-level Set, the photos/
    reviews property updates) — copy-on-write at SEGMENT granularity: only
    doc_map segments containing touched ids are rewritten; postings are
    untouched (metadata is not indexed text).
 
-Every written segment name is unique (uuid suffix): segments referenced by
-the current or any historical manifest are immutable, so time travel stays
-valid across maintenance operations.
+Every written segment name is unique (a uuid suffix, or a caller's name
+that the commit refuses once any snapshot has published it): segments
+referenced by the current or any historical manifest are immutable, so time
+travel stays valid across maintenance operations.
 """
 
 from __future__ import annotations
 
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,19 +59,6 @@ from .catalog import Catalog
 TOMBSTONE_TABLE = "tombstones"
 
 
-def _read_tombstones(spark: SparkSession, cat: Catalog) -> dict[int, str | None]:
-    """{doc_id: keep_seg|None}. keep_seg=None → dead in every segment;
-    keep_seg=s → dead everywhere EXCEPT segment s (stable-id upsert)."""
-    m = cat.read_manifest()
-    if TOMBSTONE_TABLE not in m["tables"]:
-        return {}
-    df = cat.read_table(spark, TOMBSTONE_TABLE)
-    has_keep = "keep_seg" in df.columns
-    return {
-        int(r["doc_id"]): (r["keep_seg"] if has_keep else None) for r in df.collect()
-    }
-
-
 def _tombstone_segment(
     spark: SparkSession, cat: Catalog, merged: dict[int, str | None]
 ) -> str:
@@ -77,18 +72,13 @@ def _tombstone_segment(
     return cat.segment_dir(TOMBSTONE_TABLE, seg)
 
 
-def _write_tombstones(
-    spark: SparkSession, cat: Catalog, updates: dict[int, str | None]
-) -> None:
-    """Merge ``updates`` into the tombstone set (last-write-wins by doc_id)
-    and publish."""
-    m = cat.read_manifest()
-    merged = _read_tombstones(spark, cat)
-    merged.update(updates)
-    tables = dict(m["tables"])
-    tables[TOMBSTONE_TABLE] = [_tombstone_segment(spark, cat, merged)]
-    cat.publish(tables, meta=m.get("meta"),
-                expected_snapshot=m.get("snapshot_id"))
+def _referenced(m: dict) -> set[tuple[str, str]]:
+    """(table, segment dir name) of every segment the snapshot ``m`` or its
+    history references — matched by name, immune to path normalization
+    differences."""
+    return {(t, d.rstrip("/").rsplit("/", 1)[-1])
+            for snap in [m, *m.get("history", [])]
+            for t, dirs in (snap.get("tables") or {}).items() for d in dirs}
 
 
 def _require_unrouted(cat: Catalog, op: str) -> None:
@@ -104,6 +94,137 @@ def _require_unrouted(cat: Catalog, op: str) -> None:
             "use point deletes, or rebuild with build_index(routing_col=...)")
 
 
+def _claim(spark: SparkSession, cat: Catalog, m: dict, ts, tokenized: DataFrame,
+           segment: str, upsert: bool) -> dict[int, str]:
+    """THE live-id join of an append or upsert: one pass over snapshot
+    ``m``'s live doc_map, its point tombstones ``ts`` and its bulk set,
+    semi-joined to the new ids (broadcast). A live id collides with an
+    append and is replaced by an upsert; a point-tombstoned id is
+    resurrected; a bulk-dead id is refused. Returns the tombstones the
+    write re-points at ``segment`` — so the version written there is the
+    one decode keeps."""
+    from .wand import _load_bulk_df
+
+    states = [cat.live_doc_map(spark, m).select("doc_id", F.lit("live").alias("state"))]
+    if len(ts):
+        states.append(spark.createDataFrame([(int(i), "dead") for i in ts.ids],
+                                            "doc_id long, state string"))
+    bulk = _load_bulk_df(spark, cat, m)
+    if bulk is not None:
+        states.append(bulk.withColumn("state", F.lit("bulk")))
+    hits: dict[str, set[int]] = {"live": set(), "dead": set(), "bulk": set()}
+    for r in reduce(DataFrame.unionByName, states).join(
+            F.broadcast(tokenized.select("doc_id")), "doc_id", "left_semi").collect():
+        hits[r["state"]].add(int(r["doc_id"]))
+    if hits["live"] and not upsert:
+        raise ValueError(
+            f"append would collide with {len(hits['live'])} live doc_ids; use upsert_docs")
+    # bulk tombstones are GLOBAL kills (no keep_seg re-pointing): an id in
+    # the bulk set would stay dead after this write — reject until a
+    # compaction drains the table
+    if hits["bulk"]:
+        raise ValueError(
+            "append includes ids in the bulk tombstone set; run "
+            "compact_with_tombstones first to resurrect them")
+    claimed = hits["live"] | hits["dead"]
+    # design envelope: upserts are POINT updates (the reference's update
+    # passes are keyed single-document Sets) — the tombstone set is
+    # driver-resident and shipped in scorer closures, so a bulk replacement
+    # must go through a rebuild (or append under new ids) instead
+    if upsert and len(claimed) > 100_000:
+        raise ValueError(
+            "upsert_docs is the point-update path (tombstones are "
+            "driver-resident); rebuild or append for bulk replacement")
+    return dict.fromkeys(claimed, segment)
+
+
+def _commit(spark: SparkSession, index_root: str, docs: DataFrame | None = None,
+            segment: str | None = None, tokenizer: str = "code", upsert: bool = False,
+            deletes=()) -> None:
+    """THE read-modify-commit of point maintenance (append, upsert, point
+    delete, a CDC micro-batch) — fafnir's insert → keyed update → publish
+    (/root/reference src/bin/tripadvisor2mimir.rs:112-176):
+
+    1. read ONE snapshot: tables and stats (wand._open), point tombstones
+       (wand._load_tombstones);
+    2. tokenize ``docs`` once and run the one live-id join (``_claim``);
+    3. merge ``deletes`` last, so a delete wins;
+    4. write the doc_map, postings, dictionary and tombstone segments;
+    5. publish ONCE, CAS'd against that snapshot.
+
+    Every check raises before the first write, and a failure anywhere
+    before the publish leaves the snapshot as it was. ``segment`` must be
+    a name no snapshot has published (segments are immutable); an
+    unpublished leftover of a crashed write is overwritten."""
+    from .wand import _load_tombstones, _open
+
+    cat, m, stats = _open(index_root, None)
+    n_parts, block_size = stats["n_parts"], stats["block_size"]
+    ts = _load_tombstones(spark, cat, m, envelope=False)
+    current = dict(zip(ts.ids.tolist(), ts.keeps.tolist()))
+    tables, meta, updates = dict(m["tables"]), m.get("meta"), {}
+    if docs is not None:
+        if {("doc_map", f"seg={segment}"), ("postings", f"seg={segment}")} & _referenced(m):
+            raise ValueError(
+                f"segment {segment!r} is already published in this index or its "
+                "history; published segments are immutable — pick a new name")
+        # routed layout (ES writes-with-routing): re-derive the routed
+        # doc_part from the stored routing json so appended segments stay
+        # tenant-pure. The route set is fixed at build (an ES shard count):
+        # unknown or null routing values are rejected, never silently
+        # hashed into a new range.
+        rt = cat.read_json("routing")
+        if rt is not None:
+            rcol = rt["routing_col"]
+            if rcol not in docs.columns:
+                raise ValueError(
+                    f"routed index: appended docs must carry the routing "
+                    f"column {rcol!r}")
+            vals = [r[0] for r in docs.select(rcol).distinct().collect()]
+            unknown = sorted(str(v) for v in vals if v not in rt["routes"])
+            if unknown:
+                raise ValueError(
+                    f"routed index: unknown routing value(s) {unknown} — the "
+                    "route set is fixed at build time (rebuild to add routes)")
+        # positional indexes must stay positional across appends
+        with_pos = bool((meta or {}).get("with_positions"))
+        with _tokenize(docs, tokenizer, n_parts, with_pos, rt) as tokenized:
+            updates = _claim(spark, cat, m, ts, tokenized, segment, upsert)
+            _write_segment_pair(spark, cat, tokenized, segment, block_size, n_parts)
+
+        # per-segment dictionary, merged AT READ (Lucene shape): df and cf
+        # are ADDITIVE across segments (tombstone adjustment waits for
+        # compaction, ES-faithful stale df), so the write publishes ONLY the
+        # new segment's (term, df, cf) — O(new-segment vocab) bytes written,
+        # never a rewrite of the global dictionary. Readers aggregate via
+        # Catalog.read_dictionary; compaction folds segments back to one.
+        new_post, new_dm = cat.segment_dir("postings", segment), cat.segment_dir("doc_map", segment)
+        tables["doc_map"] = tables["doc_map"] + [new_dm]
+        tables["postings"] = tables["postings"] + [new_post]
+        tables["dictionary"] = tables["dictionary"] + [_write_dictionary(
+            cat, cat.read_segments(spark, [new_post]), f"seg-{segment}-{uuid.uuid4().hex[:6]}")]
+
+        # stats merge is additive too, from the snapshot's own stats: count +
+        # exact integer dl-sum of the NEW doc_map segment only; avgdl =
+        # sum_dl/n_docs. Legacy stats without sum_dl seed it with one scan
+        # of the prior doc_map (dl column only), then stay additive forever.
+        new_agg = cat.read_segments(spark, [new_dm]).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
+        ).collect()[0]
+        old_sum = stats.get("sum_dl")
+        if old_sum is None:
+            old_sum = cat.read_segments(spark, m["tables"]["doc_map"]).agg(
+                F.sum("dl")).collect()[0][0] or 0
+        n_docs = int(stats["n_docs"]) + int(new_agg["n"])
+        sum_dl = int(old_sum) + int(new_agg["sum_dl"] or 0)
+    updates.update(dict.fromkeys(map(int, deletes)))
+    if any(i not in current or current[i] != k for i, k in updates.items()):
+        tables[TOMBSTONE_TABLE] = [_tombstone_segment(spark, cat, {**current, **updates})]
+    if docs is not None:  # the stats json mirror is written last, by _stats_doc
+        meta = {**(meta or {}), "stats": _stats_doc(cat, n_docs, sum_dl, n_parts, block_size)}
+    cat.publish(tables, meta=meta, expected_snapshot=m.get("snapshot_id"))
+
+
 def append_index(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -117,99 +238,10 @@ def append_index(
     LIVE docs (checked against the tombstone-aware doc_map). Appending an
     id that was previously deleted (or upserted away) re-points its
     tombstone at this segment, resurrecting the id with the new content.
-    n_parts/block_size come from the published stats so routing stays
-    consistent.
+    n_parts/block_size come from the snapshot's stats so routing stays
+    consistent. ``segment`` must be a name this index never published.
     """
-    from .wand import _load_bulk_df
-
-    cat = Catalog(index_root)
-    stats = cat.read_json("stats")
-    n_parts, block_size = stats["n_parts"], stats["block_size"]
-    m = cat.read_manifest()
-    # routed layout (ES writes-with-routing): re-derive the routed doc_part
-    # from the stored routing json so appended segments stay tenant-pure.
-    # The route set is fixed at build (an ES shard count): unknown or null
-    # routing values are rejected, never silently hashed into a new range.
-    rt = cat.read_json("routing")
-    if rt is not None:
-        rcol = rt["routing_col"]
-        if rcol not in new_docs.columns:
-            raise ValueError(
-                f"routed index: appended docs must carry the routing "
-                f"column {rcol!r}")
-        vals = [r[0] for r in new_docs.select(rcol).distinct().collect()]
-        unknown = sorted(str(v) for v in vals if v not in rt["routes"])
-        if unknown:
-            raise ValueError(
-                f"routed index: unknown routing value(s) {unknown} — the "
-                "route set is fixed at build time (rebuild to add routes)")
-    # positional indexes must stay positional across appends
-    with_pos = bool((m.get("meta") or {}).get("with_positions"))
-    tables = dict(m["tables"])
-    with _tokenize(new_docs, tokenizer, n_parts, with_pos, rt) as tokenized:
-        # collision check vs LIVE doc_map (anti-join, broadcast the new ids):
-        # tombstoned ids are fair game — appending them resurrects the id
-        live = cat.live_doc_map(spark, m).select("doc_id")
-        clash = live.join(F.broadcast(tokenized.select("doc_id")), "doc_id").count()
-        if clash:
-            raise ValueError(f"append would collide with {clash} live doc_ids; use upsert_docs")
-        # bulk tombstones are GLOBAL kills (no keep_seg re-pointing): an id in
-        # the bulk set would stay dead even after this append — reject until a
-        # compaction drains the table
-        bulk = _load_bulk_df(spark, cat, m)
-        if bulk is not None:
-            nhit = tokenized.select("doc_id").join(bulk, "doc_id", "left_semi").limit(1).count()
-            if nhit:
-                raise ValueError(
-                    "append includes ids in the bulk tombstone set; run "
-                    "compact_with_tombstones first to resurrect them"
-                )
-
-        # resurrect: new ids present in the tombstone set get keep_seg=segment
-        # so the version written HERE is the one decode keeps
-        ts_map = _read_tombstones(spark, cat)
-        if ts_map:
-            ts_ids = spark.createDataFrame([(int(i),) for i in sorted(ts_map)], "doc_id long")
-            hit = [
-                int(r["doc_id"])
-                for r in tokenized.select("doc_id").join(F.broadcast(ts_ids), "doc_id")
-                .distinct().collect()
-            ]
-            changed = {i: segment for i in hit if ts_map[i] != segment}
-            if changed:
-                ts_map.update(changed)
-                tables[TOMBSTONE_TABLE] = [_tombstone_segment(spark, cat, ts_map)]
-
-        _write_segment_pair(spark, cat, tokenized, segment, block_size, n_parts)
-
-    # per-segment dictionary, merged AT READ (Lucene shape): df and cf are
-    # ADDITIVE across segments (tombstone adjustment waits for compaction,
-    # ES-faithful stale df), so the append publishes ONLY the new segment's
-    # (term, df, cf) — O(new-segment vocab) bytes written, never a rewrite
-    # of the global dictionary (at code-corpus vocab that rewrite is a
-    # full-dictionary shuffle per micro-batch). Readers aggregate via
-    # Catalog.read_dictionary; compaction folds segments back to one.
-    new_post, new_dm = cat.segment_dir("postings", segment), cat.segment_dir("doc_map", segment)
-    tables["doc_map"] = tables["doc_map"] + [new_dm]
-    tables["postings"] = tables["postings"] + [new_post]
-    tables["dictionary"] = tables["dictionary"] + [_write_dictionary(
-        cat, cat.read_segments(spark, [new_post]), f"seg-{segment}-{uuid.uuid4().hex[:6]}")]
-
-    # stats merge is additive too: count + exact integer dl-sum of the NEW
-    # doc_map segment only; avgdl = sum_dl/n_docs (deterministic, partition-
-    # order independent). Legacy stats without sum_dl seed it with one scan
-    # of the prior doc_map (dl column only), then stay additive forever.
-    new_agg = cat.read_segments(spark, [new_dm]).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
-    ).collect()[0]
-    old_sum = stats.get("sum_dl")
-    if old_sum is None:
-        old_sum = cat.read_segments(spark, m["tables"]["doc_map"]).agg(
-            F.sum("dl")).collect()[0][0] or 0
-    stats_doc = _stats_doc(cat, int(stats["n_docs"]) + int(new_agg["n"]),
-                           int(old_sum) + int(new_agg["sum_dl"] or 0), n_parts, block_size)
-    cat.publish(tables, meta={**(m.get("meta") or {}), "stats": stats_doc},
-                expected_snapshot=m.get("snapshot_id"))
+    _commit(spark, index_root, new_docs, segment, tokenizer)
 
 
 def delete_docs(spark: SparkSession, index_root: str, doc_ids: list[int]) -> None:
@@ -220,8 +252,7 @@ def delete_docs(spark: SparkSession, index_root: str, doc_ids: list[int]) -> Non
     This is the POINT-delete path: ids ship in scorer closures (zero extra
     shuffle), right up to ~100k ids. For mass deletes use
     delete_docs_bulk."""
-    cat = Catalog(index_root)
-    _write_tombstones(spark, cat, {int(i): None for i in doc_ids})
+    _commit(spark, index_root, deletes=doc_ids)
 
 
 def delete_docs_bulk(spark: SparkSession, index_root: str, doc_ids: DataFrame) -> None:
@@ -258,38 +289,17 @@ def upsert_docs(
     segment: str,
     tokenizer: str = "code",
 ) -> None:
-    """Replace (or insert) documents by STABLE doc_id.
+    """Replace (or insert) documents by STABLE doc_id, in one commit.
 
     Live old versions are tombstoned with keep_seg=``segment`` and the new
     content is indexed under the SAME doc_id inside ``segment`` — the
     reference's UpdateOperation::Set keyed by stable document id
     (/root/reference src/bin/tripadvisor2mimir.rs:112-165). Queries return
     the id the caller supplied; a later delete_docs(id) removes the doc
-    entirely (the tombstone merge is last-write-wins).
+    entirely (the tombstone merge is last-write-wins). At most 100k ids
+    per call may be replaced or resurrected (the point-update envelope).
     """
-    cat = Catalog(index_root)
-    # design envelope: upserts are POINT updates (the reference's update
-    # passes are keyed single-document Sets) — the tombstone set is
-    # driver-resident and shipped in scorer closures, so a bulk replacement
-    # must go through a rebuild (or append under new ids) instead
-    id_rows = docs_new.select("doc_id").distinct().limit(100_001).collect()
-    if len(id_rows) > 100_000:
-        raise ValueError(
-            "upsert_docs is the point-update path (tombstones are "
-            "driver-resident); rebuild or append for bulk replacement"
-        )
-    new_ids = spark.createDataFrame(
-        [(int(r["doc_id"]),) for r in id_rows], "doc_id long"
-    )
-    live = {
-        int(r["doc_id"])
-        for r in cat.live_doc_map(spark).select("doc_id")
-        .join(F.broadcast(new_ids), "doc_id").collect()
-    }
-    if live:
-        _write_tombstones(spark, cat, {i: segment for i in sorted(live)})
-    # append re-points tombstones of previously-deleted ids at this segment
-    append_index(spark, docs_new, index_root, segment, tokenizer)
+    _commit(spark, index_root, docs_new, segment, tokenizer, upsert=True)
 
 
 def update_doc_meta(spark: SparkSession, index_root: str, updates: DataFrame) -> None:
@@ -335,42 +345,18 @@ def update_doc_meta(spark: SparkSession, index_root: str, updates: DataFrame) ->
 
 def compact_with_tombstones(spark: SparkSession, index_root: str) -> None:
     """Physically drop tombstoned docs, force-merge posting runs
-    (the reference's force_merge, S11), recompute exact dictionary/stats.
+    (the reference's force_merge, S11), recompute exact dictionary/stats —
+    one compact_index commit over the current snapshot.
 
     keep_seg-aware: an upserted doc's live version (row seg == keep_seg)
     survives; every other tombstoned row is dropped. Point tombstones AND
     the bulk (mass-delete) tombstone table are drained in the same pass —
     bulk ids via a distributed anti-join inside the merge, never collected
     to the driver."""
-    from .wand import BULK_TOMBSTONE_TABLE, _load_bulk_df
+    from .wand import _open
 
-    cat = Catalog(index_root)
-    stats = cat.read_json("stats")
-    ts = _read_tombstones(spark, cat)
-    m = cat.read_manifest()
-    bulk = _load_bulk_df(spark, cat, m)
-    if ts or bulk is not None:
-        tables = dict(m["tables"])
-        # live_doc_map anti-joins bulk, filters point ts
-        tables["doc_map"] = [cat.write_segment(
-            cat.live_doc_map(spark, m), "doc_map", f"compact-dm-{uuid.uuid4().hex[:8]}")]
-        tables.pop(TOMBSTONE_TABLE, None)
-        tables.pop(BULK_TOMBSTONE_TABLE, None)
-        cat.publish(tables, meta=m.get("meta"),
-                    expected_snapshot=m.get("snapshot_id"))
-    compact_index(spark, cat, stats["block_size"], tombstones=ts or None, bulk=bulk)
-
-    # exact stats + dictionary from the surviving index
-    agg = cat.read_table(spark, "doc_map").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")).collect()[0]
-    stats_doc = _stats_doc(cat, agg["n"], agg["sum_dl"], stats["n_parts"], stats["block_size"])
-    m2 = cat.read_manifest()
-    tables = dict(m2["tables"])
-    tables["dictionary"] = [_write_dictionary(
-        cat, cat.read_table(spark, "postings"), f"compact-dict-{uuid.uuid4().hex[:8]}")]
-    # queries read stats from the manifest
-    cat.publish(tables, meta={**(m2.get("meta") or {}), "stats": stats_doc},
-                expected_snapshot=m2.get("snapshot_id"))
+    cat, m, stats = _open(index_root, None)
+    compact_index(spark, cat, stats["block_size"], m)
 
 
 def maybe_compact(spark: SparkSession, index_root: str, max_segments: int = 8) -> bool:
@@ -462,11 +448,7 @@ def remove_orphan_segments(
     cat = Catalog(index_root)
     m = cat.read_manifest()
     now = time.time() if now_s is None else now_s
-    referenced: set[tuple[str, str]] = set()
-    for snap in [m, *m.get("history", [])]:
-        for tname, dirs in (snap.get("tables") or {}).items():
-            for d in dirs:
-                referenced.add((tname, d.rstrip("/").rsplit("/", 1)[-1]))
+    referenced = _referenced(m)
     deleted = scanned = 0
     for tname in cat.list_tables():
         for path, mtime in cat.list_segment_dirs(tname):
@@ -488,8 +470,6 @@ def rollback_to(spark: SparkSession, index_root: str, snapshot_id: str) -> str:
     history is never rewritten, so the rolled-back-from state stays
     time-travelable until expire_snapshots trims it). CAS-guarded against
     interleaved writers. Returns the new snapshot id."""
-    from .catalog import Catalog
-
     cat = Catalog(index_root)
     cur = cat.read_manifest()
     target = cat.manifest_at(snapshot_id)
@@ -583,13 +563,13 @@ def rollover_write(
 
     from .build import build_index
 
+    from .wand import _open
+
     gens = rollover_generations(base_root)
     if gens:
         cur = gens[-1]
-        cat = Catalog(cur)
-        stats = (cat.read_manifest().get("meta") or {}).get("stats") or cat.read_json("stats")
-        if int(stats["n_docs"]) < max_docs_per_gen:
-            append_index(spark, docs, cur, segment=f"roll{len(gens):03d}",
+        if int(_open(cur, None)[2]["n_docs"]) < max_docs_per_gen:
+            append_index(spark, docs, cur, segment=f"roll-{uuid.uuid4().hex[:8]}",
                          tokenizer=tokenizer)
             return cur
     nxt = os.path.join(base_root, f"gen-{len(gens) + 1:06d}")

@@ -478,13 +478,10 @@ def more_like_this_indexed(
     score)."""
     import pandas as pd
 
-    from .catalog import Catalog
     from .tokenizer import TOKENIZERS
-    from .wand import run_queries
+    from .wand import _open, run_queries
 
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    cat, manifest, stats = _open(index_root, snapshot_id)
     terms_l, tfs_l, _dl, _pos = TOKENIZERS[tokenizer](pd.Series([like_text]))[0]
     empty = "qid string, rank int, doc_id long, score double"
     if not terms_l:

@@ -355,29 +355,25 @@ def stream_cdc_apply(
     a published index via foreachBatch — op 'u' rows upsert (stable-id
     replace-or-insert), op 'd' rows delete. Within one micro-batch upserts
     apply BEFORE deletes (a delete in the same batch wins, matching
-    last-write-wins tombstone merge). Each batch commits snapshots through
-    the normal maintenance path, so time travel and the CommitConflict CAS
-    hold for streaming writers too."""
+    last-write-wins tombstone merge). Each batch is ONE commit of the
+    maintenance read-modify-commit (incremental._commit): one snapshot
+    read, one publish CAS'd against it, so time travel and the
+    CommitConflict CAS hold for streaming writers too."""
     from .build import normalize_docs
-    from .incremental import delete_docs, upsert_docs
+    from .incremental import _commit
 
     def apply_batch(batch_df, batch_id: int) -> None:
         ups = batch_df.filter(F.col("op") == "u").select("doc_id", "text")
-        if ups.limit(1).count():
-            upsert_docs(
-                spark,
-                normalize_docs(ups, id_col="doc_id", text_col="text"),
-                index_root,
-                segment=f"cdc-{batch_id}",
-                tokenizer=tokenizer,
-            )
         dels = [
             int(r["doc_id"])
             for r in batch_df.filter(F.col("op") == "d").select("doc_id")
             .distinct().collect()
         ]
-        if dels:
-            delete_docs(spark, index_root, dels)
+        has_ups = bool(ups.limit(1).count())
+        if has_ups or dels:
+            _commit(spark, index_root,
+                    normalize_docs(ups, id_col="doc_id", text_col="text") if has_ups else None,
+                    f"cdc-{batch_id}", tokenizer, upsert=True, deletes=dels)
 
     _drain(_read(spark, source_path, "op string, doc_id long, text string"),
            checkpoint_dir, apply_batch)

@@ -206,21 +206,24 @@ def _bulk_side(spark: SparkSession, cat: Catalog, manifest: dict):
     return _with_doc_part(bulk, _snapshot_stats(cat, manifest)["n_parts"])
 
 
-def _load_tombstones(spark: SparkSession, cat: Catalog, manifest: dict) -> _Tombstones:
+def _load_tombstones(spark: SparkSession, cat: Catalog, manifest: dict,
+                     envelope: bool = True) -> _Tombstones:
     """The snapshot's point tombstones (delete_docs / upsert churn) as a
     _Tombstones, empty when there are none. Bulk mass-deletes never come
     through here: every path consumes that table as a relation (cogrouped
     on doc_part, or anti-joined via live_doc_map). Point tombstones get a
     closure envelope instead — limit+raise, never an unbounded driver
     collect. Compaction drains the table, so the envelope also acts as a
-    "you forgot maybe_compact" tripwire."""
+    "you forgot maybe_compact" tripwire; the maintenance writers (the
+    compaction among them) read with ``envelope=False``, so the set can
+    always be drained."""
     rows = []
     keeps = []
     if "tombstones" in manifest["tables"]:
         df = cat.read_table(spark, "tombstones", snapshot=manifest)
         has_keep = "keep_seg" in df.columns
-        trows = df.limit(_BULK_CLOSURE_LIMIT + 1).collect()
-        if len(trows) > _BULK_CLOSURE_LIMIT:
+        trows = (df.limit(_BULK_CLOSURE_LIMIT + 1) if envelope else df).collect()
+        if envelope and len(trows) > _BULK_CLOSURE_LIMIT:
             raise ValueError(
                 f"point tombstone set exceeds the closure envelope "
                 f"({_BULK_CLOSURE_LIMIT}); run compact_with_tombstones / "

@@ -56,7 +56,7 @@ def test_indexed_expansions_raise_at_cap(spark, tmp_path, monkeypatch):
 def test_point_tombstones_raise_at_closure_limit(spark, tmp_path, monkeypatch):
     import fafnir_spark.wand as wand
     from fafnir_spark.build import build_index, normalize_docs
-    from fafnir_spark.incremental import delete_docs
+    from fafnir_spark.incremental import compact_with_tombstones, delete_docs
     from fafnir_spark.wand import search_text_indexed
 
     docs = _docs(spark).limit(60)
@@ -75,6 +75,13 @@ def test_point_tombstones_raise_at_closure_limit(spark, tmp_path, monkeypatch):
     res = search_text_indexed(spark, root, "merge", k=5)
     got = {int(r["doc_id"]) for r in res.collect()}
     assert not (got & set(victims[:3]))
+    # the envelope binds queries only: writers read past it, and the
+    # compaction drains the set it guards
+    monkeypatch.setattr(wand, "_BULK_CLOSURE_LIMIT", 2)
+    delete_docs(spark, root, victims[3:])
+    compact_with_tombstones(spark, root)
+    got = {int(r["doc_id"]) for r in search_text_indexed(spark, root, "merge", k=5).collect()}
+    assert got and not (got & set(victims))
 
 
 def test_stream_accumulator_requires_fresh_checkpoint(tmp_path):

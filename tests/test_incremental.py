@@ -466,16 +466,24 @@ def test_maybe_compact_and_expire_snapshots(spark, tmp_path, split_docs):
 
     n_hist = len(cat.read_manifest()["history"])
     assert n_hist >= 4
+    # the kept snapshot (the last append) references every older dir, so
+    # trimming to it deletes none
     out = expire_snapshots(spark, root, keep_last=1)
-    assert out["expired"] == n_hist - 1 and out["deleted_dirs"] > 0
+    assert out["expired"] == n_hist - 1 and out["deleted_dirs"] == 0
+    m = cat.read_manifest()
+    # kept history snapshot still resolvable, expired ones are gone
+    kept_id = m["history"][-1]["snapshot_id"]
+    assert cat.manifest_at(kept_id)["snapshot_id"] == kept_id
+    # expiring it too deletes the pre-compaction dirs only it referenced
+    out = expire_snapshots(spark, root, keep_last=0)
+    assert out["expired"] == 1 and out["deleted_dirs"] > 0
     # live snapshot still fully queryable; all referenced dirs exist
     assert _res(spark, root) == before
     m = cat.read_manifest()
     for dirs in m["tables"].values():
         assert all(os.path.isdir(d) for d in dirs)
-    # kept history snapshot still resolvable, expired ones are gone
-    kept_id = m["history"][-1]["snapshot_id"]
-    assert cat.manifest_at(kept_id)["snapshot_id"] == kept_id
+    with pytest.raises(KeyError, match="not found"):
+        cat.manifest_at(kept_id)
 
 
 def test_bulk_delete_phrase_bool_paths_cogrouped(spark, tmp_path, split_docs, monkeypatch):

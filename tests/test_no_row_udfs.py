@@ -69,3 +69,29 @@ def test_write_path_lives_only_in_the_shared_helpers():
             users |= {f.name for f in ast.parse(src).body if isinstance(f, ast.FunctionDef)
                       and f"{f.name}(" != needle and needle in ast.get_source_segment(src, f)}
         assert users == helpers, (needle, sorted(users))
+
+
+def test_writers_read_stats_and_tombstones_from_their_snapshot():
+    # the stats json is a mutable mirror: only wand._snapshot_stats reads
+    # it (for indexes published before stats moved into the manifest), and
+    # every writer reads the stats and the point tombstones of the snapshot
+    # it commits against — incremental.py has no tombstone reader of its own
+    needles = ('read_json("stats")', "read_json('stats')")
+    readers = set()
+    for path, src in _sources().items():
+        if not any(n in src for n in needles):
+            continue
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and any(
+                    n in ast.get_source_segment(src, node) for n in needles):
+                readers.add(f"{path.stem}.{node.name}")
+    # nested defs are walked too, so an enclosing def counts as a reader
+    assert readers == {"wand._snapshot_stats"}, sorted(readers)
+    tree = ast.parse((PKG / "incremental.py").read_text())
+    for call in ast.walk(tree):
+        if isinstance(call, ast.Call) and getattr(call.func, "attr", "") in (
+                "read_table", "read_segments"):
+            args = {getattr(a, "id", getattr(a, "value", None)) for a in call.args}
+            assert not args & {"TOMBSTONE_TABLE", "tombstones"}, ast.unparse(call)
+    names = {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+    assert not {n for n in names if "read" in n and "tombstone" in n}, names

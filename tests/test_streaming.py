@@ -184,7 +184,14 @@ def test_stream_cdc_apply_equals_batch_ops(spark, tmp_path):
     write_ops("b.parquet", [("d", 5, ""),
                             ("u", 3, "final merge window text")], t0 + 100)
 
+    from fafnir_spark.catalog import Catalog
+
+    built = Catalog(root).read_manifest()["snapshot_id"]
     stream_cdc_apply(spark, str(src) + "/*", str(tmp_path / "ck"), root)
+    # one commit per micro-batch: the build, then one snapshot per batch
+    m = Catalog(root).read_manifest()
+    assert [h["snapshot_id"] for h in m["history"]][:1] == [built]
+    assert len(m["history"]) == 2
 
     from pyspark.sql import functions as F
 
