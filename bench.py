@@ -6,8 +6,8 @@ Measures the engine's headline paths at $SPARK_GRAFT_SF_DIR (default
 
   build_testdata      index build over the testdata documents table
   bm25_direct         index-free DataFrame BM25 top-10 (batch of queries)
-  bm25_indexed_bmw    indexed BM25 with block-max pruning
-  bm25_indexed_exh    indexed BM25, exhaustive decode (pruning baseline)
+  bm25_indexed_bmw    indexed BM25, algo="bmw" (the one exact kernel)
+  bm25_indexed_exh    indexed BM25, algo="exhaustive" (the same kernel)
   conjunctive         posting intersection
   synth_build         SPIMI build over a synthetic source-code corpus
                       (input_hint schema, Zipf term skew), read from

@@ -5,7 +5,7 @@ POI indexing pipeline; see /root/reference and SURVEY.md) as an idiomatic
 Spark engine: SPIMI-style per-partition posting construction, term-keyed
 shuffle merge with document-partitioned (shard) routing for skew, delta+varint
 compressed posting blocks with block-max metadata, and a batched BM25 top-k
-query pipeline with block-max WAND pruning.
+query pipeline with one exact per-shard kernel.
 
 Everything here derives from public knowledge only: the PySpark API, the
 reference repo's observable behavior, and published IR literature (SPIMI —

@@ -36,6 +36,7 @@ from .wand import (
     RESULT_SCHEMA,
     _bm25_idf,
     _bulk_side,
+    _check_algo,
     _dict_rows,
     _load_tombstones,
     _part_scorer,
@@ -80,6 +81,7 @@ def search_federated(
     statistics (dfs_query_then_fetch). (qid, rank, doc_id, score) —
     identical to run_queries over a single index holding the union of the
     corpora."""
+    _check_algo(algo)
     cats = [Catalog(r) for r in index_roots]
     manifests = [c.read_manifest() for c in cats]
     gstats = _merged_stats([_snapshot_stats(c, m) for c, m in zip(cats, manifests)])
@@ -107,6 +109,6 @@ def search_federated(
             bulk = b if bulk is None else bulk.unionByName(b)
 
     excluded = _Tombstones(merged_ids, merged_keeps)
-    per_part = _per_shard(postings, _part_scorer(queries, idfs, gstats, k, algo, excluded),
+    per_part = _per_shard(postings, _part_scorer(queries, idfs, gstats, k, excluded),
                           RESULT_SCHEMA, side=bulk, keys=("idx", "doc_part"))
     return _rank_merge(per_part, k, decimals=score_decimals)

@@ -576,7 +576,7 @@ def fuzzy_bm25_indexed(spark, index_root: str, qterms: list[str], k: int = 10,
                        max_edits: int = 1, snapshot_id: str | None = None) -> DataFrame:
     """Fuzzy query served FROM the index: the expansion runs against the
     term DICTIONARY (vocabulary-sized relation, no corpus scan at query
-    time), then block-max WAND scores the expanded disjunction.
+    time), then run_queries scores the expanded disjunction.
     (rank, doc_id, score)."""
     from .catalog import Catalog
     from .wand import run_queries

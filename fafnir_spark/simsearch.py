@@ -1218,7 +1218,7 @@ def hybrid_rrf_indexed(
 ) -> DataFrame:
     """Hybrid RRF with BOTH branches served from persisted indexes — the
     production shape of hybrid_rrf: lexical top-n from the inverted index
-    (block-max WAND) and vector top-n from the IVF index (partition-pruned
+    (run_queries) and vector top-n from the IVF index (partition-pruned
     probes), fused with reciprocal-rank weights over ≤ 2·n rows. With
     nprobe == n_centroids the vector branch is exact (tested property), so
     the fused list is rank-identical to the direct hybrid_rrf — same

@@ -7,9 +7,10 @@ src/bin/openmaptiles2mimir.rs:23,64-82) with no event-time semantics; its
 "streaming" is really continuous arrival + incremental indexing. The Spark
 translation: a file-source stream over the corpus directory, each
 micro-batch appended to the published index as one immutable segment via
-foreachBatch (exactly-once per batch id: a segment named for the batch is
-idempotent — re-running a batch overwrites the same segment, and the
-manifest publish is atomic).
+foreachBatch (exactly-once per batch id: ``_batch_segment`` names the
+segment for the stream's checkpoint and the batch, and a replayed batch
+whose segment a snapshot already references is skipped; the manifest
+publish is atomic).
 
 Every op runs on the same plumbing, written once:
 
@@ -42,13 +43,14 @@ The state algebras, chosen by ``_fold``'s ``keys``:
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import Catalog
-from .incremental import append_index
+from .catalog import Catalog, _scheme
+from .incremental import _referenced, append_index
 from .portable import empty_frame
 
 EVENTS_SCHEMA = (
@@ -77,6 +79,17 @@ def _start(stream: DataFrame, checkpoint_dir: str, step, available_now: bool = T
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _batch_segment(index_root: str, kind: str, checkpoint_dir: str, batch_id: int):
+    """The segment an index sink writes for micro-batch ``batch_id``:
+    ``<kind>-<key of the resolved checkpoint dir>-<batch_id>``, so streams
+    with their own checkpoints never share a name. None when the snapshot
+    or its history already references it (a replayed batch: skip it)."""
+    loc = checkpoint_dir if _scheme(checkpoint_dir) else os.path.realpath(checkpoint_dir)
+    seg = f"{kind}-{hashlib.sha1(loc.encode()).hexdigest()[:8]}-{batch_id}"
+    done = ("postings", f"seg={seg}") in _referenced(Catalog(index_root).read_manifest())
+    return None if done else seg
 
 
 def _drain(stream: DataFrame, checkpoint_dir: str, step) -> None:
@@ -204,14 +217,8 @@ def stream_corpus(
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        m = Catalog(index_root).read_manifest()
-        seg = f"stream-{batch_id}"
-        done = any(
-            p.endswith(f"seg={seg}") for p in m["tables"].get("postings", [])
-        )
-        if done:  # replayed batch after a crash: segment already published
+        seg = _batch_segment(index_root, "stream", checkpoint_dir, batch_id)
+        if seg is None or batch_df.isEmpty():
             return
         docs = batch_df.withColumn("doc_id", F.xxhash64(*id_cols)).withColumn(
             "content", F.col(text_col)
@@ -358,11 +365,16 @@ def stream_cdc_apply(
     last-write-wins tombstone merge). Each batch is ONE commit of the
     maintenance read-modify-commit (incremental._commit): one snapshot
     read, one publish CAS'd against it, so time travel and the
-    CommitConflict CAS hold for streaming writers too."""
+    CommitConflict CAS hold for streaming writers too. The upsert segment
+    is named by ``_batch_segment``: several streams (each with its own
+    checkpoint) can feed one index, and a replayed batch is skipped."""
     from .build import normalize_docs
     from .incremental import _commit
 
     def apply_batch(batch_df, batch_id: int) -> None:
+        seg = _batch_segment(index_root, "cdc", checkpoint_dir, batch_id)
+        if seg is None:
+            return
         ups = batch_df.filter(F.col("op") == "u").select("doc_id", "text")
         dels = [
             int(r["doc_id"])
@@ -373,7 +385,7 @@ def stream_cdc_apply(
         if has_ups or dels:
             _commit(spark, index_root,
                     normalize_docs(ups, id_col="doc_id", text_col="text") if has_ups else None,
-                    f"cdc-{batch_id}", tokenizer, upsert=True, deletes=dels)
+                    seg, tokenizer, upsert=True, deletes=dels)
 
     _drain(_read(spark, source_path, "op string, doc_id long, text string"),
            checkpoint_dir, apply_batch)

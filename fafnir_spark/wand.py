@@ -1,4 +1,4 @@
-"""Indexed BM25 top-k: batched DataFrame pipeline + block-max pruning.
+"""Indexed BM25 top-k: batched DataFrame pipeline + one exact per-shard kernel.
 
 Query lifecycle (SURVEY.md §3.3 — the path Elasticsearch owns in the
 reference, pinned by tests/tests.rs:208-228):
@@ -8,7 +8,7 @@ reference, pinned by tests/tests.rs:208-228):
   src/lazy_es.rs:87-167: never evaluate queries one at a time) →
   term-filtered posting scan (parquet row-group pruning via the term sort) →
   groupBy(doc_part).applyInPandas: per-shard exact top-k (numpy-vectorized
-  decode + score, optional block-max fragment pruning) →
+  decode + score of every block of the query's terms) →
   global merge: window rank over (score desc, doc_id asc), limit k.
 
 Exactness: doc_part partitions documents, so a document's full score is
@@ -16,16 +16,12 @@ computed inside exactly one shard; merging per-shard top-k therefore yields
 the exact global top-k (the reference's ES does the same per-shard top-k +
 coordinator merge, config/fafnir/default.toml:50).
 
-Block-max pruning ("bmw"): per (query, shard) the doc-id axis is cut into
-fragments at block boundaries; each fragment's upper bound is the sum of the
-covering blocks' score bounds (idf·(k1+1)·max_tf/(max_tf+k1·(1−b+b·min_dl/
-avgdl))·max_weight — monotone in tf, anti-monotone in dl, so a true bound).
-Fragments are scored exactly in descending-bound order and the scan stops
-when the next bound is strictly below the current kth score — Block-Max WAND
-(Ding & Suel, SIGIR'11) at block granularity, vectorized inside fragments so
-there is no per-document Python loop. Pruning never changes results; tests
-assert bmw == exhaustive on every fixture (the analog of fafnir's bbox test
-proving filters don't corrupt results, tests/openmaptiles2mimir/mod.rs:371-405).
+``algo``: "bmw" and "exhaustive" both name the one kernel, ``_exhaustive``.
+The kernel does not prune: inside a shard the blocks are already shuffled
+and converted, so pruning there can save kernel time alone, and block-max
+pruning there lost paired runs up to 1M docs (CHANGES.md). The block bounds
+(``max_tf``, ``min_dl``, ``max_weight``) stay in the block metadata for
+pruning before the exchange.
 
 Per-shard kernel: every indexed entry point (and federate.py) runs the same
 steps through one helper each. ``_open`` reads a snapshot's manifest and
@@ -36,8 +32,8 @@ side relation (``_bulk_side``'s bulk tombstones, phrase matches, doc values)
 when there is one. Inside a shard, ``_shard_blocks`` turns posting rows into
 lazily decoded ``_Block``s, ``_Tombstones`` (with ``union`` for a shard's
 bulk slice or must_not ids) scopes exclusion per segment via
-``_live_mask``, and ``_exhaustive`` (or ``score_bmw``) scores them. Results
-merge through ``_rank_merge`` (per-qid window) or ``_take_top`` (global
+``_live_mask``, and ``_exhaustive`` scores them. Results merge through
+``_rank_merge`` (per-qid window) or ``_take_top`` (global
 orderBy().limit(k)).
 """
 
@@ -117,18 +113,11 @@ class _Tombstones:
                            [*self.keeps, *[None] * len(dead)])
 
 
-def _exc_for(excluded, seg: str):
-    """Per-segment exclusion array from either form: a flat sorted ndarray
-    or a seg-scoped _Tombstones."""
-    if isinstance(excluded, _Tombstones):
-        return excluded.excluded_for(seg)
-    return excluded
-
-
 def _live_mask(ids: np.ndarray, excluded, seg: str) -> np.ndarray | None:
     """Mask of the ``ids`` (one block of segment ``seg``) that survive
-    ``excluded``; None when nothing in the segment is excluded."""
-    exc = _exc_for(excluded, seg)
+    ``excluded`` (a flat sorted ndarray or a seg-scoped _Tombstones); None
+    when nothing in the segment is excluded."""
+    exc = excluded.excluded_for(seg) if isinstance(excluded, _Tombstones) else excluded
     if exc is None or not len(exc):
         return None
     return ~np.isin(ids, exc)
@@ -332,16 +321,11 @@ def _tfn(tf, dl, k1: float, b: float, avgdl: float):
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
-def _block_ub(blk: _Block, idf: float, k1: float, b: float, avgdl: float) -> float:
-    return idf * _tfn(float(blk.max_tf), float(blk.min_dl), k1, b, avgdl) * blk.max_weight
-
-
 # selection happens on 6-decimal-rounded scores with doc_id tie-break so the
 # per-shard cut agrees with the oracle's (round(score,6) desc, doc_id asc)
 # ordering — otherwise a raw-score near-tie across the rounding boundary
 # could keep a different doc than the rank-identity contract demands.
 _ROUND_DECIMALS = 6
-_ROUND_EPS = 0.5 * 10.0**-_ROUND_DECIMALS
 
 
 def _topk_rows(doc_ids: np.ndarray, scores: np.ndarray, k: int):
@@ -414,207 +398,22 @@ def score_bmw(
     counters: dict | None = None,
     excluded: np.ndarray | None = None,
 ):
-    """Block-max fragment pruning; exact (== score_exhaustive)."""
-    blocks: list[_Block] = []
-    ubs: list[float] = []
-    for term, blist in term_blocks.items():
-        for blk in blist:
-            blocks.append(blk)
-            ubs.append(_block_ub(blk, idfs[term], k1, b, avgdl))
-    if not blocks:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-    firsts = np.array([blk.first for blk in blocks], dtype=np.int64)
-    lasts = np.array([blk.last for blk in blocks], dtype=np.int64)
-    ub = np.array(ubs)
-    term_of_block = np.repeat(
-        np.arange(len(term_blocks)),
-        [len(v) for v in term_blocks.values()],
-    )
-    term_list = list(term_blocks.keys())
-
-    # fragment boundaries: any block edge starts/ends a fragment
-    bounds = np.unique(np.concatenate([firsts, lasts + 1]))
-    frag_lo = bounds[:-1]
-    frag_hi = bounds[1:]  # exclusive
-    n_frag = len(frag_lo)
-    frag_ub = np.zeros(n_frag)
-    # covering fragments per block: [searchsorted(first), searchsorted(last+1))
-    lo_idx = np.searchsorted(frag_lo, firsts)
-    hi_idx = np.searchsorted(frag_lo, lasts + 1)
-    for bi in range(len(blocks)):
-        frag_ub[lo_idx[bi] : hi_idx[bi]] += ub[bi]
-
-    # pre-flight: hot-term disjunctions (flat Zipf-head bounds) prune
-    # almost nothing and then BMW is exhaustive + bookkeeping. A cheap θ
-    # proxy — per-doc PARTIAL scores from the highest-bound block are lower
-    # bounds of the true scores, so their kth value underestimates θ —
-    # decides before the O(Σcoverage) fragment lists are even built.
-    bi0 = int(np.argmax(ub))
-    ids0, tf0, dl0, w0 = blocks[bi0].decode()
-    sc0 = idfs[term_list[term_of_block[bi0]]] * _tfn(tf0, dl0, k1, b, avgdl) * w0
-    if len(sc0) >= k:
-        theta0 = float(np.round(np.sort(sc0)[-k], _ROUND_DECIMALS))
-        if float(np.mean(frag_ub >= theta0 - _ROUND_EPS)) > 0.7:
-            if counters is not None:
-                counters["blocks_total"] = counters.get("blocks_total", 0) + len(blocks)
-                counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + len(blocks)
-                counters["bmw_fallback"] = counters.get("bmw_fallback", 0) + 1
-            return score_exhaustive(term_blocks, idfs, k, k1, b, avgdl, excluded=excluded)
-
-    order = np.argsort(-frag_ub, kind="stable")
-    # per-fragment covering block lists
-    frag_blocks: list[list[int]] = [[] for _ in range(n_frag)]
-    for bi in range(len(blocks)):
-        for fi in range(lo_idx[bi], hi_idx[bi]):
-            frag_blocks[fi].append(bi)
-
-    best_ids = np.empty(0, dtype=np.int64)
-    best_sc = np.empty(0)
-    theta = -math.inf
-    decoded = 0
-
-    # fragment results are merged into the top-k pool in BATCHES: one
-    # unique/bincount/lexsort per ~many fragments instead of per fragment.
-    # Exact (fragments partition the doc-id axis, so a doc occurs in one
-    # batch exactly once); θ just updates at flush granularity, trading a
-    # little pruning sharpness for ~batch× less per-fragment Python
-    # overhead — the term that dominates at millions of docs per part.
-    pend_ids: list[np.ndarray] = []
-    pend_sc: list[np.ndarray] = []
-    pend_rows = 0
-    pend_frags = 0
-
-    def _flush():
-        nonlocal best_ids, best_sc, theta, pend_ids, pend_sc, pend_rows, pend_frags
-        if not pend_ids:
-            return
-        ids = np.concatenate(pend_ids)
-        sc = np.concatenate(pend_sc)
-        uids, inv = np.unique(ids, return_inverse=True)
-        tot = np.bincount(inv, weights=sc)
-        best_ids = np.concatenate([best_ids, uids])
-        best_sc = np.concatenate([best_sc, tot])
-        best_ids, best_sc = _topk_rows(best_ids, best_sc, k)
-        if len(best_ids) >= k:
-            theta = float(np.round(best_sc[-1], _ROUND_DECIMALS))
-        pend_ids, pend_sc, pend_rows, pend_frags = [], [], 0, 0
-
-    checked_fallback = False
-    for fi_pos, fi in enumerate(order):
-        if len(best_ids) >= k and frag_ub[fi] < theta - _ROUND_EPS:
-            break  # eps guard: a pruned doc may round up into a tie and
-            # win on doc_id, so only prune outside the rounding radius
-        # adaptive bail-out: once θ exists, check ONCE what fraction of the
-        # remaining fragments it can actually prune. Hot-term disjunctions
-        # (flat Zipf-head bounds) prune almost nothing, and then BMW is
-        # exhaustive + fragment bookkeeping — strictly slower. Falling back
-        # is exact, and already-decoded blocks are cached so the partial
-        # fragment work is not re-paid at decode level.
-        if not checked_fallback and theta > -math.inf:
-            checked_fallback = True
-            rest = frag_ub[order[fi_pos:]]
-            if len(rest) and float(np.mean(rest >= theta - _ROUND_EPS)) > 0.7:
-                if counters is not None:
-                    counters["blocks_total"] = counters.get("blocks_total", 0) + len(blocks)
-                    counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + len(blocks)
-                    counters["bmw_fallback"] = counters.get("bmw_fallback", 0) + 1
-                return score_exhaustive(
-                    term_blocks, idfs, k, k1, b, avgdl, excluded=excluded
-                )
-        lo, hi = frag_lo[fi], frag_hi[fi]
-
-        # doc-level WAND refinement (Ding & Suel SIGIR'11 pivot logic,
-        # vectorized): split the fragment's terms into essential /
-        # non-essential by cumulative upper bound. A doc appearing ONLY in
-        # non-essential terms has Σub < θ−eps and can never enter the
-        # top-k, so (a) candidates are defined by essential-term blocks and
-        # (b) a non-essential block is decoded only if a candidate falls in
-        # its [first,last] range — hot-term blocks outside candidate
-        # ranges are skipped without decoding.
-        non_ess: set[int] = set()
-        if len(best_ids) >= k and theta > -math.inf:
-            tub: dict[int, float] = {}
-            for bi in frag_blocks[fi]:
-                t = term_of_block[bi]
-                tub[t] = max(tub.get(t, 0.0), ub[bi])
-            cum = 0.0
-            for t in sorted(tub, key=lambda t: tub[t]):
-                if cum + tub[t] < theta - _ROUND_EPS:
-                    cum += tub[t]
-                    non_ess.add(t)
-                else:
-                    break
-
-        def _seg(bi: int):
-            """Decoded (ids, score) of block bi clipped to the fragment."""
-            nonlocal decoded
-            blk = blocks[bi]
-            fresh = blk._decoded is None
-            ids, tfs, dls, ws = blk.decode()
-            if fresh:
-                decoded += 1
-            a = np.searchsorted(ids, lo)
-            z = np.searchsorted(ids, hi)
-            if a == z:
-                return None
-            seg_ids, seg_tf, seg_dl, seg_w = ids[a:z], tfs[a:z], dls[a:z], ws[a:z]
-            exc = _exc_for(excluded, blk.seg)
-            if exc is not None and len(exc):
-                keep = ~np.isin(seg_ids, exc)
-                if not keep.any():
-                    return None
-                seg_ids, seg_tf, seg_dl, seg_w = (
-                    seg_ids[keep], seg_tf[keep], seg_dl[keep], seg_w[keep]
-                )
-            idf = idfs[term_list[term_of_block[bi]]]
-            return seg_ids, idf * _tfn(seg_tf, seg_dl, k1, b, avgdl) * seg_w
-
-        ids_all, sc_all = [], []
-        deferred: list[int] = []
-        for bi in frag_blocks[fi]:
-            if term_of_block[bi] in non_ess:
-                deferred.append(bi)
-                continue
-            seg = _seg(bi)
-            if seg is not None:
-                ids_all.append(seg[0])
-                sc_all.append(seg[1])
-        if not ids_all:
-            continue  # no essential candidates → whole fragment pruned
-        if deferred:
-            cand = np.unique(np.concatenate(ids_all))
-            for bi in deferred:
-                blk = blocks[bi]
-                lo2, hi2 = max(blk.first, lo), min(blk.last, hi - 1)
-                i = np.searchsorted(cand, lo2)
-                if i >= len(cand) or cand[i] > hi2:
-                    continue  # no candidate in range → decode skipped
-                seg = _seg(bi)
-                if seg is None:
-                    continue
-                # restrict to candidates: a non-candidate's score here
-                # would be partial (its other non-essential blocks may be
-                # skipped) — and it is provably below θ anyway
-                keep = np.isin(seg[0], cand)
-                if keep.any():
-                    ids_all.append(seg[0][keep])
-                    sc_all.append(seg[1][keep])
-        pend_ids.extend(ids_all)
-        pend_sc.extend(sc_all)
-        pend_rows += sum(len(x) for x in ids_all)
-        pend_frags += 1
-        # flush per fragment until the pool first fills (θ must exist before
-        # any pruning can happen — fragments are UB-ordered, so that is
-        # fast); afterwards amortize merges over many fragments.
-        # rounded kth score after flush: pruning x with ub < theta-eps
-        # implies round(x) < theta, so x can never displace the kth
-        if len(best_ids) < k or pend_frags >= 64 or pend_rows >= 16384:
-            _flush()
-    _flush()
+    """The kernel ``algo="bmw"`` names: score_exhaustive, adding the blocks
+    it decodes (all of them) to ``counters``."""
     if counters is not None:
-        counters["blocks_total"] = counters.get("blocks_total", 0) + len(blocks)
-        counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + decoded
-    return best_ids, best_sc
+        n = sum(map(len, term_blocks.values()))
+        counters["blocks_total"] = counters.get("blocks_total", 0) + n
+        counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + n
+    return score_exhaustive(term_blocks, idfs, k, k1, b, avgdl, excluded=excluded)
+
+
+ALGOS = ("bmw", "exhaustive")
+
+
+def _check_algo(algo: str) -> None:
+    """Refuse an ``algo`` outside ALGOS before any Spark job runs."""
+    if algo not in ALGOS:
+        raise ValueError(f"algo must be one of {ALGOS}, got {algo!r}")
 
 
 def _part_scorer(
@@ -622,13 +421,11 @@ def _part_scorer(
     idfs: dict[str, float],
     stats: dict,
     k: int,
-    algo: str,
     excluded: _Tombstones,
 ):
-    """Per-shard BM25 top-k of every query (BMW or exhaustive). The side
-    slice, when cogrouped, is the shard's bulk-tombstone ids."""
+    """Per-shard BM25 top-k of every query. The side slice, when
+    cogrouped, is the shard's bulk-tombstone ids."""
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
-    scorer = score_bmw if algo == "bmw" else score_exhaustive
 
     def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
         exc = _with_side(excluded, side)
@@ -637,7 +434,7 @@ def _part_scorer(
         for qid, terms in queries.items():
             tb = {t: by_term[t] for t in terms if t in by_term}
             if tb:
-                parts.append((qid, *scorer(tb, idfs, k, k1, b, avgdl, excluded=exc)))
+                parts.append((qid, *score_exhaustive(tb, idfs, k, k1, b, avgdl, excluded=exc)))
         return _result_frame(parts)
 
     return evaluate
@@ -1002,7 +799,7 @@ def bool_search(
     if boosts:
         # term^boost multiplies the term's score contribution — and since
         # score = Σ idf·tfn·w, pre-multiplying the idf IS the boost (no
-        # change to the scorer, bounds stay conservative for BMW)
+        # change to the scorer)
         idfs = {t: v * float(boosts.get(t, 1.0)) for t, v in idfs.items()}
     postings = _postings(spark, cat, manifest, all_terms)
     # point tombstones in the closure (driver-small by design); the bulk
@@ -1201,6 +998,7 @@ class Searcher:
         return {t: _bm25_idf(n, self._dfs[t]) for t in terms if t in self._dfs}
 
     def search(self, queries: dict[str, list[str]], k: int = 10, algo: str = "bmw") -> DataFrame:
+        _check_algo(algo)
         all_terms = sorted({t for ts in queries.values() for t in ts})
         idfs = self._idfs(all_terms)
         present = [t for t in all_terms if t in idfs]
@@ -1208,7 +1006,7 @@ class Searcher:
             return _no_hits(self.spark, k)
         postings = self._postings.filter(F.col("term").isin(present))
         per_part = _per_shard(
-            postings, _part_scorer(queries, idfs, self.stats, k, algo, self._excluded),
+            postings, _part_scorer(queries, idfs, self.stats, k, self._excluded),
             RESULT_SCHEMA, side=self._bulk)
         return _rank_merge(per_part, k)
 
@@ -1330,7 +1128,9 @@ def run_queries(
     Returns (qid, rank, doc_id, score) — the engine's search_documents
     (/root/reference tests/tests.rs:214-221). ``snapshot_id`` queries a
     past published snapshot (Iceberg time travel; segments are immutable).
+    ``algo``: one of ALGOS; both run the one exact kernel.
     """
+    _check_algo(algo)
     cat, manifest, stats = _open(index_root, snapshot_id)
     all_terms = sorted({t for ts in queries.values() for t in ts})
     idfs = _idfs(spark, cat, manifest, all_terms, stats["n_docs"])
@@ -1344,7 +1144,7 @@ def run_queries(
     # postings on doc_part so each shard receives only its own dead ids —
     # a GDPR-scale purge never materializes on the driver.
     excluded = _load_tombstones(spark, cat, manifest)
-    per_part = _per_shard(postings, _part_scorer(queries, idfs, stats, k, algo, excluded),
+    per_part = _per_shard(postings, _part_scorer(queries, idfs, stats, k, excluded),
                           RESULT_SCHEMA, side=_bulk_side(spark, cat, manifest))
     return _rank_merge(per_part, k, decimals=score_decimals)
 
@@ -1382,10 +1182,8 @@ def search_after_indexed(
     selection, so per-shard output stays k rows and deep pages never
     re-rank the whole result set (the ES search_after contract).
 
-    Scoring is exhaustive per shard (decode-everything): BMW's pruning
-    threshold is keyed to the kth-best score, which the cursor shifts —
-    seeding θ from the cursor is the documented optimization path; the
-    exhaustive form is exact at any depth. (rank, doc_id, score)."""
+    Scoring is the exhaustive per-shard kernel (decode-everything), exact
+    at any depth. (rank, doc_id, score)."""
     cat, manifest, stats = _open(index_root, snapshot_id)
     qterms = sorted(set(terms))
     idfs = _idfs(spark, cat, manifest, qterms, stats["n_docs"])
@@ -1542,9 +1340,9 @@ def _feature_score_indexed(
     order mirroring the direct-path oracle). Selection is exact at both
     levels on the ROUNDED final score (a doc lives in exactly one
     doc_part, so the union of per-shard top-ks contains the global
-    top-k). Exhaustive per-shard scoring: a doc feature shifts ranks, so
-    bm25-only BMW bounds don't apply (Lucene's rank_feature likewise goes
-    through a feature-aware scorer). Dead docs drop relationally:
+    top-k). Exhaustive per-shard scoring with the feature applied before
+    selection (Lucene's rank_feature likewise goes through a feature-aware
+    scorer). Dead docs drop relationally:
     point/upsert tombstones via the decode-time exclusion, bulk-deleted
     docs by having no live doc-values row (never a driver
     materialization). (rank, doc_id, score)."""
@@ -1724,9 +1522,8 @@ def _lm_part_fn(queries: dict[str, list[str]], denoms: dict[str, float],
     integer sum_dl) — bit-identical to the direct path's in-engine
     doubles. np.log(1.0 + x) on purpose, NEVER log1p: the direct path and
     the DuckDB oracle both evaluate ln(1+x), and log1p differs in the low
-    bits. No BMW here — the BM25 block upper bound does not envelope LM
-    scores — so the scorer is the exhaustive decode (still per-shard
-    top-k + k-row merge, the scale shape is unchanged). The side slice,
+    bits. The scorer is the exhaustive decode (per-shard top-k + k-row
+    merge, the same scale shape as BM25). The side slice,
     when cogrouped, is the shard's bulk-tombstone ids."""
     one_minus = 1.0 - float(lam)
 
@@ -1908,8 +1705,8 @@ def ltr_rescore_indexed(
     field: str = "n_chars",
     snapshot_id: str | None = None,
 ) -> DataFrame:
-    """LTR rescorer over the INDEXED first pass: run_queries (BMW,
-    per-shard exact top-window on rounded scores) supplies the BM25
+    """LTR rescorer over the INDEXED first pass: run_queries (the exact
+    per-shard kernel, top-window on rounded scores) supplies the BM25
     window; the linear model's features come from the stored-source frame
     ``docs`` — ES extracts LTR feature values from stored fields at
     rescore time, so reading _source for the ≤window candidates is the
@@ -1960,6 +1757,7 @@ def routed_search(
     dictionary on the unrouted path). Bulk tombstones are refused at the
     write (their cogroup is pmod-based). (qid, rank, doc_id, score).
     """
+    _check_algo(algo)
     cat = Catalog(index_root)
     rt = cat.read_json("routing")
     if rt is None:
@@ -2016,7 +1814,7 @@ def routed_search(
     idfs = {r["term"]: _bm25_idf(n_docs, r["df"]) for r in drows}
     present = [t for t in all_terms if t in idfs]
     per_part = _per_shard(postings.filter(F.col("term").isin(present)),
-                          _part_scorer(queries, idfs, stats, k, algo, excluded),
+                          _part_scorer(queries, idfs, stats, k, excluded),
                           RESULT_SCHEMA)
     return _rank_merge(per_part, k)
 
@@ -2032,9 +1830,8 @@ def search_bm25_plus(
     """BM25+ similarity served FROM the inverted index (the ES per-field
     `similarity` setting, like search_lm): same postings, dictionary (df)
     and stats (n_docs, avgdl, k1, b) answer the lower-bounded model with
-    no rebuild. Exhaustive per-shard scorer — BMW's BM25 block bound does
-    NOT envelope BM25+ (the +delta floor breaks the upper-bound algebra)
-    — still per-shard top-k + k-row merge. Rank-identical to the direct
+    no rebuild. Exhaustive per-shard scorer — per-shard top-k + k-row
+    merge. Rank-identical to the direct
     scoring.bm25_plus_topk (same oracle). (qid, rank, doc_id, score)."""
     return search_lm(spark, index_root, queries, k=k, smoothing="bm25plus",
                      lam=float(delta), snapshot_id=snapshot_id)
@@ -2057,8 +1854,8 @@ def distance_feature_indexed(
     the same seam as script_score_indexed. numpy float64 mirrors the
     direct path's JVM operand order exactly, so the op is rank-identical
     to scoring.distance_feature_topk (same oracle). Exhaustive per-shard
-    scoring (the additive feature shifts ranks — bm25-only BMW bounds
-    don't apply, the Lucene rank_feature reality). (rank, doc_id,
+    scoring with the additive feature applied before selection (the
+    Lucene rank_feature shape). (rank, doc_id,
     score)."""
     o, p, bs = float(origin), float(pivot), float(boost)
 

@@ -204,7 +204,7 @@ normalized number is what transfers to a real cluster where probe_eff ≈ 1.
 Raw {eff:.2f} and ceiling {probe_eff:.2f} are both reported so the judge can
 apply either standard.)
 
-## BM25 query batch (10 queries, top-10, block-max pruning, indexed)
+## BM25 query batch (10 queries, top-10, indexed)
 
 | cores | batch secs | queries/sec |
 |---|---|---|

@@ -1,6 +1,6 @@
 """Index build + indexed query tests: the SPIMI build must produce results
 rank-identical to both the direct DataFrame path and the DuckDB oracle;
-BMW pruning must never change results; resumed builds must equal cold
+both ``algo`` values must give the same results; resumed builds must equal cold
 builds (index-equivalence, SURVEY.md §5)."""
 
 from __future__ import annotations
